@@ -862,8 +862,8 @@ object SparkEntry {
         .orderBy(col("path"))
     }),
 
-    // --- flame-graph self/total per calling context (bottom-up rollup
-    // over CCT-sized tables, never an events-sized prefix join) ---
+    // --- flame-graph self/total per calling context (one per-callpath
+    // aggregation, then a bottom-up fold of the CCT on the driver) ---
     "trace_cct_rollup" -> ((s, dir) =>
       Cct.subtreeRollup(callEnriched(s, dir)).orderBy(col("path"))),
 

@@ -124,14 +124,15 @@ object PatternDetect {
                     process: Int = 0, metric: String = TimeExc): Seq[DataFrame] = {
     val events = Metrics.calcExcMetrics(events0, Seq(TimestampNs))
     val marker = events.filter(col(Name) === startEvent && col(Process) === process)
+    // the span and the marker's call count come from one job
     val span = marker.agg(
       min(when(col(EventType) === Enter, col(TimestampNs))).as("t0"),
-      max(when(col(EventType) === Leave, col(TimestampNs))).as("t1")).head()
+      max(when(col(EventType) === Leave, col(TimestampNs))).as("t1"),
+      count(when(col(EventType) === Enter, 1)).as("n")).head()
     if (span.isNullAt(0) || span.isNullAt(1)) return Seq.empty
     val (t0, t1) = (span.getLong(0), span.getLong(1))
 
-    val iters = iterations.getOrElse(
-      marker.filter(col(EventType) === Enter).count().toInt)
+    val iters = iterations.getOrElse(span.getLong(2).toInt)
 
     // distributed part: filter to the investigated span + collect the series
     // (driver-local kernel — the reference makes the same locality call;

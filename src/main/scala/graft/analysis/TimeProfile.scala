@@ -1,7 +1,8 @@
 package graft.analysis
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.Schemas._
 import graft.enrich.{EventMatcher, Metrics}
@@ -27,15 +28,30 @@ import graft.enrich.{EventMatcher, Metrics}
   *  - values < 0.01 are zeroed (trace.py:754), applied before normalization.
   *  - normalized=true divides by bin_size × #processes.
   *
-  * Spark shape: explode each matched Enter over the bin ids it overlaps
-  * (`sequence` — no 50-way crossJoin), one (parent,bin) aggregation + join
-  * for the child subtraction, then a (bin,name) aggregation. Long-form
-  * output (bin, bin_start, bin_end, name, time) with idle as name
-  * "idle_time"; empty bins are kept (pure idle). Row amplification is
+  * Spark shape: one collected extent row, then explode each matched Enter
+  * over the bin ids it overlaps (`sequence` — no 50-way crossJoin), one
+  * (parent,bin) aggregation + join for the child subtraction, then one
+  * (bin,name) aggregation, collected. That aggregate has at most
+  * numBins × distinct names rows (guarded by [[MaxBinRows]]), so the idle
+  * rows, zeroing, bin edges and normalization are computed on the driver
+  * and come back as a one-partition DataFrame. Long-form output (bin,
+  * bin_start, bin_end, name, time), ordered by (bin, name), with idle as
+  * name "idle_time"; empty bins are kept (pure idle). Row amplification is
   * bounded by span/bin_size; call spans are normally ≪ trace extent (the
   * reference has the same blowup implicitly, SURVEY §4.3).
   */
 object TimeProfile {
+
+  /** Driver-assembly guard on the (bin, name) aggregate, which has at
+    * most `numBins` × distinct function names rows. */
+  val MaxBinRows: Int = 5000000
+
+  private val schema: StructType = StructType(Seq(
+    StructField("bin", LongType, nullable = false),
+    StructField("bin_start", DoubleType, nullable = false),
+    StructField("bin_end", DoubleType, nullable = false),
+    StructField(Name, StringType, nullable = false),
+    StructField("time", DoubleType, nullable = true)))
 
   def timeProfile(events0: DataFrame, numBins: Int = 50,
                   normalized: Boolean = false): DataFrame = {
@@ -44,10 +60,9 @@ object TimeProfile {
     // bin edges span ALL events, but the process count is taken over Enter
     // rows only (trace.py:651-661: `events` is pre-filtered to Enter before
     // `Process.unique()`) — a rank with only Instant events must not
-    // inflate idle time or the normalization denominator
-    // the extent is ONE row consumed by three stages below — collect it
-    // once (instead of re-running the aggregation over the enriched
-    // lineage per consumer) and inline the scalars as literals
+    // inflate idle time or the normalization denominator.
+    // The extent is ONE row, used by the bin explode and by the driver
+    // tail — collect it once and inline the scalars as literals
     val extRow = events.agg(
       min(col(TimestampNs)).cast("double"),
       max(col(TimestampNs)).cast("double"),
@@ -88,31 +103,28 @@ object TimeProfile {
 
     val perBinName = withExc.groupBy(col("bin"), col(Name))
       .agg(sum(col("exc_in_bin")).as("time"))
+      .limit(MaxBinRows + 1).collect()
+    require(perBinName.length <= MaxBinRows,
+      s"time_profile has more than $MaxBinRows (bin, name) rows — refusing " +
+        "driver-side assembly; use fewer bins or dedupe function names")
 
-    // all bins (pure-idle bins included) + idle rows
-    val allBins = ext.select(
-      explode(sequence(lit(0L), lit(numBins - 1L))).as("bin"),
-      col("lo"), col("hi"), col("nproc"))
-    val binTotals = perBinName.groupBy(col("bin")).agg(sum(col("time")).as("__busy"))
-    val idleRows = allBins.join(binTotals, Seq("bin"), "left")
-      .select(col("bin"), lit("idle_time").as(Name),
-        ((col("hi") - col("lo")) / numBins * col("nproc")
-          - coalesce(col("__busy"), lit(0.0))).as("time"))
-
-    val longForm = perBinName.unionByName(idleRows)
-      .withColumn("time", when(col("time") < 0.01, 0.0).otherwise(col("time")))
-
-    val withEdges = longForm
-      .join(broadcast(ext.select(col("lo"), col("hi"), col("nproc"))))
-      .withColumn("bin_start", col("lo") + col("bin") * w)
-      .withColumn("bin_end", col("lo") + (col("bin") + 1) * w)
-
-    val result =
-      if (normalized)
-        withEdges.withColumn("time",
-          col("time") / ((col("hi") - col("lo")) / numBins * col("nproc")))
-      else withEdges
-
-    result.select(col("bin"), col("bin_start"), col("bin_end"), col(Name), col("time"))
+    // the bin-sized tail on the driver: idle rows for every bin (pure-idle
+    // bins included), the < 0.01 zeroing, bin edges and normalization, in
+    // the double arithmetic of the column expressions above
+    val width = (hiV - loV) / numBins
+    val capacity = width * nprocV // bin_size × #processes
+    val busy = new Array[Double](numBins)
+    perBinName.foreach(r => busy(r.getLong(0).toInt) += r.getDouble(2))
+    val longForm = perBinName.map(r => (r.getLong(0), r.getString(1), r.getDouble(2))) ++
+      (0 until numBins).map(b => (b.toLong, "idle_time", capacity - busy(b)))
+    val rows = longForm.sortBy { case (b, name, _) => (b, name) }.map { case (b, name, t0) =>
+      val t = if (t0 < 0.01) 0.0 else t0
+      // a zero denominator gives null, as Spark's division does
+      val time = if (!normalized) Double.box(t)
+        else if (capacity == 0.0) null else Double.box(t / capacity)
+      Row(b, loV + b * width, loV + (b + 1) * width, name, time)
+    }
+    val spark = events.sparkSession
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
   }
 }

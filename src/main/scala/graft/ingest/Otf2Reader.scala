@@ -62,30 +62,37 @@ object Otf2Reader {
     (v, j0 + 1 + n)
   }
 
-  private def records(bytes: Array[Byte], isEvt: Boolean = false): Iterator[(Int, Array[Byte])] =
-    new Iterator[(Int, Array[Byte])] {
-      private var i = 18 // skip chunk header
-      override def hasNext: Boolean = i < bytes.length
-      override def next(): (Int, Array[Byte]) = {
-        val t = bytes(i) & 0xff
-        if (t == 0x05 && isEvt) { // timestamp: raw u64, no length byte
-          val p = java.util.Arrays.copyOfRange(bytes, i + 1, i + 9)
-          i += 9
-          (0x05, p)
-        } else {
-          var l = bytes(i + 1) & 0xff
-          var off = i + 2
-          if (l == 0xff) {
-            l = java.nio.ByteBuffer.wrap(bytes, i + 2, 8)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong.toInt
-            off = i + 10
-          }
-          val p = java.util.Arrays.copyOfRange(bytes, off, off + l)
-          i = off + l
-          (t, p)
+  /** Record walk over one file; `at` is the byte offset of the record
+    * `next()` returned last. */
+  private final class Records(bytes: Array[Byte], isEvt: Boolean)
+      extends Iterator[(Int, Array[Byte])] {
+    private var i = 18 // skip chunk header
+    var at: Int = -1
+    override def hasNext: Boolean = i < bytes.length
+    override def next(): (Int, Array[Byte]) = {
+      at = i
+      val t = bytes(i) & 0xff
+      if (t == 0x05 && isEvt) { // timestamp: raw u64, no length byte
+        val p = java.util.Arrays.copyOfRange(bytes, i + 1, i + 9)
+        i += 9
+        (0x05, p)
+      } else {
+        var l = bytes(i + 1) & 0xff
+        var off = i + 2
+        if (l == 0xff) {
+          l = java.nio.ByteBuffer.wrap(bytes, i + 2, 8)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong.toInt
+          off = i + 10
         }
+        val p = java.util.Arrays.copyOfRange(bytes, off, off + l)
+        i = off + l
+        (t, p)
       }
     }
+  }
+
+  private def records(bytes: Array[Byte], isEvt: Boolean = false): Records =
+    new Records(bytes, isEvt)
 
   /** Region ref in Enter/Leave payloads: length-delimited record makes the
     * count byte redundant for single-field records, so Score-P writes the
@@ -419,8 +426,11 @@ object Otf2Reader {
       }
     }
     def str(ref: Long): String = strings.getOrElse(ref, s"String $ref")
-    val rows = records(bytes).collect {
-      case (t, p) if t != 2 =>
+    // a record too short for its type's fields fails naming where it sits
+    val recs = records(bytes)
+    val rows = recs.filter(_._1 != 2).map { case (t, p) =>
+      val typeName = defTypeNames.getOrElse(t, s"Unknown_$t")
+      try {
         val id = if (p.nonEmpty && (p(0) & 0xff) <= 8 && p.length > (p(0) & 0xff))
           compressed(p, 0)._1 else -1L
         val name = t match {
@@ -470,7 +480,12 @@ object Otf2Reader {
               members.map(m => s"MetricMember $m").mkString("[", ", ", "]"))
           case _ => Map.empty
         }
-        Row(defTypeNames.getOrElse(t, s"Unknown_$t"), id, name, attrs)
+        Row(typeName, id, name, attrs)
+      } catch { case e: IndexOutOfBoundsException =>
+        throw new IllegalArgumentException(
+          s"OTF2 $typeName definition record at byte ${recs.at} of $base.def " +
+            s"is too short for its fields (${p.length}-byte payload)", e)
+      }
     }.toSeq
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType(Seq(
       StructField("def_type", StringType, nullable = false),

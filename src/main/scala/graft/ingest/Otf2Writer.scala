@@ -250,7 +250,9 @@ object Otf2Writer {
       blobs.iterator.zipWithIndex.map { case (b, i) =>
         str(names.length.toLong + i, s"rank${b.getLong(0)}")
       } ++
-      names.indices.iterator.map(i => rec(0x0f, comp(i.toLong), comp(i.toLong))) ++
+      // Region: [ref][name][canonical name], both names the same string
+      names.indices.iterator.map(i =>
+        rec(0x0f, comp(i.toLong), comp(i.toLong), comp(i.toLong))) ++
       blobs.iterator.zipWithIndex.map { case (b, i) =>
         rec(0x0e, comp(b.getLong(0)), comp(names.length.toLong + i),
           Array(0.toByte), comp(b.getLong(1)), comp(b.getLong(0)))

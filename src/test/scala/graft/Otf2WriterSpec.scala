@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.analysis.CommOps
 import graft.ingest.{Otf2Reader, Otf2Writer}
 import graft.model.Schemas._
+import graft.model.Trace
 
 /** OTF2 writer: a canonical trace exported as a binary archive must
   * re-ingest byte-exactly through the from-scratch reader. */
@@ -96,5 +97,40 @@ class Otf2WriterSpec extends SparkSpec {
       .as[(Long, String, String, Int)].collect().toSet
     assert(got == bare.select(TimestampNs, EventType, Name, Process)
       .as[(Long, String, String, Int)].collect().toSet)
+  }
+
+  test("Trace.toOtf2 archives load back through Trace.fromOtf2, region names included") {
+    val d3 = Files.createTempDirectory("otf2-writer-trace").toString
+    Trace(trace).toOtf2(d3)
+    val t = Trace.fromOtf2(spark, d3)
+    val got = t.events.select(TimestampNs, EventType, Name, Process)
+      .as[(Long, String, String, Int)].collect().toSet
+    assert(got == trace.filter(col(Name) =!= "CudaKernel")
+      .select(TimestampNs, EventType, Name, Process)
+      .as[(Long, String, String, Int)].collect().toSet)
+    val regions = t.definitions.get.filter(col("def_type") === "Region").collect()
+    assert(regions.map(_.getString(2)).toSet == Set("main", "work"))
+    assert(regions.forall { r =>
+      val attrs = r.getMap[String, String](3)
+      attrs("name") == r.getString(2) && attrs("canonical_name") == r.getString(2)
+    })
+  }
+
+  test("a Region definition record too short for its fields names its offset") {
+    val d4 = Files.createTempDirectory("otf2-writer-short").toString
+    Otf2Writer.save(trace, d4)
+    // cut the canonical-name field off the first Region record: drop its
+    // last byte and shorten its length byte to match
+    val path = java.nio.file.Paths.get(d4, "traces.def")
+    val bytes = Files.readAllBytes(path)
+    var i = 18
+    while ((bytes(i) & 0xff) != 0x0f) i += 2 + (bytes(i + 1) & 0xff)
+    val len = bytes(i + 1) & 0xff
+    val cut = bytes.patch(i + 2 + len - 1, Nil, 1)
+    cut(i + 1) = (len - 1).toByte
+    Files.write(path, cut)
+    val e = intercept[IllegalArgumentException](Trace.fromOtf2(spark, d4))
+    assert(e.getMessage.contains("Region") && e.getMessage.contains(s"byte $i"),
+      e.getMessage)
   }
 }

@@ -230,6 +230,110 @@ class TraceSpec extends SparkSpec {
       "main->a->b" -> ((1L, 5L, 5L))))
   }
 
+  /** A canonical events table from (event_type, name, process, ts)
+    * rows; ids follow the row order. */
+  private def eventsOf(rows: Seq[(String, String, Int, Long)]) = {
+    import spark.implicits._
+    rows.zipWithIndex.map { case ((et, nm, p, ts), i) => (i.toLong, ts, et, nm, p) }
+      .toDF(EventId, TimestampNs, EventType, Name, Process)
+  }
+
+  test("cct subtree rollup: two processes, two roots, recursion, an unmatched Enter") {
+    // p0: main[0,100] > f[10,60] > { f[20,40] > f[25,30], g[45,55] }
+    // p1: main[0,50] > { h@3 never left, f[5,15] };  init[60,80] > g[62,70]
+    // The unmatched h has no calling context: it is no node and no parent.
+    val ev = eventsOf(Seq(
+      (Enter, "main", 0, 0L), (Enter, "f", 0, 10L), (Enter, "f", 0, 20L),
+      (Enter, "f", 0, 25L), (Leave, "f", 0, 30L), (Leave, "f", 0, 40L),
+      (Enter, "g", 0, 45L), (Leave, "g", 0, 55L), (Leave, "f", 0, 60L),
+      (Leave, "main", 0, 100L),
+      (Enter, "main", 1, 0L), (Enter, "h", 1, 3L), (Enter, "f", 1, 5L),
+      (Leave, "f", 1, 15L), (Leave, "main", 1, 50L), (Enter, "init", 1, 60L),
+      (Enter, "g", 1, 62L), (Leave, "g", 1, 70L), (Leave, "init", 1, 80L)))
+    val out = graft.cct.Cct.subtreeRollup(ev)
+    assert(out.columns.toSeq ==
+      Seq("path", "name", "depth", "n_calls", "own_exc", "subtree_exc"))
+    val got = out.collect().map(r =>
+      r.getString(0) -> ((r.getString(1), r.getInt(2), r.getLong(3), r.getLong(4), r.getLong(5))))
+    // (name, depth, calls, own exc, subtree exc); own exc sums both processes
+    val want = Map(
+      "main" -> (("main", 0, 2L, 90L, 150L)),
+      "main->f" -> (("f", 1, 2L, 30L, 60L)),
+      "main->f->f" -> (("f", 2, 1L, 15L, 20L)),
+      "main->f->f->f" -> (("f", 3, 1L, 5L, 5L)),
+      "main->f->g" -> (("g", 2, 1L, 10L, 10L)),
+      "init" -> (("init", 0, 1L, 12L, 20L)),
+      "init->g" -> (("g", 1, 1L, 8L, 8L)))
+    assert(got.toMap == want)
+    assert(got.length == want.size) // one row per calling context
+  }
+
+  /** Spark jobs started by `body`, counted by a listener on its own job
+    * group. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("measured", "measured")
+      body
+      // the bus delivers in order: once the fence job is seen, so is every
+      // measured one
+      sc.setJobGroup("fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime + 60000000000L
+      while (!groups.contains("fence") && System.nanoTime < deadline) java.lang.Thread.sleep(10)
+      assert(groups.contains("fence"), "listener never saw the fence job")
+      groups.toArray.count(_ == "measured")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("cct subtree rollup: the job count does not grow with the tree's depth") {
+    def chain(depth: Int) = {
+      val ev = graft.enrich.Metrics.calcExcMetrics(eventsOf(
+        (0 until depth).map(d => (Enter, s"f$d", 0, d.toLong)) ++
+          (0 until depth).reverse.map(d => (Leave, s"f$d", 0, 2L * depth - d))),
+        Seq(TimestampNs)).cache()
+      ev.count()
+      ev
+    }
+    val (shallow, deep) = (chain(3), chain(30))
+    try {
+      val jobs = Seq(shallow, deep).map { ev =>
+        var rows = Array.empty[Row]
+        val n = jobsOf { rows = graft.cct.Cct.subtreeRollup(ev).collect() }
+        assert(rows.map(_.getInt(2)).max == ev.filter(col(EventType) === Enter).count() - 1)
+        n
+      }
+      assert(jobs.head == jobs(1), s"jobs at depth 3 vs 30: $jobs")
+    } finally Seq(shallow, deep).foreach(_.unpersist())
+  }
+
+  test("time profile: a bin without calls is one idle row of bin width × processes") {
+    // 3 bins over [0,30] ns, 2 processes; nothing runs in bin 1 = [10,20]
+    val ev = eventsOf(Seq(
+      (Enter, "a", 0, 0L), (Leave, "a", 0, 10L),
+      (Enter, "b", 1, 20L), (Leave, "b", 1, 30L)))
+    val tp = graft.analysis.TimeProfile.timeProfile(ev, 3).collect()
+    val bin1 = tp.filter(_.getLong(0) == 1L)
+    assert(bin1.length == 1)
+    val r = bin1.head
+    assert(r.getDouble(1) == 10.0 && r.getDouble(2) == 20.0)
+    assert(r.getString(3) == "idle_time" && r.getDouble(4) == 10.0 * 2)
+    // the busy bins: one process runs the whole bin, the other idles
+    assert(tp.filter(_.getLong(0) == 0L).map(r => r.getString(3) -> r.getDouble(4)).toMap ==
+      Map("a" -> 10.0, "idle_time" -> 10.0))
+  }
+
   test("callers profile: exclusive time attributed to the calling site") {
     val got = trace.callersProfile().collect()
       .map(r => (r.getString(0), r.getString(1)) ->
