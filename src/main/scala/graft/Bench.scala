@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * Accounting (since round 6): THREE timed sweeps, per-query MEDIAN.
   * Shared memoized artifacts (enrichment cache, quantizer fits, score
   * tables, the on-disk IVF index) build lazily inside sweep 1 and are
-  * instrumented at the cache layer ([[SparkEntry.artifactBreakdown]]);
+  * instrumented at the cache layer (`SparkEntry.artifactBreakdown`);
   * `setup` is the sum of those measured builds and `setup_breakdown`
   * itemizes them. Sweep 1 additionally pays per-query cold costs
   * (codegen, first shuffles) — the median of 3 sheds that whole sweep,
@@ -92,67 +92,9 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
-  /** A real cluster sizes shuffle parallelism to the DATA, not to a
-    * constant — derive `spark.sql.shuffle.partitions` from the input
-    * dir's on-disk bytes: one partition per ~16 MB of (compressed)
-    * input, floored at the core count, capped at 1024. The 16 MB
-    * divisor reflects this workload's join fan-out: compressed parquet
-    * explodes ~10x into shuffle rows, landing tasks near the classic
-    * 128-256 MB in-memory target. At sf0.1 (17 MB) the floor wins —
-    * the bench baseline is byte-for-byte unchanged; at the x10/x100
-    * tilings partitions grow the way a production conf (or an AQE
-    * advisory size) would, so fixed-count per-task spill (the
-    * graph_kcore x100 finding, NOTES_r12) cannot masquerade as a plan
-    * defect. */
-  private[graft] def scaledShufflePartitions(dir: String, floor: Int): Int = {
-    def sz(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(sz).sum).getOrElse(0L)
-      else f.length()
-    val bytes = sz(new java.io.File(dir))
-    math.min(1024L, math.max(floor.toLong, bytes / (16L << 20))).toInt
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        scaledShufflePartitions(sfDir, cpus.toInt).toString)
-      // serialized RDD blocks (the iterative ops' DISK_ONLY round
-      // snapshots) compress ~5x for long-pair edge lists: write-once
-      // read-once sequential IO trades cheap CPU for the disk pass, and
-      // at the x100 tilings the snapshots are GB-scale (r11, guide §6)
-      .config("spark.rdd.compress", "true")
-      // The generated-code class cache defaults to 100 entries; 317
-      // distinct queries x several codegen units each meant EVERY query
-      // re-ran Janino compilation on EVERY sweep visit — measured
-      // (r12, TimeQ interleaved A/B over a 20-query cycle): trace_chrome
-      // 0.35 -> 0.11 s, trace_gaps 0.52 -> 0.19, trace_pareto
-      // 0.57 -> 0.20 with the cache sized to the workload. This was the
-      // "in-sweep median 3-5x over standalone" pathology of the r11
-      // verdict (standalone triage re-runs back-to-back, so it alone hit
-      // a warm cache). Caches compiled CODE only — never data or results
-      // — and a long-lived production driver serving this many distinct
-      // queries sizes it the same way at any SF.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The registry's only unpartitioned windows run over plan-bounded
-    // bin/report tables (PlanGuardSpec proves this for every query);
-    // WindowExec's per-execution warning would otherwise flood the
-    // stdout tail the harness captures and bury the result line.
-    org.apache.log4j.Logger
-      .getLogger("org.apache.spark.sql.execution.window.WindowExec")
-      .setLevel(org.apache.log4j.Level.ERROR)
-    // IndexStore's _meta sidecar dir trips DataSource's "all paths were
-    // ignored" WARN on every load (leading underscore = hidden to the
-    // LISTING; the direct-path read still succeeds, as the oracle gate
-    // proves) — keep it off the captured stdout tail like WindowExec
-    org.apache.log4j.Logger
-      .getLogger("org.apache.spark.sql.execution.datasources.DataSource")
-      .setLevel(org.apache.log4j.Level.ERROR)
+    val spark = graft.util.Sessions.local("graft-bench", Some(sfDir))
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
 

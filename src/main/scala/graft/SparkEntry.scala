@@ -9683,7 +9683,8 @@ object SparkEntry {
         |  SELECT epoch_us(ts) // 1000000 // 21600 * 21600 AS wb,
         |         user_id AS key, CAST(floor(value) AS BIGINT) AS w0
         |  FROM events),
-        |g AS (SELECT wb, key, SUM(w0) AS w FROM e GROUP BY 1, 2),
+        |g AS (SELECT wb, key, CAST(SUM(w0) AS BIGINT) AS w
+        |      FROM e GROUP BY 1, 2),
         |r AS (SELECT wb, key, w,
         |        ROW_NUMBER() OVER (PARTITION BY wb
         |          ORDER BY w DESC, key DESC) AS rn

@@ -1,6 +1,6 @@
 package graft.demo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 scale-up generator: tiles the sf0.1 driver tables 10× into a
@@ -97,10 +97,7 @@ object ScaleGen {
       case Some(list)         => list.split(",").toSet
     }
     val zipfMode = args.lift(4).contains("zipf")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-scalegen", Some(src))
     def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def wr(df: DataFrame, t: String) =
       df.write.mode("overwrite").parquet(s"$out/$t.parquet")
@@ -257,21 +254,18 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--gate")) { gateOnly(); return }
     val dir = args(0)
-    // shuffle parallelism follows input size (graft.Bench's derivation):
-    // at x10 the 32-core floor still wins, at x100 it grows like a
-    // production conf would — the fix for the graph_kcore x100 per-task
-    // spill at a fixed 32 (NOTES_r12)
+    // shuffle parallelism follows input size (Sessions' derivation): at
+    // x100 it grows like a production conf would — the fix for the
+    // graph_kcore x100 per-task spill at a fixed count (NOTES_r12)
+    val spark = graft.util.Sessions.local("graft-scalebench", Some(dir))
     // SCALEBENCH_PARTS overrides the derivation — the knob for fixtures
     // whose INTERMEDIATE volume dwarfs their input bytes (a doc-only dir
     // whose candidate explode is 1000x its parquet size), same as a
     // production conf sizing shuffle partitions to the hot exchange
-    val parts = sys.env.get("SCALEBENCH_PARTS").map(_.toInt)
-      .getOrElse(graft.Bench.scaledShufflePartitions(dir, 32))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(s"[scalebench] shuffle partitions: $parts (input-scaled)")
+    sys.env.get("SCALEBENCH_PARTS").foreach(
+      spark.conf.set("spark.sql.shuffle.partitions", _))
+    println("[scalebench] shuffle partitions: " +
+      spark.conf.get("spark.sql.shuffle.partitions"))
     // single-box payload cap for the exact-Jaccard verify stage (the
     // x100 local-disk bound; see GraftConfig's key scaladoc) — set e.g.
     // GRAFT_JACCARD_BATCH_BYTES=30000000000 for a 30 GB in-flight cap

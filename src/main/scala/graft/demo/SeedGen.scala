@@ -2,7 +2,7 @@ package graft.demo
 
 import java.time.{Instant, LocalDate, ZoneOffset}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Second-seed fixture generator — the robustness gate's data source.
@@ -62,12 +62,8 @@ object SeedGen {
     val sf = args(0).toDouble
     val seed = args(1).toLong
     val out = args(2)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-seedgen")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val rnd = new java.util.Random(seed)
 
     val nCustomer = math.max(15, (150000 * sf).toInt)

@@ -2,9 +2,9 @@ package graft.demo
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: time individual registry queries in isolation, same session
-  * shape as [[graft.Bench]] (master/local core count, scaled shuffle
-  * partitions, WARN log level), without paying a full 317-query sweep.
+/** Dev tool: time individual registry queries in isolation, in the same
+  * session as [[graft.Bench]] ([[graft.util.Sessions]]), without paying
+  * a full 317-query sweep.
   *
   *   sbt "runMain graft.demo.TimeQ <sfDir> <nRuns> name1,name2,..."
   *
@@ -17,22 +17,7 @@ object TimeQ {
     val sfDir = args(0)
     val n = args(1).toInt
     val names = args(2).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // TIMEQ_CONF="k1=v1;k2=v2" injects extra session confs (dev-only —
-    // e.g. A/B of spark.sql.codegen.cache.maxEntries)
-    val extra = sys.env.getOrElse("TIMEQ_CONF", "").split(";")
-      .filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        graft.Bench.scaledShufflePartitions(sfDir, cpus.toInt).toString)
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0)((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-timeq", Some(sfDir))
     // per-stage metrics listener: the headless stand-in for the UI's
     // stage table (guide §7.1). The box this round runs on shows heavy
     // hypervisor CPU STEAL (measured: steal ≈ 2× user under load), so

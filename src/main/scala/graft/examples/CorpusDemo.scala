@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.scale._
@@ -19,9 +18,7 @@ object CorpusDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/corpus_out")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.Sessions.local("graft-corpus-demo", Some(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
 
     val corpus = graft.model.Corpus.fromParquet(spark, s"$sfDir/documents.parquet")

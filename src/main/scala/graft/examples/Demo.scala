@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.Trace
 
 /** Minimal end-to-end example: load a CSV trace, enrich it, print the core
@@ -9,13 +7,7 @@ import graft.model.Trace
 object Demo {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse(sys.error("usage: Demo <trace.csv>"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-demo")
 
     val f = new java.io.File(path)
     val trace0 =

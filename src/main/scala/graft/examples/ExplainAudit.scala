@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans of representative queries to
   * audit pushdown / pruning / codegen / join strategies (see NOTES in the
   * repo docs; the brief's ".explain until it's the plan you'd want"). */
@@ -12,12 +10,9 @@ object ExplainAudit {
     val noBroadcast = args0.contains("-nobroadcast")
     val args = args0.filterNot(_ == "-nobroadcast")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        if (noBroadcast) "-1" else "10485760")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.Sessions.local("graft-explain-audit", Some(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
+    if (noBroadcast) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     for (name <- args.drop(1).headOption.map(_.split(",").toSeq).getOrElse(
         Seq("q1_pricing", "q3_topk", "comm_matrix", "trace_flat_profile",

@@ -2,6 +2,7 @@ package graft.scale
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Deduplication operators for corpus curation at 100 TB scale.
   *
@@ -357,30 +358,31 @@ object Dedup {
                           maxLocalEdges: Long = 2000000L): DataFrame = {
     // canonical big -> small directed edges; self-pairs drop out of the
     // contraction and are restored as singleton labels at the end
-    val nodes = pairs.select(col(aCol).as("node"))
-      .union(pairs.select(col(bCol).as("node"))).distinct()
+    // ids are read as LongType on both paths (the local collect reads
+    // primitive longs), so labels and schema agree for any integral input
+    val a = col(aCol).cast(LongType)
+    val b = col(bCol).cast(LongType)
+    val nodes = pairs.select(a.as("node"))
+      .union(pairs.select(b.as("node"))).distinct()
       .localCheckpoint(false)
     // DISK_ONLY round snapshots: see GraphOps.roundSnapshot (x100
     // storage-unroll OOM rationale)
     var e = GraphOps.roundSnapshot(pairs
-      .select(greatest(col(aCol), col(bCol)).as("u"),
-        least(col(aCol), col(bCol)).as("v"))
+      .select(greatest(a, b).as("u"), least(a, b).as("v"))
       .filter(col("u") =!= col("v")).distinct())
     var eCount = e.count()
     // Size-gated driver union-find — the same bounded-collect policy as
-    // [[componentsIncremental]] (and broadcast thresholds): below
-    // `maxLocalEdges` DISTINCT edges the distributed star contraction
-    // pays ~3 jobs per round of pure scheduling overhead on a graph the
-    // driver solves in milliseconds (measured: the bench's 161-edge LSH
-    // graph cost ~15 s through the fixpoint). Labels are the component
-    // MINIMUM on both paths, so the result is identical — spec-pinned.
-    // The collect pulls PRIMITIVE long pairs from the internal RDD (one
-    // packed Array[Long] per partition — a DataFrame.collect() of
-    // external Rows would cost ~100+ B/edge in transient driver objects,
-    // ~10× the data), so the driver footprint is 16 B/edge = 32 MB at
-    // the 2M gate; beyond it the unbounded distributed fixpoint below
-    // runs unchanged.
+    // GraphOps.kcore (and broadcast thresholds): below `maxLocalEdges`
+    // DISTINCT edges the distributed star contraction pays ~3 jobs per
+    // round of pure scheduling overhead on a graph the driver solves in
+    // milliseconds (measured: the bench's 161-edge LSH graph cost ~15 s
+    // through the fixpoint). Labels are the component MINIMUM on both
+    // paths, so the result is identical — spec-pinned. Beyond the gate
+    // the unbounded distributed fixpoint below runs unchanged.
     if (eCount <= maxLocalEdges) {
+      val (us, vs) = GraphOps.collectEdges(e)
+      // every root is its set's minimum: a union always hangs the larger
+      // root under the smaller one
       val uf = scala.collection.mutable.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -389,28 +391,11 @@ object Dedup {
         while (uf.getOrElse(c, c) != c) { val n = uf(c); uf(c) = r; c = n }
         r
       }
-      val touched = scala.collection.mutable.ArrayBuffer[Long]()
-      org.apache.spark.sql.graftbridge.RddBridge.toInternalRdd(e)
-        .mapPartitions { it =>
-          val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-          it.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
-          Iterator.single(buf.result())
-        }.collect().foreach { arr =>
-        var i = 0
-        while (i < arr.length) {
-          val a = arr(i); val b = arr(i + 1); i += 2
-          touched += a; touched += b
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) uf(math.max(ra, rb)) = math.min(ra, rb)
-        }
+      us.indices.foreach { i =>
+        val (ra, rb) = (find(us(i)), find(vs(i)))
+        if (ra != rb) uf(math.max(ra, rb)) = math.min(ra, rb)
       }
-      GraphOps.releaseCheckpoint(e)
-      val minOf = scala.collection.mutable.HashMap[Long, Long]()
-      touched.foreach { n =>
-        val r = find(n)
-        minOf(r) = math.min(minOf.getOrElse(r, n), n)
-      }
-      val rows = touched.distinct.map(n => (n, minOf(find(n))))
+      val rows = (us ++ vs).distinct.map(n => (n, find(n)))
       val labels = pairs.sparkSession.createDataFrame(rows.toSeq)
         .toDF("node", "component")
       // nodes includes self-pair-only ids, which carry no edge: label
@@ -498,42 +483,12 @@ object Dedup {
       .select(coalesce(col("sa"), col("a")).as("a"),
         coalesce(col("sb"), col("b")).as("b"))
       .distinct().localCheckpoint(false)
-    // The super-graph is DELTA-sized (≤ the incremental pair count),
-    // and the distributed fixpoint pays ~3 jobs per round of pure
-    // scheduling overhead on it. Below `maxLocalEdges` a driver-side
-    // union-find is the honest fast path — the same size-gated policy
-    // as broadcast thresholds (`maxBroadcastRows`), with the
-    // distributed star contraction as the unbounded fallback. Labels
-    // are the set minimum either way, so the two paths are
-    // result-identical (spec-pinned on both sides of the gate).
-    val superLabels =
-      if (e.count() <= maxLocalEdges) {
-        val uf = scala.collection.mutable.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (uf.getOrElse(r, r) != r) r = uf.getOrElse(r, r)
-          var c = x
-          while (uf.getOrElse(c, c) != c) { val n = uf(c); uf(c) = r; c = n }
-          r
-        }
-        val nodes = scala.collection.mutable.ArrayBuffer[Long]()
-        e.collect().foreach { row =>
-          val (a, b) = (row.getLong(0), row.getLong(1))
-          nodes += a; nodes += b
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) uf(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val minOf = scala.collection.mutable.HashMap[Long, Long]()
-        nodes.foreach { n =>
-          val r = find(n)
-          minOf(r) = math.min(minOf.getOrElse(r, n), n)
-        }
-        val rows = nodes.distinct.map(n => (n, minOf(find(n))))
-        histLabels.sparkSession.createDataFrame(rows.toSeq)
-          .toDF("sup", "__newc")
-      } else connectedComponents(e, maxIter = maxIter)
-        .withColumnRenamed("node", "sup")
-        .withColumnRenamed("component", "__newc")
+    // The super-graph is DELTA-sized (≤ the incremental pair count), so
+    // connectedComponents' size gate usually solves it on the driver
+    val superLabels = connectedComponents(e, maxIter = maxIter,
+        maxLocalEdges = maxLocalEdges)
+      .withColumnRenamed("node", "sup")
+      .withColumnRenamed("component", "__newc")
     val newNodes = newEdges.select(col("a").as("node"))
       .union(newEdges.select(col("b").as("node"))).distinct()
       .join(sup, Seq("node"), "left")

@@ -2,6 +2,7 @@ package graft.scale
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Relational graph analytics over corpus-derived edge lists (the kNN
   * graph, near-dup candidate pairs) — the "what are the central /
@@ -50,6 +51,35 @@ object GraphOps {
   private[scale] def roundSnapshot(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = false,
       storageLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
+
+  /** Driver-side collect of a (u, v) edge snapshot into two primitive
+    * endpoint arrays, then release the snapshot — the bounded collect
+    * behind the size-gated local paths of [[kcore]] and
+    * [[Dedup.connectedComponents]]. One packed Array[Long] per partition
+    * off the internal RDD: 16 B/edge on the driver (32 MB at the 2M
+    * gates), where a DataFrame.collect() of external Rows would cost
+    * ~10× that in transient objects. Both columns must be LongType —
+    * callers cast where the edge set is built, because
+    * InternalRow.getLong on an int column misreads negative ids. */
+  private[scale] def collectEdges(e: DataFrame): (Array[Long], Array[Long]) = {
+    require(e.schema.fields.take(2).forall(_.dataType == LongType),
+      s"collectEdges needs two LongType columns, got ${e.schema.simpleString}")
+    val arrs = org.apache.spark.sql.graftbridge.RddBridge.toInternalRdd(e)
+      .mapPartitions { it =>
+        val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
+        Iterator.single(buf.result())
+      }.collect()
+    releaseCheckpoint(e)
+    val m = arrs.map(_.length / 2).sum
+    val us = new Array[Long](m); val vs = new Array[Long](m)
+    var w = 0
+    arrs.foreach { arr =>
+      var i = 0
+      while (i < arr.length) { us(w) = arr(i); vs(w) = arr(i + 1); w += 1; i += 2 }
+    }
+    (us, vs)
+  }
 
   /** Fixed-iteration PageRank in FIXED-POINT integer arithmetic:
     * ranks are micro-units (init = `scale`), each superstep computes
@@ -151,8 +181,8 @@ object GraphOps {
     // round's checkpoint blocks — one Spark job per round, not two (see
     // Dedup.connectedComponents for the rationale).
     var half = roundSnapshot(edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
+      .select(least(col(srcCol), col(dstCol)).cast(LongType).as("u"),
+        greatest(col(srcCol), col(dstCol)).cast(LongType).as("v"))
       .filter(col("u") =!= col("v")).distinct())
     var prev = half.count()
     // Size-gated driver peeling (r12) — the same bounded-collect policy
@@ -165,25 +195,12 @@ object GraphOps {
     // the round semantics EXACTLY — one prune step per round, at most
     // `maxRounds` steps, early exit when a round removes nothing — so
     // "the graph after exactly N rounds" is identical (spec-pinned
-    // local == distributed). Primitive collect: 16 B/edge = 32 MB at
-    // the 2 M gate. Beyond the gate the distributed fixpoint runs
-    // unchanged — the 100 TB path.
+    // local == distributed). Primitive collect: `collectEdges`.
+    // Beyond the gate the distributed fixpoint runs unchanged — the
+    // 100 TB path.
     if (prev <= maxLocalEdges) {
-      val arrs = org.apache.spark.sql.graftbridge.RddBridge
-        .toInternalRdd(half)
-        .mapPartitions { it =>
-          val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-          it.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
-          Iterator.single(buf.result())
-        }.collect()
-      releaseCheckpoint(half)
-      val m = arrs.map(_.length / 2).sum
-      val us = new Array[Long](m); val vs = new Array[Long](m)
-      var w = 0
-      arrs.foreach { arr =>
-        var i = 0
-        while (i < arr.length) { us(w) = arr(i); vs(w) = arr(i + 1); w += 1; i += 2 }
-      }
+      val (us, vs) = collectEdges(half)
+      val m = us.length
       val active = new Array[Boolean](m)
       java.util.Arrays.fill(active, true)
       var nActive = m

@@ -1,6 +1,6 @@
 package graft
 
-import graft.scale.GraphOps
+import graft.scale.{Dedup, GraphOps}
 
 /** Fixed-point PageRank: hand-computed superstep, dangling/isolated
   * nodes, determinism of integer arithmetic. */
@@ -97,6 +97,32 @@ class GraphOpsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(local == dist, s"maxRounds=$mr: " +
         s"${(local diff dist).take(5)} vs ${(dist diff local).take(5)}")
+    }
+  }
+
+  test("connected components and kcore: IntegerType edges with a negative " +
+      "id give the LongType input's labels on both sides of the size gate") {
+    // the driver-local paths read primitive longs off internal rows; an
+    // int column read that way misreads every negative id
+    val pairs = Seq((-3, 1), (1, 2), (2, -3), (2, 5), (7, 8), (-9, -9))
+    val asInt = pairs.toDF("a", "b")
+    val asLong = pairs.map { case (x, y) => (x.toLong, y.toLong) }.toDF("a", "b")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.get(0).asInstanceOf[Number].longValue,
+        r.get(1).asInstanceOf[Number].longValue)).toSet
+    for (gate <- Seq(2000000L, 0L)) {
+      val ccLong = Dedup.connectedComponents(asLong, maxLocalEdges = gate)
+      val ccInt = Dedup.connectedComponents(asInt, maxLocalEdges = gate)
+      assert(rows(ccInt) == rows(ccLong), s"maxLocalEdges=$gate")
+      assert(rows(ccLong).contains((-3L, -3L)) && rows(ccLong).contains((-9L, -9L)))
+      assert(ccInt.schema == ccLong.schema)
+      def kcore(df: org.apache.spark.sql.DataFrame) =
+        GraphOps.kcore(df.toDF("src", "dst"), k = 2, maxLocalEdges = gate)
+      val kLong = kcore(asLong)
+      val kInt = kcore(asInt)
+      assert(rows(kInt) == rows(kLong), s"maxLocalEdges=$gate")
+      assert(rows(kLong) == Set((-3L, 2L), (1L, 2L), (2L, 2L)))
+      assert(kInt.schema == kLong.schema)
     }
   }
 }

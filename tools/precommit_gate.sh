@@ -16,8 +16,7 @@ OUT=${OUT:-/tmp/precommit_gate}
 SF=${SF:-/root/testdata/sf0.001}
 
 echo "[precommit] sf0.001 full-registry verify -> $OUT"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} sbt -batch \
-  "runMain graft.Verify $SF $OUT" > "$OUT.verify.log" 2>&1 \
+sbt -batch "runMain graft.Verify $SF $OUT" > "$OUT.verify.log" 2>&1 \
   || { tail -20 "$OUT.verify.log"; exit 1; }
 grep -c "\[verify\].*ok" "$OUT.verify.log" | sed 's/^/[precommit] queries ok: /'
 if grep "\[verify\].*failed" "$OUT.verify.log"; then

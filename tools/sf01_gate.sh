@@ -26,8 +26,8 @@ mkdir -p "$OUT"
 python3 tools/make_slice.py "$SF" "$SLICE" 4
 
 # Spark dumps: everything-but-heavy on the full dir, heavy on the slice
-SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify $SF $OUT/full ^$HEAVY"
-SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify $SLICE $OUT/heavy $HEAVY"
+sbt -batch "runMain graft.Verify $SF $OUT/full ^$HEAVY"
+sbt -batch "runMain graft.Verify $SLICE $OUT/heavy $HEAVY"
 
 # oracle compare (bash `time` per half: user+sys = the gate's CPU cost).
 # check_oracle.py exits non-zero on any non-OK row (set -e -o pipefail
