@@ -23,7 +23,7 @@ import graft.scale.{Bitext, Curation, Dedup, Multimodal, Similarity, TextOps}
   *  - deterministic ORDER BY on a unique prefix in both engines.
   *
   * Trace-operator queries run the real engine on deterministic traces
-  * derived from orders/lineitem/events ([[TraceGen]]) whose ground truth
+  * derived from orders/lineitem/events ([[graft.demo.TraceGen]]) whose ground truth
   * is relationally known — the oracle recomputes the answer straight from
   * the base tables, never re-implementing the stack semantics.
   */
@@ -37,18 +37,39 @@ object SparkEntry {
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Memoized fully-enriched call trace (match + depth + inc + exc),
-    * persisted once per (session, sfDir) — the Spark equivalent of the
-    * reference's in-place column memoization (pipit/trace.py:111,202,...):
-    * every trace query below consumes the same enriched DataFrame instead
-    * of re-running the matcher. At cluster scale this is "enrich once,
-    * write back / cache, analyze many times". */
-  /** Wall seconds each memoized artifact took to build, keyed
-    * (session, artifact) — the bench reads this as `setup_breakdown`,
-    * so the shared-build cost is attributed per artifact instead of to
-    * whichever query ran first. */
-  private val artifactTimes =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Double]()
+  // ------------------------------------------------------ session artifacts
+
+  /** How a memoized artifact holds resources, which decides how it is
+    * released: a persisted DataFrame is unpersisted (unless its context
+    * is already stopped, when the blocks die with the executors), a
+    * scratch directory is deleted recursively, a driver-side value is
+    * simply dropped. A scratch directory also records the bytes its
+    * build wrote — the bench emits these next to the build seconds so
+    * real IO variance on the scratch mount (observed: otf2_export
+    * 4.6 → 16.7 s between runs with no code change) is distinguishable
+    * from plan changes. */
+  private sealed trait Hold
+  private case object DriverValue extends Hold
+  private final case class Persisted(df: DataFrame) extends Hold
+  private final case class ScratchDir(path: String, bytes: Long) extends Hold
+
+  /** One memoized artifact: its value, the SELF seconds its build took,
+    * and how it holds resources. */
+  private final case class Artifact(value: Any, seconds: Double, hold: Hold)
+
+  /** The artifact store: every shared build of the registry (enriched
+    * trace, persisted intermediate tables, driver-side fits, on-disk
+    * exports and indexes), keyed (session, sfDir, key). A key names one
+    * artifact of one type; it is also the artifact's name in
+    * [[artifactBreakdown]] (the bench's `setup_breakdown`). Build once
+    * per key, share across every query that reads it — the Spark
+    * equivalent of the reference's in-place column memoization
+    * (pipit/trace.py:111,202): "enrich once, analyze many times", "train
+    * the index once, query it many times". Eviction ([[clearCaches]],
+    * application end) and the test hooks all read this one map. */
+  private val store =
+    scala.collection.concurrent.TrieMap[(SparkSession, String, String), Artifact]()
+
   /** Records SELF time: artifact builds nest (lsh_components →
     * lsh_pairs → minhash_sigs fire lazily inside one another on first
     * touch), and recording wall time per frame would double-charge
@@ -59,174 +80,106 @@ object SparkEntry {
   private val nestedChildTime = new ThreadLocal[List[Double]] {
     override def initialValue: List[Double] = Nil
   }
-  private def timedArtifact[A](s: SparkSession, key: String)(build: => A): A = {
-    nestedChildTime.set(0.0 :: nestedChildTime.get)
-    val t0 = System.nanoTime()
-    try {
-      val r = build
-      artifactTimes((s, key)) =
-        (System.nanoTime() - t0) / 1e9 - nestedChildTime.get.head
-      r
-    } finally {
-      // pop even on failure, else the orphaned frame skews every later
-      // top-level build on this thread; the failed frame's wall time
-      // still propagates to the parent so Σ breakdown stays the true
-      // one-pass cost
-      val total = (System.nanoTime() - t0) / 1e9
-      nestedChildTime.set(nestedChildTime.get.tail match {
-        case parent :: up => (parent + total) :: up
-        case Nil => Nil
-      })
-    }
-  }
-  /** Per-artifact build seconds recorded so far for `s`. */
-  private[graft] def artifactBreakdown(s: SparkSession): Map[String, Double] =
-    artifactTimes.collect { case ((ss, k), v) if ss == s => (k, v) }.toMap
 
-  /** Bytes written by on-disk artifact builds (OTF2 archive, IVF layout),
-    * keyed like [[artifactTimes]] — the bench emits these next to the
-    * build seconds so real IO variance on the scratch mount (observed:
-    * otf2_export 4.6 → 16.7 s between runs with no code change) is
-    * distinguishable from plan changes. */
-  private val artifactBytes =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
-  private[graft] def artifactIoBytes(s: SparkSession): Map[String, Long] =
-    artifactBytes.collect { case ((ss, k), v) if ss == s => (k, v) }.toMap
+  /** The memo every artifact goes through: on the first call for
+    * (s, dir, key) run `build` — timed as self time, with the session's
+    * application-end cleanup and the JVM shutdown hook installed — and
+    * store its value and hold; later calls return the stored value. A
+    * build that throws stores nothing. */
+  private def memo[A](s: SparkSession, dir: String, key: String)
+                     (build: => (A, Hold)): A =
+    store.getOrElseUpdate((s, dir, key), {
+      registerCleanup(s)
+      shutdownHook
+      nestedChildTime.set(0.0 :: nestedChildTime.get)
+      val t0 = System.nanoTime()
+      try {
+        val (value, hold) = build
+        Artifact(value, (System.nanoTime() - t0) / 1e9 - nestedChildTime.get.head,
+          hold)
+      } finally {
+        // pop even on failure, else the orphaned frame skews every later
+        // top-level build on this thread; the failed frame's wall time
+        // still propagates to the parent so Σ breakdown stays the true
+        // one-pass cost
+        val total = (System.nanoTime() - t0) / 1e9
+        nestedChildTime.set(nestedChildTime.get.tail match {
+          case parent :: up => (parent + total) :: up
+          case Nil => Nil
+        })
+      }
+    }).value.asInstanceOf[A]
+
+  /** A driver-side artifact (a model fit, or a tuple of lazy DataFrames
+    * that share one internal build): nothing to release. */
+  private def driverValue[A](s: SparkSession, dir: String, key: String)
+                            (build: => A): A =
+    memo(s, dir, key)((build, DriverValue))
+
+  /** A persisted intermediate DataFrame: results consumed by several
+    * queries are computed once, persisted and materialized — the batch
+    * analogue of materializing a shared pipeline stage. */
+  private def cachedDf(s: SparkSession, dir: String, key: String)
+                      (build: => DataFrame): DataFrame =
+    memo(s, dir, key) {
+      val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df.count() // materialize; later queries read the cache only
+      (df, Persisted(df))
+    }
+
+  /** An on-disk artifact: `write` fills a fresh scratch directory and
+    * returns the value queries use. The path is disambiguated by
+    * (key, full-dir md5, process, session): hashCode collisions or a
+    * concurrent JVM/session on the same dir must never share (and
+    * overwrite) one directory mid-read. */
+  private def onDisk[A](s: SparkSession, dir: String, key: String)
+                       (write: String => A): A =
+    memo(s, dir, key) {
+      val dirTag = java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+      val path = s"$scratchRoot/graft_${key}_${dirTag}_" +
+        s"${ProcessHandle.current.pid}_${System.identityHashCode(s)}"
+      val value = write(path)
+      (value, ScratchDir(path, dirBytes(new java.io.File(path))))
+    }
+
+  /** Root for session-scoped artifact directories: prefer the tmpfs
+    * mount when present so repeated bench sweeps measure the format and
+    * the plan (partition pruning is a directory-structure property,
+    * identical on tmpfs), not disk contention from co-resident IO. */
+  private lazy val scratchRoot: String = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) "/dev/shm"
+    else System.getProperty("java.io.tmpdir", "/tmp")
+  }
   private def dirBytes(f: java.io.File): Long =
     if (f.isDirectory) Option(f.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
     else if (f.isFile) f.length() else 0L
-
-  private val enrichedCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def callEnriched(s: SparkSession, dir: String): DataFrame =
-    enrichedCache.getOrElseUpdate((s, dir), timedArtifact(s, "enriched_events") {
-      registerCleanup(s)
-      // the matcher emits matching/depth/parent AND time_inc/time_exc in its
-      // single pass, so full enrichment is one shuffle + one mapPartitions
-      val df = Metrics.calcExcMetrics(TraceGen.callTrace(s, dir), Seq(TimestampNs))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // materialize; later queries read the cache only
-      df
-    })
-
-  /** Memoized deterministic quantizers per (session, sfDir): nine ANN /
-    * dedup / graph queries fit the SAME default k-means (and PQ
-    * codebooks) on the same embeddings table — like [[callEnriched]],
-    * fit once, share everywhere ("train the index once, query it many
-    * times", which is how an IVF deployment actually runs). */
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Array[Double]]]()
-  private def embCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
-    kmeansCache.getOrElseUpdate((s, dir), timedArtifact(s, "kmeans_fit") {
-      registerCleanup(s)
-      Similarity.kmeansFit(T(s, dir, "embeddings"))
-    })
-  private val autoKmeansCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (Int, Array[Array[Double]])]()
-  /** The AUTO-policy quantizer (k = ceil(n/64), Lloyd on the md5-hash
-    * sample) as a session artifact shared by the kNN-graph consumers
-    * (semdedup, graph_pagerank, knn_graph_nnd, knn_graph_auto — auto-k
-    * is the DEFAULT since the sf1 sweep measured fixed-k at 15–36x
-    * sf0.1→sf1 vs 3.2x for k∝n) — the same "train once, query many"
-    * shape as the
-    * fixed-k fit above; the oracle recomputes k and the sample modulus
-    * from the data, so memoization changes timing only. */
-  private def embAutoCentroids(s: SparkSession, dir: String): (Int, Array[Array[Double]]) =
-    autoKmeansCache.getOrElseUpdate((s, dir), timedArtifact(s, "kmeans_auto_fit") {
-      registerCleanup(s)
-      val emb = T(s, dir, "embeddings")
-      val n = emb.count()
-      val k = Similarity.autoClusters(n, 64)
-      (k, Similarity.kmeansFitSampled(emb, k, n))
-    })
-  private val sq8Cache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (Array[Double], Array[Double])]()
-  private def embSq8(s: SparkSession, dir: String): (Array[Double], Array[Double]) =
-    sq8Cache.getOrElseUpdate((s, dir), timedArtifact(s, "sq8_fit") {
-      registerCleanup(s)
-      Similarity.sq8Fit(T(s, dir, "embeddings"))
-    })
-  private val pqCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Array[Array[Double]]]]()
-  private def embCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate((s, dir), timedArtifact(s, "pq_fit") {
-      registerCleanup(s)
-      Similarity.pqFit(T(s, dir, "embeddings"))
-    })
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Seq[(Int, String, String, Long)]]()
-  private def bpeMerges(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    bpeCache.getOrElseUpdate((s, dir), timedArtifact(s, "bpe_merges") {
-      registerCleanup(s)
-      graft.scale.Bpe.learnMerges(T(s, dir, "documents")).collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq
-    })
-
-  /** Memoized intermediate DataFrames per (session, sfDir, key): results
-    * consumed by several queries (LSH dedup components, winnowing
-    * fingerprints) are computed once and persisted — the batch analogue
-    * of materializing a shared pipeline stage. */
-  private val dfCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
-  private def cachedDf(s: SparkSession, dir: String, key: String)
-                      (build: => DataFrame): DataFrame =
-    dfCache.getOrElseUpdate((s, dir, key), timedArtifact(s, key) {
-      registerCleanup(s)
-      val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    })
-
-  /** Drop every memoized artifact held for `s` and unpersist its cached
-    * DataFrames, releasing executor storage. Call when a session is done
-    * with a dataset (or stopping) in a long-lived driver — without
-    * eviction the process-global maps above would pin storage memory for
-    * sessions/datasets that are never queried again. Also invoked
-    * automatically at application end (belt-and-braces; by then the
-    * blocks die with the executors anyway). */
-  def clearCaches(s: SparkSession): Unit = {
-    def stopped = s.sparkContext.isStopped
-    for (k <- enrichedCache.keys if k._1 == s;
-         df <- enrichedCache.remove(k) if !stopped) df.unpersist()
-    for (k <- dfCache.keys if k._1 == s;
-         df <- dfCache.remove(k) if !stopped) df.unpersist()
-    for (k <- kmeansCache.keys if k._1 == s) kmeansCache.remove(k)
-    for (k <- sq8Cache.keys if k._1 == s) sq8Cache.remove(k)
-    for (k <- pqCache.keys if k._1 == s) pqCache.remove(k)
-    for (k <- bpeCache.keys if k._1 == s) bpeCache.remove(k)
-    for (k <- bigramTuple.keys if k._1 == s) bigramTuple.remove(k)
-    for (k <- jpTuple.keys if k._1 == s) jpTuple.remove(k)
-    for (k <- ivfIndexCache.keys if k._1 == s;
-         path <- ivfIndexCache.remove(k)) deleteRecursively(new java.io.File(path))
-    for (k <- otf2ExportCache.keys if k._1 == s;
-         path <- otf2ExportCache.remove(k)) deleteRecursively(new java.io.File(path))
-    for (k <- chromeExportCache.keys if k._1 == s;
-         path <- chromeExportCache.remove(k)) deleteRecursively(new java.io.File(path))
-    for (k <- storedIndexCache.keys if k._1 == s) storedIndexCache.remove(k)
-    for (k <- storedIndexPaths.keys if k._1 == s;
-         path <- storedIndexPaths.remove(k)) deleteRecursively(new java.io.File(path))
-    for (k <- artifactTimes.keys if k._1 == s) artifactTimes.remove(k)
-    for (k <- artifactBytes.keys if k._1 == s) artifactBytes.remove(k)
-  }
-
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }
 
-  /** Test hook: on-disk stored-index paths currently held for `s` —
-    * EntrySmokeSpec proves clearCaches removes the scratch dirs. */
-  private[graft] def storedIndexLivePaths(s: SparkSession): Seq[String] =
-    storedIndexPaths.collect { case ((ss, _, _), p) if ss == s => p }.toSeq
+  private def release(hold: Hold): Unit = hold match {
+    case Persisted(df) => if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
+    case ScratchDir(path, _) => deleteRecursively(new java.io.File(path))
+    case DriverValue => ()
+  }
+  private def evict(owned: SparkSession => Boolean): Unit =
+    for (k <- store.keys if owned(k._1); a <- store.remove(k)) release(a.hold)
+  private def held(s: SparkSession): Seq[(String, Artifact)] =
+    store.iterator.collect { case ((ss, _, k), a) if ss == s => (k, a) }.toSeq
 
-  /** Test hook: number of memoized artifacts currently held for `s`. */
-  private[graft] def cachedEntryCount(s: SparkSession): Int =
-    enrichedCache.keys.count(_._1 == s) + dfCache.keys.count(_._1 == s) +
-      kmeansCache.keys.count(_._1 == s) + pqCache.keys.count(_._1 == s) +
-      sq8Cache.keys.count(_._1 == s) +
-      ivfIndexCache.keys.count(_._1 == s) +
-      storedIndexCache.keys.count(_._1 == s)
+  /** Drop every memoized artifact held for `s` and release it: persisted
+    * DataFrames are unpersisted (executor storage freed), scratch
+    * directories deleted, fits and their build times dropped. Call when
+    * a session is done with a dataset (or stopping) in a long-lived
+    * driver — without eviction the process-global store would pin
+    * storage memory and scratch space for sessions/datasets that are
+    * never queried again. The same release runs for every artifact of a
+    * SparkContext at application end; a JVM shutdown hook deletes what
+    * scratch directories remain in processes that never stop Spark. */
+  def clearCaches(s: SparkSession): Unit = evict(_ == s)
 
   /** One application-end listener per SparkContext: final cleanup for
     * sessions never explicitly cleared. */
@@ -239,25 +192,81 @@ object SparkEntry {
         new org.apache.spark.scheduler.SparkListener {
           override def onApplicationEnd(
               end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            enrichedCache.clear(); dfCache.clear()
-            kmeansCache.clear(); pqCache.clear(); sq8Cache.clear()
-            // on-disk indexes are per-process — remove them, or every JVM
-            // run leaves a corpus-sized directory behind in /tmp
-            ivfIndexCache.values.foreach(p => deleteRecursively(new java.io.File(p)))
-            ivfIndexCache.clear()
-            otf2ExportCache.values.foreach(p => deleteRecursively(new java.io.File(p)))
-            otf2ExportCache.clear()
-            chromeExportCache.values.foreach(p => deleteRecursively(new java.io.File(p)))
-            chromeExportCache.clear()
-            storedIndexCache.clear()
-            storedIndexPaths.values.foreach(p => deleteRecursively(new java.io.File(p)))
-            storedIndexPaths.clear()
+            evict(_.sparkContext eq sc)
             cleanupHooked.remove(sc) // don't pin the dead SparkContext
           }
         })
       true
     })
   }
+  // backstop for processes that never call spark.stop() (test harnesses):
+  // the scratch directories still held are removed when the JVM exits;
+  // executor storage goes with the JVM, so nothing is unpersisted here
+  private lazy val shutdownHook: Unit =
+    sys.addShutdownHook {
+      store.values.map(_.hold).foreach {
+        case d: ScratchDir => release(d)
+        case _ => ()
+      }
+    }: Unit
+
+  /** Per-artifact build seconds recorded so far for `s`. */
+  private[graft] def artifactBreakdown(s: SparkSession): Map[String, Double] =
+    held(s).groupMapReduce(_._1)(_._2.seconds)(_ + _)
+
+  /** Bytes written by the on-disk artifact builds held for `s`. */
+  private[graft] def artifactIoBytes(s: SparkSession): Map[String, Long] =
+    held(s).collect { case (k, Artifact(_, _, ScratchDir(_, b))) => (k, b) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+
+  /** Test hook: number of memoized artifacts currently held for `s`. */
+  private[graft] def cachedEntryCount(s: SparkSession): Int = held(s).size
+
+  /** Test hook: on-disk scratch directories currently held for `s` —
+    * EntrySmokeSpec proves clearCaches removes them. */
+  private[graft] def scratchLivePaths(s: SparkSession): Seq[String] =
+    held(s).collect { case (_, Artifact(_, _, ScratchDir(p, _))) => p }
+
+  // ---------------------------------------------------- the shared builds
+
+  /** Fully-enriched call trace (match + depth + inc + exc): every trace
+    * query below consumes the same persisted DataFrame instead of
+    * re-running the matcher. The matcher emits matching/depth/parent AND
+    * time_inc/time_exc in its single pass, so full enrichment is one
+    * shuffle + one mapPartitions. */
+  private def callEnriched(s: SparkSession, dir: String): DataFrame =
+    cachedDf(s, dir, "enriched_events")(
+      Metrics.calcExcMetrics(TraceGen.callTrace(s, dir), Seq(TimestampNs)))
+
+  /** Deterministic quantizers per (session, sfDir): nine ANN / dedup /
+    * graph queries fit the SAME default k-means (and PQ codebooks) on
+    * the same embeddings table — fit once, share everywhere (which is
+    * how an IVF deployment actually runs). */
+  private def embCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
+    driverValue(s, dir, "kmeans_fit")(Similarity.kmeansFit(T(s, dir, "embeddings")))
+  /** The AUTO-policy quantizer (k = ceil(n/64), Lloyd on the md5-hash
+    * sample) shared by the kNN-graph consumers (semdedup,
+    * graph_pagerank, knn_graph_nnd, knn_graph_auto — auto-k is the
+    * DEFAULT since the sf1 sweep measured fixed-k at 15–36x sf0.1→sf1 vs
+    * 3.2x for k∝n); the oracle recomputes k and the sample modulus from
+    * the data, so memoization changes timing only. */
+  private def embAutoCentroids(s: SparkSession, dir: String): (Int, Array[Array[Double]]) =
+    driverValue(s, dir, "kmeans_auto_fit") {
+      val emb = T(s, dir, "embeddings")
+      val n = emb.count()
+      val k = Similarity.autoClusters(n, 64)
+      (k, Similarity.kmeansFitSampled(emb, k, n))
+    }
+  private def embSq8(s: SparkSession, dir: String): (Array[Double], Array[Double]) =
+    driverValue(s, dir, "sq8_fit")(Similarity.sq8Fit(T(s, dir, "embeddings")))
+  private def embCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
+    driverValue(s, dir, "pq_fit")(Similarity.pqFit(T(s, dir, "embeddings")))
+  private def bpeMerges(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
+    driverValue(s, dir, "bpe_merges")(
+      graft.scale.Bpe.learnMerges(T(s, dir, "documents")).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq)
+
   /** Memoized MinHash signature table — five queries (minhash_sig,
     * lsh_tuning, minhash_pairs, minhash_estimate, dup_cross_source) and
     * the LSH component build all start from the identical signatures;
@@ -315,10 +324,8 @@ object SparkEntry {
     * same training scan; memoizing the TUPLE (lazily, unpersisted)
     * keeps the token pipeline single-built while cachedDf persists and
     * times each consumed side. */
-  private val bigramTuple =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (DataFrame, DataFrame)]()
   private def bigramModelShared(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bigramTuple.getOrElseUpdate((s, dir), TextOps.bigramModel(
+    driverValue(s, dir, "bigram_model")(TextOps.bigramModel(
       T(s, dir, "documents").filter(col("doc_id") % 5 === 0)))
   private def bigramUni(s: SparkSession, dir: String): DataFrame =
     cachedDf(s, dir, "bigram_uni")(bigramModelShared(s, dir)._1)
@@ -339,10 +346,8 @@ object SparkEntry {
     * shares its internal shingle checkpoint, so building both sides
     * from one memoized tuple shingles history ONCE instead of once per
     * side (measured ~2 s of duplicated setup at sf0.1). */
-  private val jpTuple =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (DataFrame, DataFrame)]()
   private def jpIndexShared(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    jpTuple.getOrElseUpdate((s, dir), Dedup.jaccardPrefixIndex(
+    driverValue(s, dir, "jp_index")(Dedup.jaccardPrefixIndex(
       T(s, dir, "documents").filter(col("doc_id") % 10 =!= 0), 3, 1, 5))
   private def jpIndexDf(s: SparkSession, dir: String): DataFrame =
     cachedDf(s, dir, "jp_index_df")(jpIndexShared(s, dir)._1)
@@ -441,61 +446,34 @@ object SparkEntry {
       TextOps.languageId(docs,
         TextOps.learnLanguageProfiles(docs.filter(col("doc_id") % 5 === 0)))
     })
-  /** On-disk IVF index per (session, sfDir): written once under /tmp,
+  /** On-disk IVF index per (session, sfDir): written once to scratch,
     * then every ann_ivf_disk run searches it with partition pruning —
     * "build the index once, serve queries from it", the deployment shape
     * [[Similarity.writeIvfIndex]] documents. */
-  private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
-  /** Root for session-scoped artifact directories: prefer the tmpfs
-    * mount when present so repeated bench sweeps measure the format and
-    * the plan (partition pruning is a directory-structure property,
-    * identical on tmpfs), not disk contention from co-resident IO. */
-  private lazy val scratchRoot: String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir", "/tmp")
-  }
-  // backstop for processes that never call spark.stop() (test harnesses):
-  // whatever indexes remain are removed when the JVM exits
-  private lazy val ivfShutdownHook: Unit =
-    sys.addShutdownHook {
-      ivfIndexCache.values.foreach(p => deleteRecursively(new java.io.File(p)))
-      otf2ExportCache.values.foreach(p => deleteRecursively(new java.io.File(p)))
-      chromeExportCache.values.foreach(p => deleteRecursively(new java.io.File(p)))
-      storedIndexPaths.values.foreach(p => deleteRecursively(new java.io.File(p)))
-    }: Unit
+  private def ivfIndexPath(s: SparkSession, dir: String): String =
+    onDisk(s, dir, "ivf_disk_index") { path =>
+      Similarity.writeIvfIndex(T(s, dir, "embeddings"), path, embCentroids(s, dir))
+      path
+    }
 
-  /** Memoized PERSISTED day-2 indexes per (session, sfDir, key): the
-    * family handle is built once, `save`d to scratch, and reloaded
-    * through [[graft.scale.IndexStore.load]] — so every `*_incr` oracle
-    * row exercises the exact enforced-contract path a day-2 user calls
+  /** PERSISTED day-2 indexes per (session, sfDir, key): the family
+    * handle is built once, `save`d to scratch, and reloaded through
+    * [[graft.scale.IndexStore.load]] — so every `*_incr` oracle row
+    * exercises the exact enforced-contract path a day-2 user calls
     * (build → save → load → probe, parameters riding the store's
     * `_meta`), not the raw incremental functions the store wraps. The
     * probe output is identical either way (load hands back the same
     * tables through a parquet round trip), so the oracle hashes pin the
     * user-facing API. */
-  private val storedIndexCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String),
-      graft.scale.IndexStore.DedupIndex]()
-  private val storedIndexPaths =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String), String]()
   private def storedIndex(s: SparkSession, dir: String, key: String)
       (build: => graft.scale.IndexStore.DedupIndex)
       : graft.scale.IndexStore.DedupIndex =
-    storedIndexCache.getOrElseUpdate((s, dir, key), timedArtifact(s, key) {
-      registerCleanup(s)
-      ivfShutdownHook
-      val dirTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-      val path = s"$scratchRoot/graft_idx_${key}_${dirTag}_" +
-        s"${ProcessHandle.current.pid}_${System.identityHashCode(s)}"
+    onDisk(s, dir, key) { path =>
       build.save(path)
-      storedIndexPaths((s, dir, key)) = path
       graft.scale.IndexStore.load(s, path)
-    })
-  /** Memoized day-3 index per (session, sfDir, key): day-1 state is
-    * built and `save`d, then the day-2 batch is absorbed through
+    }
+  /** Day-3 index per (session, sfDir, key): day-1 state is built and
+    * `save`d, then the day-2 batch is absorbed through
     * [[graft.scale.IndexStore.append]] — load(v1) → append → save(v2) →
     * load(v2), the operational day-N maintenance contract — and the
     * `*_day3` queries probe the RELOADED v2 handle. Their oracles are
@@ -505,34 +483,10 @@ object SparkEntry {
   private def storedAppendedIndex(s: SparkSession, dir: String, key: String)
       (buildDay1: => graft.scale.IndexStore.DedupIndex)
       (day2: => DataFrame): graft.scale.IndexStore.DedupIndex =
-    storedIndexCache.getOrElseUpdate((s, dir, key), timedArtifact(s, key) {
-      registerCleanup(s)
-      ivfShutdownHook
-      val dirTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-      val base = s"$scratchRoot/graft_idx_${key}_${dirTag}_" +
-        s"${ProcessHandle.current.pid}_${System.identityHashCode(s)}"
-      buildDay1.save(base)
-      storedIndexPaths((s, dir, key + "__v1")) = base
-      val grown = graft.scale.IndexStore.append(s, base, day2, base + "_v2")
-      storedIndexPaths((s, dir, key)) = base + "_v2"
-      grown
-    })
-  private def ivfIndexPath(s: SparkSession, dir: String): String =
-    ivfIndexCache.getOrElseUpdate((s, dir), timedArtifact(s, "ivf_disk_index") {
-      registerCleanup(s)
-      ivfShutdownHook
-      // path disambiguated by (full-dir md5, process, session): hashCode
-      // collisions or a concurrent JVM/session on the same dir must never
-      // share (and overwrite) one index directory mid-read
-      val dirTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-      val path = s"$scratchRoot/graft_ivf_index_${dirTag}_" +
-        s"${ProcessHandle.current.pid}_${System.identityHashCode(s)}"
-      Similarity.writeIvfIndex(T(s, dir, "embeddings"), path, embCentroids(s, dir))
-      artifactBytes((s, "ivf_disk_index")) = dirBytes(new java.io.File(path))
-      path
-    })
+    onDisk(s, dir, key) { path =>
+      buildDay1.save(s"$path/v1")
+      graft.scale.IndexStore.append(s, s"$path/v1", day2, s"$path/v2")
+    }
 
   /** Gzip Chrome-JSONL export of the call trace, written once per
     * (session, sf) — the stored interchange artifact the round-trip
@@ -540,40 +494,22 @@ object SparkEntry {
     * (bytes parsed) ~10x; the READ side is what a consumer pays
     * repeatedly, so the round-trip query reads this artifact instead of
     * re-serializing the whole trace in-plan every run. */
-  private val chromeExportCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
   private def chromeExportPath(s: SparkSession, dir: String): String =
-    chromeExportCache.getOrElseUpdate((s, dir), timedArtifact(s, "chrome_export") {
-      registerCleanup(s)
-      ivfShutdownHook
-      val dirTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-      val path = s"$scratchRoot/graft_chrome_export_${dirTag}_" +
-        s"${ProcessHandle.current.pid}_${System.identityHashCode(s)}"
+    onDisk(s, dir, "chrome_export") { path =>
       graft.ingest.ChromeWriter.write(callEnriched(s, dir), path,
         codec = Some("gzip"))
-      artifactBytes((s, "chrome_export")) = dirBytes(new java.io.File(path))
       path
-    })
+    }
 
   /** On-disk OTF2 export per (session, sfDir): the call trace written
     * once as a real OTF2 archive ([[graft.ingest.Otf2Writer]]), which
     * `trace_otf2_roundtrip` then re-ingests through the binary reader —
     * the full write→bytes→read interchange loop under the oracle gate. */
-  private val otf2ExportCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
   private def otf2ExportPath(s: SparkSession, dir: String): String =
-    otf2ExportCache.getOrElseUpdate((s, dir), timedArtifact(s, "otf2_export") {
-      registerCleanup(s)
-      ivfShutdownHook
-      val dirTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-      val path = s"$scratchRoot/graft_otf2_export_${dirTag}_" +
-        s"${ProcessHandle.current.pid}_${System.identityHashCode(s)}"
+    onDisk(s, dir, "otf2_export") { path =>
       graft.ingest.Otf2Writer.save(TraceGen.callTrace(s, dir), path)
-      artifactBytes((s, "otf2_export")) = dirBytes(new java.io.File(path))
       path
-    })
+    }
 
   /** Shared BM25 score table for the first-5-docs query suite: bm25_topk
     * and hybrid_topk rank the SAME scores at different k — score once,

@@ -30,7 +30,7 @@ import graft.functions.VecMath
   *
   * At 1000 executors the scan parallelism is the number of series keys
   * (processes × metrics), matching how traces shard naturally; a single
-  * gigantic series would instead use [[PatternDetect.matrixProfileDistributed]]'s
+  * gigantic series would instead use `PatternDetect.matrixProfileDistributed`'s
   * broadcast-slice scheme.
   *
   * Contract: `idxCol` must be dense (0,1,2,…) within each series key —

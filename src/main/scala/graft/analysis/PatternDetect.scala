@@ -116,7 +116,7 @@ object PatternDetect {
   }
 
   /** Series length above which [[detectPattern]] switches from the local
-    * O(n²·m) kernel to [[matrixProfileDistributed]]. */
+    * O(n²·m) kernel to `matrixProfileDistributed`. */
   val DistributedThreshold: Int = 50000
 
   def detectPattern(events0: DataFrame, startEvent: String,

@@ -16,7 +16,7 @@ import graft.enrich.{EventMatcher, Metrics}
   * callpath string "a->b->c", dedup'd across processes, and stores the Node
   * object into a `Graph_Node` events column. We encode the tree relationally:
   * one row per distinct callpath, carrying `path_hash` (the 64-bit chained
-  * hash emitted by [[EventMatcher]]), `parent_path_hash`, name, depth, and
+  * hash emitted by [[graft.enrich.EventMatcher]]), `parent_path_hash`, name, depth, and
   * the full path string. Events already carry `path_hash` as the foreign key.
   *
   * Scale shape: the heavy part — reducing billions of events to their

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * The rolling hash is gear-style: H_i = Σ_{j=0}^{w-1} g(c_{i-j})·2^j,
   * maintained in O(1) per character. Per-character weights g(c) are the
   * low 30 bits of md5("g:" + c) — deterministic and recomputable in any
-  * SQL dialect (same trick as [[graft.scale.TextOps.md5Hash60]]), which
+  * SQL dialect (same trick as `TextOps.md5Hash60`), which
   * is what lets a DuckDB oracle replicate boundaries bit-for-bit. With
   * w ≤ 8 every H fits exactly in a signed 64-bit integer (< 2^38), so
   * there is no modular wraparound to disagree on. A position i ≥ w is a

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * in the catalog: every later equi-join or aggregation on the bucket
   * key reads each bucket as one task and skips the exchange entirely —
   * two tables bucketed the same way join with ZERO shuffles on either
-  * side ([[graft.BucketedSpec]] asserts exactly that on the physical
+  * side (`BucketedSpec` asserts exactly that on the physical
   * plan). The shuffle is paid once at ingest, amortized over every
   * downstream run — the standard warehouse layout for fact tables that
   * join on the same key daily (events⋈orders on the customer key, the

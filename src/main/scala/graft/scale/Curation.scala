@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Corpus sampling and curation operators for training-data pipelines.
   *
   * All sampling is deterministic: membership is a pure function of
-  * (seed, id) via the md5-derived 60-bit hash ([[TextOps.md5Hash60]]), so
+  * (seed, id) via the md5-derived 60-bit hash (`TextOps.md5Hash60`), so
   *  - results are reproducible run-to-run and engine-to-engine (the DuckDB
   *    oracle recomputes them exactly — no RNG state anywhere);
   *  - at 100 TB the sample decision is a scan-local filter (hash-compare
@@ -249,7 +249,7 @@ object Curation {
     * corpus is scanned twice (once to count, once to score) and the
     * scoring join is broadcast-hash on a few-KB table; no shuffle of the
     * corpus ever happens. Features hash with the engine-replicable
-    * [[TextOps.md5Hash60]], so the whole weighting is deterministic and
+    * `TextOps.md5Hash60`, so the whole weighting is deterministic and
     * oracle-checkable. */
   def importanceWeights(docs: DataFrame, target: DataFrame,
                         buckets: Int = 256, shingleK: Int = 2,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.LongType
   *
   * All variants are pure DataFrame pipelines — hash/group/join shapes that
   * Catalyst plans with map-side partial aggregation — and all hashing is
-  * md5-derived ([[TextOps.md5Hash60]]) so results are deterministic and
+  * md5-derived (`TextOps.md5Hash60`) so results are deterministic and
   * replicable by any SQL engine (the correctness oracle recomputes them).
   *
   *  - exact: hash-groupBy on content digest.
@@ -352,37 +352,36 @@ object Dedup {
     * shrinking) edge set; `localCheckpoint` truncates the iterative
     * lineage. Deterministic.
     *
-    * Returns (node, component) for every node that appears in a pair. */
+    * Returns (node, component) for every node that appears in a pair;
+    * a null id is no node. */
   def connectedComponents(pairs: DataFrame, aCol: String = "a",
                           bCol: String = "b", maxIter: Int = 30,
                           maxLocalEdges: Long = 2000000L): DataFrame = {
-    // canonical big -> small directed edges; self-pairs drop out of the
-    // contraction and are restored as singleton labels at the end
-    // ids are read as LongType on both paths (the local collect reads
-    // primitive longs), so labels and schema agree for any integral input
+    // canonical big -> small directed edges; ids are read as LongType on
+    // both paths (the local collect reads primitive longs), so labels and
+    // schema agree for any integral input. Self-pairs stay in this
+    // snapshot as u == v loops: they carry the ids that appear in no
+    // other pair, which still get their own label.
     val a = col(aCol).cast(LongType)
     val b = col(bCol).cast(LongType)
-    val nodes = pairs.select(a.as("node"))
-      .union(pairs.select(b.as("node"))).distinct()
-      .localCheckpoint(false)
     // DISK_ONLY round snapshots: see GraphOps.roundSnapshot (x100
     // storage-unroll OOM rationale)
-    var e = GraphOps.roundSnapshot(pairs
+    val canon = GraphOps.roundSnapshot(pairs
       .select(greatest(a, b).as("u"), least(a, b).as("v"))
-      .filter(col("u") =!= col("v")).distinct())
-    var eCount = e.count()
+      .filter(col("u").isNotNull).distinct())
     // Size-gated driver union-find — the same bounded-collect policy as
     // GraphOps.kcore (and broadcast thresholds): below `maxLocalEdges`
-    // DISTINCT edges the distributed star contraction pays ~3 jobs per
+    // DISTINCT pairs the distributed star contraction pays ~3 jobs per
     // round of pure scheduling overhead on a graph the driver solves in
     // milliseconds (measured: the bench's 161-edge LSH graph cost ~15 s
     // through the fixpoint). Labels are the component MINIMUM on both
     // paths, so the result is identical — spec-pinned. Beyond the gate
     // the unbounded distributed fixpoint below runs unchanged.
-    if (eCount <= maxLocalEdges) {
-      val (us, vs) = GraphOps.collectEdges(e)
+    if (canon.count() <= maxLocalEdges) {
+      val (us, vs) = GraphOps.collectEdges(canon)
       // every root is its set's minimum: a union always hangs the larger
-      // root under the smaller one
+      // root under the smaller one; a self-loop unions nothing, so its
+      // id keeps itself as label
       val uf = scala.collection.mutable.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -396,15 +395,15 @@ object Dedup {
         if (ra != rb) uf(math.max(ra, rb)) = math.min(ra, rb)
       }
       val rows = (us ++ vs).distinct.map(n => (n, find(n)))
-      val labels = pairs.sparkSession.createDataFrame(rows.toSeq)
+      return pairs.sparkSession.createDataFrame(rows.toSeq)
         .toDF("node", "component")
-      // nodes includes self-pair-only ids, which carry no edge: label
-      // them with themselves exactly like the distributed path's final
-      // left join
-      return nodes.join(labels, Seq("node"), "left")
-        .select(col("node"), coalesce(col("component"), col("node"))
-          .as("component"))
     }
+    val nodes = pairs.select(a.as("node")).union(pairs.select(b.as("node")))
+      .filter(col("node").isNotNull).distinct()
+      .localCheckpoint(false)
+    var e = GraphOps.roundSnapshot(canon.filter(col("u") =!= col("v")))
+    var eCount = e.count()
+    GraphOps.releaseCheckpoint(canon)
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {

@@ -247,7 +247,7 @@ object Similarity {
 
   /** Johnson-Lindenstrauss random projection: reduce `vecCol` to
     * `outDim` components, each the dot product with a deterministic
-    * md5-derived hyperplane (the same [[planeComponent]] family as
+    * md5-derived hyperplane (the same `planeComponent` family as
     * [[lshBuckets]], so the projection is replicable anywhere, SQL
     * included). Components are rounded to 4dp so downstream comparisons
     * are engine-stable.
@@ -391,7 +391,7 @@ object Similarity {
         centroids))
 
   /** Nearest-centroid assignment (the quantizer's map side): one fused
-    * scan — k codegen'd dot products per row ([[clusterExpr]]). */
+    * scan — k codegen'd dot products per row (`clusterExpr`). */
   def kmeansAssign(vectors: DataFrame, centroids: Array[Array[Double]],
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame =
@@ -1051,7 +1051,7 @@ object Similarity {
     * INTEGER arithmetic, so the ranking is engine-exact (the draw of
     * symmetric code-space search next to the float asymmetric variant).
     * Same broadcast-queries shape as [[bruteForceTopK]]; the Σq²+Σc²−2qc
-    * expansion reuses the codegen'd [[VecMath.dot]] kernel on the
+    * expansion reuses the codegen'd [[graft.functions.VecMath.dot]] kernel on the
     * integer-valued code vectors. Queries must come from the trained
     * range (codes clamp at the corpus extremes). */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,

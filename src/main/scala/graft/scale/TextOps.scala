@@ -193,7 +193,7 @@ object TextOps {
     * whole operator is a narrow, codegen'd projection + posexplode: NO
     * shuffle, parallelism = input splits, which is exactly the 100 TB
     * shape (chunk hashes then feed a hash-groupBy dedup like
-    * [[graft.scale.Dedup.exactDedup]]). */
+    * [[graft.scale.Dedup.exact]]). */
   def cdcChunks(docs: DataFrame, w: Int = 8, maskBits: Int = 6,
                 textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     docs
@@ -607,7 +607,7 @@ object TextOps {
     * exactly the repetitive documents the score flags.
     *
     * Join keys are 60-bit integer hashes computed at the scan
-    * ([[hashedBigramRows]]: one md5 per TOKEN, bigram key = the
+    * (`hashedBigramRows`: one md5 per TOKEN, bigram key = the
     * overflow-safe xor/rotate mix of the two token hashes), so the
     * pre-aggregation and both model joins shuffle longs and the explode
     * emits pure integers — this query was the bench's slowest, and the

@@ -35,10 +35,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * batch-vs-MemoryStream specs). */
 private[streaming] object BatchReplay {
 
-  /** Minimal [[GroupState]] for a single closed batch: starts empty,
-    * never times out (batch execution fires no timeouts), timeout
-    * setters are accepted and ignored (the batch replays pass
-    * `idleTimeout = None`, so the group functions never call them). */
+  /** Minimal [[GroupState]] for a single closed batch: starts empty and
+    * never times out. Timeout setters are accepted and ignored, as in
+    * Spark's batch execution of `flatMapGroupsWithState`, which fires no
+    * timeouts: a group function that sets an idle timeout runs here
+    * exactly as it does in a batch query. */
   final class ReplayState[S] extends GroupState[S] {
     private var v: Option[S] = None
     override def exists: Boolean = v.isDefined
@@ -81,7 +82,9 @@ private[streaming] object BatchReplay {
     * (rows are reused per partition by the scan). `run` returns freshly
     * allocated InternalRows matching `outSchema` (use
     * `Encoders.product[O].schema` so names/types equal the typed
-    * `.toDF()`). */
+    * `.toDF()`). A null key cell throws `IllegalArgumentException`
+    * naming its column, where the typed path fails decoding it — `key`
+    * would otherwise read it as 0 and merge the row into key 0's group. */
   def replay[K, I](in: DataFrame, keyCols: Seq[String],
                    key: InternalRow => K,
                    decode: InternalRow => I,
@@ -90,6 +93,7 @@ private[streaming] object BatchReplay {
     val spark = in.sparkSession
     val keyed = in.repartition(keyCols.map(col): _*)
       .sortWithinPartitions(keyCols.map(col): _*)
+    val keyIdx = keyCols.map(c => (in.schema.fieldIndex(c), c))
     val rdd = RddBridge.toInternalRdd(keyed).mapPartitions { it =>
       new Iterator[InternalRow] {
         private var out: Iterator[InternalRow] = Iterator.empty
@@ -97,6 +101,10 @@ private[streaming] object BatchReplay {
         private var pendingVal: I = _
         private var pending = false
         private def load(r: InternalRow): Unit = {
+          keyIdx.foreach { case (i, c) =>
+            if (r.isNullAt(i))
+              throw new IllegalArgumentException(s"null key in column '$c'")
+          }
           pendingKey = key(r); pendingVal = decode(r); pending = true
         }
         private def advance(): Unit = {

@@ -10,37 +10,54 @@ import graft.model.Schemas._
 class EntrySmokeSpec extends SparkSpec {
   import spark.implicits._
 
+  private val sfDir = "/root/testdata/sf0.001"
+
   test("entry() returns rows on sf0.001") {
-    assume(new java.io.File("/root/testdata/sf0.001").isDirectory)
+    assume(new java.io.File(sfDir).isDirectory)
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
   test("clearCaches evicts this session's memoized artifacts and unpersists them") {
-    assume(new java.io.File("/root/testdata/sf0.001").isDirectory)
+    assume(new java.io.File(sfDir).isDirectory)
     // populate the enriched-trace cache, then evict: the persisted plan
     // must actually leave the cache manager (executor storage released)
-    val df = SparkEntry.queries("trace_depth")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries("trace_depth")(spark, sfDir)
     assert(df.count() > 0)
     assert(SparkEntry.cachedEntryCount(spark) > 0)
     SparkEntry.clearCaches(spark)
     assert(SparkEntry.cachedEntryCount(spark) == 0)
     // idempotent, and the next query simply rebuilds the cache
     SparkEntry.clearCaches(spark)
-    assert(SparkEntry.queries("trace_depth")(spark, "/root/testdata/sf0.001").count() > 0)
+    assert(SparkEntry.queries("trace_depth")(spark, sfDir).count() > 0)
   }
 
   test("clearCaches deletes the on-disk stored-index scratch directories") {
-    assume(new java.io.File("/root/testdata/sf0.001").isDirectory)
+    assume(new java.io.File(sfDir).isDirectory)
     // a day-2 query builds its index via IndexStore save/load on scratch
-    val df = SparkEntry.queries("cdc_dedup_incr")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries("cdc_dedup_incr")(spark, sfDir)
     assert(df.count() > 0)
-    val paths = SparkEntry.storedIndexLivePaths(spark)
+    val paths = SparkEntry.scratchLivePaths(spark)
     assert(paths.nonEmpty)
     paths.foreach(p => assert(new java.io.File(p).isDirectory, p))
+    assert(SparkEntry.artifactIoBytes(spark).get("idx_cdc").exists(_ > 0))
     SparkEntry.clearCaches(spark)
-    assert(SparkEntry.storedIndexLivePaths(spark).isEmpty)
+    assert(SparkEntry.scratchLivePaths(spark).isEmpty)
     paths.foreach(p => assert(!new java.io.File(p).exists(),
       s"scratch dir leaked: $p"))
+  }
+
+  test("clearCaches drops driver-side fits, so the next query refits them") {
+    assume(new java.io.File(sfDir).isDirectory)
+    val q = SparkEntry.queries("knn_graph_auto")
+    assert(q(spark, sfDir).count() > 0)
+    assert(SparkEntry.artifactBreakdown(spark).contains("kmeans_auto_fit"))
+    SparkEntry.clearCaches(spark)
+    assert(SparkEntry.cachedEntryCount(spark) == 0)
+    assert(SparkEntry.artifactBreakdown(spark).isEmpty)
+    // a stale fit left behind would be reused without a rebuild
+    assert(q(spark, sfDir).count() > 0)
+    assert(SparkEntry.artifactBreakdown(spark).contains("kmeans_auto_fit"))
+    SparkEntry.clearCaches(spark)
   }
 
   test("attr promotion lifts map keys to typed columns (comm ops ready)") {

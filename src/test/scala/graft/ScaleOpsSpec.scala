@@ -167,20 +167,22 @@ class ScaleOpsSpec extends SparkSpec {
     // the distributed fixpoint (pure scheduling overhead on tiny graphs);
     // both paths must label every node with its component MINIMUM.
     // Deterministic pseudo-random edges over 3 planted clusters + noise
-    // singles + a self-pair (exercises the nodes-left-join path).
+    // singles + a self-pair + an id paired only with null + a null pair
+    // (a null id is no node).
     val rnd = new scala.util.Random(42)
     val edges = (0 until 120).map { _ =>
       val c = rnd.nextInt(3) * 1000L
-      (c + rnd.nextInt(40), c + rnd.nextInt(40))
-    } ++ Seq((5000L, 5000L))
+      (Option(c + rnd.nextInt(40)), Option(c + rnd.nextInt(40)))
+    } ++ Seq((Some(5000L), Some(5000L)), (Some(7000L), None), (None, None))
     val pairs = edges.toDF("a", "b")
-    val local = Dedup.connectedComponents(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dist = Dedup.connectedComponents(pairs, maxLocalEdges = 0L).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def labels(gate: Long) = Dedup.connectedComponents(pairs, maxLocalEdges = gate)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val local = labels(2000000L)
+    val dist = labels(0L)
     assert(local == dist, s"local/distributed label mismatch: " +
       s"${(local diff dist).take(5)} vs ${(dist diff local).take(5)}")
     assert(local.exists(_ == (5000L, 5000L)), "self-pair singleton kept")
+    assert(local.exists(_ == (7000L, 7000L)), "null-paired id kept")
   }
 
   test("minhash signatures: aggregate-unpivot formulation == the explicit " +

@@ -115,6 +115,19 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("batch matcher rejects a null process key, naming the column") {
+    val events = Seq[(Option[Int], Long, Long, String, String)](
+      (Some(0), 1L, 0L, "Enter", "main"), (Some(0), 2L, 5L, "Leave", "main"),
+      (None, 3L, 1L, "Enter", "orphan"))
+      .toDF("process", "event_id", "timestamp_ns", "event_type", "name")
+    val e = intercept[Exception] {
+      graft.streaming.StreamingMatcher.completedCalls(events).collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("'process'")), e)
+  }
+
   test("matcher lateness bound drops cross-batch stragglers; default accepts") {
     implicit val sqlCtx = spark.sqlContext
     // bounded: 5ns allowed lateness

@@ -2,11 +2,52 @@
 """Local replica of the driver's correctness gate: for each query dir under
 outDir, run the matching oracle SQL (oracle_sql.json) in DuckDB against the
 sf parquet tables, then compare to the Spark parquet dump (columns sorted by
-name, rows sorted, values compared with small float tolerance)."""
+name, rows sorted, values compared with small float tolerance).
+
+Column types are checked before values (DTYPE): a DuckDB HUGEINT or DECIMAL
+result column fails, and so does an integral column on one side against a
+floating one on the other. Types come from DuckDB's result types and the
+Parquet schema of the Spark dump, not from pandas, which reads nullable ints
+and HUGEINT as float64 and would hide both."""
 import sys, json, glob, os
 import duckdb
 import pandas as pd
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+DUCK_INTEGRAL = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT",
+                 "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT"}
+
+
+def duck_kind(t):
+    t = str(t)
+    if t in DUCK_INTEGRAL:
+        return "int"
+    if t in ("FLOAT", "DOUBLE"):
+        return "float"
+    return None
+
+
+def arrow_kind(t):
+    if pa.types.is_integer(t):
+        return "int"
+    if pa.types.is_floating(t):
+        return "float"
+    return None
+
+
+def dtype_error(spark_schema, duck_types):
+    """First type mismatch between the Spark dump and the DuckDB result."""
+    for c in sorted(duck_types):
+        dt = str(duck_types[c])
+        if dt.startswith(("HUGEINT", "UHUGEINT", "DECIMAL")):
+            return f"DTYPE col={c}: duck={dt} (cast the oracle column to BIGINT or DOUBLE)"
+        st = spark_schema.field(c).type
+        sk, dk = arrow_kind(st), duck_kind(dt)
+        if sk and dk and sk != dk:
+            return f"DTYPE col={c}: spark={st} duck={dt}"
+    return None
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 only, exclude = None, None
@@ -40,9 +81,13 @@ for name, sql in sorted(oracle.items()):
         print(f"[progress] {name}: {results[name]}", flush=True)
         continue
     try:
-        spark_df = pd.concat([pd.read_parquet(f) for f in sorted(glob.glob(f"{pdir}/*.parquet"))])
+        files = sorted(glob.glob(f"{pdir}/*.parquet"))
+        spark_df = pd.concat([pd.read_parquet(f) for f in files])
+        spark_schema = pq.read_schema(files[0])
         t0 = time.time()
-        duck_df = con.execute(sql).fetchdf()
+        rel = con.sql(sql)
+        duck_types = dict(zip(rel.columns, rel.types))
+        duck_df = rel.fetchdf()
         oracle_secs[name] = time.time() - t0
     except Exception as e:
         results[name] = f"ERROR: {str(e)[:200]}"
@@ -52,6 +97,9 @@ for name, sql in sorted(oracle.items()):
     d = duck_df.reindex(sorted(duck_df.columns), axis=1)
     if list(s.columns) != list(d.columns):
         results[name] = f"SCHEMA: spark={list(s.columns)} duck={list(d.columns)}"; continue
+    err = dtype_error(spark_schema, duck_types)
+    if err:
+        results[name] = err; continue
     if len(s) != len(d):
         results[name] = f"ROWS: spark={len(s)} duck={len(d)}"; continue
     s = s.sort_values(by=list(s.columns)).reset_index(drop=True)
