@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "runMain graft.demo.TimeQ <sfDir> <nRuns> name1,name2,..."
   *
-  * Prints per-run seconds and the median per query. Artifacts shared via
-  * the SparkEntry memoization layer build inside run 1 exactly like bench
-  * sweep 1; the per-artifact build seconds print at the end so a "query"
+  * Prints per-run seconds, the median and the result's row count per
+  * query. Artifacts shared via the SparkEntry memoization layer build
+  * inside run 1 exactly like bench sweep 1; the per-artifact build
+  * seconds print at the end so a "query"
   * number can be split into artifact vs query cost. */
 object TimeQ {
   def main(args: Array[String]): Unit = {
@@ -53,17 +54,17 @@ object TimeQ {
     val interleave = sys.env.get("TIMEQ_INTERLEAVE").contains("1")
     def timeOne(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                i: Int): (Double, Double, Long, Long) = {
+                i: Int): (Double, Double, Long, Long, Long) = {
       spark.sparkContext.setJobDescription(s"$name run$i")
       if (verbose && i == n) stages.clear()
       val (c0, b0, s0) = (cpuNs.get, shufB.get, nStages.get)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
+      val rows = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(200) // let stage-completed events drain
-      (wall, (cpuNs.get - c0) / 1e9, shufB.get - b0, nStages.get - s0)
+      (wall, (cpuNs.get - c0) / 1e9, shufB.get - b0, nStages.get - s0, rows)
     }
-    val sweepStats: Map[String, Seq[(Double, Double, Long, Long)]] =
+    val sweepStats: Map[String, Seq[(Double, Double, Long, Long, Long)]] =
       if (interleave)
         (1 to n).flatMap(i => names.map(name =>
           name -> timeOne(name, graft.SparkEntry.queries(name), i)))
@@ -79,7 +80,7 @@ object TimeQ {
       val cpuMed = stats.map(_._2).sorted.apply(n / 2)
       val last = stats.last
       println(f"[timeq] $name%-28s median=$med%7.3f cpuMed=$cpuMed%7.3f " +
-        f"shufB=${last._3}%10d stages=${last._4}%3d runs=${ts.map(t => f"$t%.3f").mkString(",")}")
+        f"shufB=${last._3}%10d stages=${last._4}%3d rows=${last._5}%d runs=${ts.map(t => f"$t%.3f").mkString(",")}")
       if (verbose) stages.forEach(s => println(s"[timeq] $name $s"))
     }
     val arts = graft.SparkEntry.artifactBreakdown(spark).toSeq.sortBy(-_._2)

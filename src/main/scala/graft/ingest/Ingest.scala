@@ -24,8 +24,13 @@ object Ingest {
     * single largest CPU sink of the bench. Now: `toInternalRdd`
     * (UnsafeRows straight from the executed sort), zipWithIndex, and an
     * `UnsafeProjection` that appends the ordinal — no external object is
-    * ever built, and the persisted intermediate holds compact UnsafeRow
-    * copies instead of object graphs.
+    * ever built.
+    *
+    * Nothing is persisted: zipWithIndex's count job and the materializing
+    * job share the sort's shuffle dependency, so the second job skips the
+    * map stage and only re-reads and re-sorts the shuffled rows. The
+    * projection consumes each row as it arrives, so the scan's reused
+    * row object needs no copy.
     *
     * The ids are identical to what the global window would produce
     * (dense, 0-based, ordered by `sortCols`); callers must pass a total
@@ -38,24 +43,17 @@ object Ingest {
     val sorted = df.orderBy(sortCols: _*)
     val schema = StructType(
       sorted.schema.fields :+ StructField(idCol, LongType, nullable = false))
-    // persist the sorted rows: zipWithIndex's partition-count job and the
-    // materializing job would otherwise EACH run the reduce-side sort
-    // (doubling the ingest sort stage); the cache is LRU-evicted, and
-    // callers persist/write the reader output anyway. The scan reuses the
-    // row object per partition — copy() before caching.
-    val sortedRdd = org.apache.spark.sql.graftbridge.RddBridge
-      .toInternalRdd(sorted).map(_.copy())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rows: org.apache.spark.rdd.RDD[InternalRow] =
-      sortedRdd.zipWithIndex().mapPartitions { it =>
-        val joined = new JoinedRow
-        val ord = new GenericInternalRow(1)
-        val proj = UnsafeProjection.create(schema)
-        it.map { case (r, i) =>
-          ord.update(0, i)
-          proj(joined(r, ord)): InternalRow
+      org.apache.spark.sql.graftbridge.RddBridge.toInternalRdd(sorted)
+        .zipWithIndex().mapPartitions { it =>
+          val joined = new JoinedRow
+          val ord = new GenericInternalRow(1)
+          val proj = UnsafeProjection.create(schema)
+          it.map { case (r, i) =>
+            ord.update(0, i)
+            proj(joined(r, ord)): InternalRow
+          }
         }
-      }
     org.apache.spark.sql.graftbridge.RddBridge
       .fromInternalRdd(spark, rows, schema)
   }

@@ -39,13 +39,19 @@ private[streaming] object BatchReplay {
     * never times out. Timeout setters are accepted and ignored, as in
     * Spark's batch execution of `flatMapGroupsWithState`, which fires no
     * timeouts: a group function that sets an idle timeout runs here
-    * exactly as it does in a batch query. */
+    * exactly as it does in a batch query. `update(null)` throws
+    * `IllegalArgumentException`, as Spark's `GroupStateImpl` does; use
+    * `remove()` to clear the state. */
   final class ReplayState[S] extends GroupState[S] {
     private var v: Option[S] = None
     override def exists: Boolean = v.isDefined
     override def get: S = v.get
     override def getOption: Option[S] = v
-    override def update(s: S): Unit = { v = Option(s) }
+    override def update(s: S): Unit = {
+      if (s == null)
+        throw new IllegalArgumentException("'null' is not a valid state value")
+      v = Some(s)
+    }
     override def remove(): Unit = { v = None }
     override def hasTimedOut: Boolean = false
     override def setTimeoutDuration(durationMs: Long): Unit = ()

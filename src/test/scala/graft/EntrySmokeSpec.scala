@@ -76,4 +76,14 @@ class EntrySmokeSpec extends SparkSpec {
     assert(again.filter(col(EventType) === Enter).head().isNullAt(
       again.schema.fieldIndex(AttrReceiver)))
   }
+
+  test("Verify.rowsHash ignores row order and counts duplicate rows") {
+    val rows = Seq((1L, "x"), (2L, "y"), (3L, null)).toDF("k", "v")
+    val (n, h) = Verify.rowsHash(rows)
+    assert(n == 3)
+    assert(Verify.rowsHash(rows.orderBy(col("k").desc).repartition(3)) == ((3L, h)))
+    val dup = Verify.rowsHash(rows.union(rows.filter(col("k") === 1L)))
+    assert(dup._1 == 4 && dup._2 != h)
+    assert(Verify.rowsHash(rows.filter(lit(false))) == ((0L, 0L)))
+  }
 }

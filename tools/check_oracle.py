@@ -1,15 +1,16 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's correctness gate: for each query dir under
-outDir, run the matching oracle SQL (oracle_sql.json) in DuckDB against the
-sf parquet tables, then compare to the Spark parquet dump (columns sorted by
-name, rows sorted, values compared with small float tolerance).
+"""Local replica of the driver's correctness gate: for each query in
+oracle_sql.json, run its oracle SQL in DuckDB against the sf parquet tables,
+then compare to the Spark parquet dump under outDir (columns sorted by name,
+rows sorted, values compared with small float tolerance). A dump directory
+with no oracle entry fails with NO_ORACLE.
 
 Column types are checked before values (DTYPE): a DuckDB HUGEINT or DECIMAL
 result column fails, and so does an integral column on one side against a
 floating one on the other. Types come from DuckDB's result types and the
 Parquet schema of the Spark dump, not from pandas, which reads nullable ints
 and HUGEINT as float64 and would hide both."""
-import sys, json, glob, os
+import sys, json, glob, os, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -71,15 +72,13 @@ for t in "region nation customer supplier part orders lineitem events documents 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 results = {}
 oracle_secs = {}
-import time
-for name, sql in sorted(oracle.items()):
-    if only and name not in only: continue
-    if exclude and name in exclude: continue
+
+
+def check(name, sql):
+    """The verdict for one query: OK, or the first failure found."""
     pdir = f"{outdir}/{name}"
     if not os.path.isdir(pdir):
-        results[name] = "MISSING_SPARK_OUTPUT"
-        print(f"[progress] {name}: {results[name]}", flush=True)
-        continue
+        return "MISSING_SPARK_OUTPUT"
     try:
         files = sorted(glob.glob(f"{pdir}/*.parquet"))
         spark_df = pd.concat([pd.read_parquet(f) for f in files])
@@ -90,21 +89,18 @@ for name, sql in sorted(oracle.items()):
         duck_df = rel.fetchdf()
         oracle_secs[name] = time.time() - t0
     except Exception as e:
-        results[name] = f"ERROR: {str(e)[:200]}"
-        print(f"[progress] {name}: {results[name]}", flush=True)
-        continue
+        return f"ERROR: {str(e)[:200]}"
     s = spark_df.reindex(sorted(spark_df.columns), axis=1)
     d = duck_df.reindex(sorted(duck_df.columns), axis=1)
     if list(s.columns) != list(d.columns):
-        results[name] = f"SCHEMA: spark={list(s.columns)} duck={list(d.columns)}"; continue
+        return f"SCHEMA: spark={list(s.columns)} duck={list(d.columns)}"
     err = dtype_error(spark_schema, duck_types)
     if err:
-        results[name] = err; continue
+        return err
     if len(s) != len(d):
-        results[name] = f"ROWS: spark={len(s)} duck={len(d)}"; continue
+        return f"ROWS: spark={len(s)} duck={len(d)}"
     s = s.sort_values(by=list(s.columns)).reset_index(drop=True)
     d = d.sort_values(by=list(d.columns)).reset_index(drop=True)
-    ok = True
     for c in s.columns:
         sv, dv = s[c], d[c]
         if np.issubdtype(sv.dtype, np.floating) or np.issubdtype(dv.dtype, np.floating):
@@ -118,10 +114,16 @@ for name, sql in sorted(oracle.items()):
                 bad = sv.astype(str) != dv.astype(str)
         if bad.any():
             i = bad.idxmax()
-            results[name] = f"VALUE col={c} row={i}: spark={s[c][i]!r} duck={d[c][i]!r} (n_bad={bad.sum()})"
-            ok = False; break
-    if ok:
-        results[name] = f"OK ({len(s)} rows)"
+            return f"VALUE col={c} row={i}: spark={s[c][i]!r} duck={d[c][i]!r} (n_bad={bad.sum()})"
+    return f"OK ({len(s)} rows)"
+
+
+# a dumped query with no oracle entry is never compared: fail it
+dumped = {e.name for e in os.scandir(outdir) if e.is_dir()}
+for name in sorted(set(oracle) | dumped):
+    if only and name not in only: continue
+    if exclude and name in exclude: continue
+    results[name] = check(name, oracle[name]) if name in oracle else "NO_ORACLE"
     print(f"[progress] {name}: {results[name]}"
           + (f" [{oracle_secs[name]:.1f}s oracle]" if name in oracle_secs else ""),
           flush=True)

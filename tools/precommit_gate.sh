@@ -1,6 +1,7 @@
 #!/bin/bash
 # Cheap standing pre-commit gate (round 11, verdict item 3): any commit
-# that touches SparkEntry.queries MUST pass this first. It is the
+# that touches the registry (src/main/scala/graft/registry, one Case per
+# query with its oracle) MUST pass this first. It is the
 # minutes-scale version of the full round gate — the r10 regression
 # (two registry rows committed after the gates ran, one of which could
 # not even execute) would have been caught here.
@@ -25,7 +26,7 @@ fi
 
 echo "[precommit] duckdb oracle compare"
 python3 tools/check_oracle.py "$SF" "$OUT" > "$OUT.oracle.log" 2>&1 \
-  || { grep -E "NON-OK|MISSING|ERROR|SCHEMA|ROWS|HASH" "$OUT.oracle.log" | head -20; exit 1; }
+  || { grep -E "NON-OK|MISSING|NO_ORACLE|ERROR|SCHEMA|DTYPE|ROWS|VALUE" "$OUT.oracle.log" | head -20; exit 1; }
 grep -E "^[0-9]+/[0-9]+ OK" "$OUT.oracle.log"
 
 echo "[precommit] PlanGuardSpec"

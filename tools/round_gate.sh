@@ -16,7 +16,7 @@ REC=gates/GATE_r${ROUND}.md
 # The gate record binds to EXACTLY one commit (round-10 postmortem: two
 # registry rows landed after the gate ran and shipped red). Refuse to
 # run on a dirty tree — a PASS must be citable for `git rev-parse HEAD`
-# and nothing else; later commits touching SparkEntry.queries must
+# and nothing else; later commits touching the registry must
 # re-run tools/precommit_gate.sh (or this gate) before snapshot.
 if [ -n "$(git status --porcelain -- src build.sbt tools)" ]; then
   echo "[round-gate] REFUSING: working tree dirty under src/tools —"
@@ -53,7 +53,7 @@ registry at sf0.1, both engines, measured-heavy rows on the
 deterministic quarter-prefix slice (tools/sf01_gate.sh; nothing
 skipped). Run $(date -u +%Y-%m-%dT%H:%M:%SZ) at commit
 \`$(git rev-parse HEAD)\` (clean tree — this record covers that commit
-and ONLY that commit; any later change to SparkEntry.queries requires
+and ONLY that commit; any later change to the registry requires
 a precommit_gate.sh re-run before snapshot).
 EOF
 
