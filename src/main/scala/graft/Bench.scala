@@ -52,7 +52,7 @@ object Bench {
   // Representative subset across families: TPC-H-ish, trace enrichment /
   // analysis, dedup/LSH, ANN, text/curation, graph. Keep ~30 names so the
   // printed line stays ~1 KB.
-  private val headline: Seq[String] = Seq(
+  private[graft] val headline: Seq[String] = Seq(
     "q1_pricing", "q3_topk", "q5_region_revenue",
     "trace_match", "trace_inc", "trace_cct", "trace_time_profile",
     "trace_flat_profile", "comm_matrix", "trace_critical_path",

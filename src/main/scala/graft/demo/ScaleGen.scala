@@ -209,7 +209,7 @@ object ScaleBench {
   /** sf1-tiling replicates these fixtures' small value vocabulary, so
     * their true result cardinality is quadratic in the tile count —
     * running them at sf1 measures output size, not the plan. */
-  private val outputBoundAtSf1 = Set(
+  private[graft] val outputBoundAtSf1 = Set(
     "fuzzy_exact", "fuzzy_link", "fuzzy_exact_incr", "fuzzy_link_incr",
     "fuzzy_names", "fuzzy_sorted")
 

@@ -1,8 +1,8 @@
 package graft.scale
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Deduplication operators for corpus curation at 100 TB scale.
   *
@@ -740,206 +740,113 @@ object Dedup {
       .filter(col("cont_a") >= minContainment || col("cont_b") >= minContainment)
       .select(col("a"), col("b"), col("cont_a"), col("cont_b"))
 
+  /** EXACT threshold-Jaccard self-join over `docs`:
+    * [[jaccardPrefixIncremental]] over an empty index, so every pair is
+    * new×new and the plan is that probe's positional-filtered prefix
+    * self-join plus verify (the history branches are pruned at plan
+    * time). Returns (a, b, inter, sza, szb) with a < b. */
+  def jaccardPrefixPairs(docs: DataFrame, shingleK: Int = 3,
+                         tauNum: Int = 1, tauDen: Int = 5,
+                         textCol: String = "text",
+                         idCol: String = "doc_id"): DataFrame = {
+    val (dfTab, docIndex) = jpEmptyIndex(docs, idCol)
+    jaccardPrefixIncremental(docs, dfTab, docIndex, shingleK, tauNum,
+      tauDen, textCol, idCol)
+  }
+
+  /** Persistable prefix-filter index for [[jaccardPrefixIncremental]]
+    * — the day-2 ingest artifact (the exact-Jaccard analogue of
+    * [[bandTable]]): [[jaccardPrefixIndexAppend]] of `docs` onto an
+    * empty index. Per document its full sorted 60-bit shingle-hash set,
+    * size, and τ-prefix; plus the corpus df table that DEFINES the
+    * canonical token order the prefixes were ranked under. Persist
+    * BOTH per corpus snapshot. Returns (dfTab: (h, df),
+    * docIndex: (id, set, sz, prefix)). */
+  def jaccardPrefixIndex(docs: DataFrame, shingleK: Int = 3,
+                         tauNum: Int = 1, tauDen: Int = 5,
+                         textCol: String = "text",
+                         idCol: String = "doc_id"): (DataFrame, DataFrame) = {
+    val (dfTab, docIndex) = jpEmptyIndex(docs, idCol)
+    jaccardPrefixIndexAppend(docs, dfTab, docIndex, shingleK, tauNum,
+      tauDen, textCol, idCol)
+  }
+
+  /** An empty (dfTab, docIndex) pair as local relations, with `docs`'
+    * id type: Catalyst's PropagateEmptyRelation prunes every history
+    * branch of a probe or append over it, leaving the batch plan. */
+  private def jpEmptyIndex(docs: DataFrame,
+                           idCol: String): (DataFrame, DataFrame) = {
+    val hs = ArrayType(LongType)
+    (emptyRelation(docs, "h" -> LongType, "df" -> LongType),
+      emptyRelation(docs, idCol -> docs.select(col(idCol)).schema.head.dataType,
+        "set" -> hs, "sz" -> LongType, "prefix" -> hs))
+  }
+
+  private def emptyRelation(like: DataFrame,
+                            fields: (String, DataType)*): DataFrame =
+    like.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[Row](),
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
+
   /** EXACT threshold-Jaccard similarity join via PREFIX FILTERING — the
     * AllPairs/PPJoin family (Bayardo et al. 2007 "Scaling Up All Pairs
-    * Similarity Search"; Xiao et al. 2008 PPJoin). Unlike the shingle-df
-    * cap in [[ngramJaccardPairs]] (which trades recall for boundedness),
-    * prefix filtering is LOSSLESS: with every document's shingle set
-    * ordered by a global canonical order (document frequency ascending,
-    * shingle ascending), two sets with J(A,B) ≥ τ MUST share a token in
-    * their first |X| − ⌈τ·|X|⌉ + 1 tokens, so the inverted index is built
-    * over prefixes only — and the prefixes hold each set's RAREST tokens,
-    * exactly the ones with short posting lists. The full result set is
-    * still exact: candidates are re-verified against the complete sets.
+    * Similarity Search"; Xiao et al. 2008 PPJoin) — in its day-2 shape:
+    * a NEW batch joins the persisted [[jaccardPrefixIndex]] (and itself)
+    * WITHOUT touching the historical corpus. Emits exactly the verified
+    * pairs a full-corpus run would emit that touch ≥ 1 new document
+    * (a < b, (a, b, inter, sza, szb)); over an empty index that is every
+    * pair of the batch ([[jaccardPrefixPairs]]).
     *
-    * The threshold is a rational `tauNum/tauDen`, and verification uses
-    * the integer cross-multiplication
-    * `tauDen·|A∩B| ≥ tauNum·(|A|+|B|−|A∩B|)` — no float comparison
-    * anywhere, so the pair set is bit-identical across engines.
+    * Unlike the shingle-df cap in [[ngramJaccardPairs]] (which trades
+    * recall for boundedness), prefix filtering is LOSSLESS: with every
+    * document's shingle set ordered by one global order, two sets with
+    * J(A,B) ≥ τ MUST share a token in their first |X| − ⌈τ·|X|⌉ + 1
+    * tokens, so the inverted index is built over prefixes only — and
+    * rare-first ranking (document frequency ascending, hash ascending)
+    * puts each set's RAREST tokens, the short posting lists, there.
+    * Candidates are re-verified against the complete sets with the
+    * integer cross-multiplication `tauDen·|A∩B| ≥ tauNum·(|A|+|B|−|A∩B|)`
+    * (the threshold is the rational `tauNum/tauDen`) — no float
+    * comparison anywhere, so the pair set is bit-identical across
+    * engines.
+    *
+    * Losslessness under a FROZEN order: new docs rank their shingles by
+    * the INDEX's df table; shingles the index has not seen rank by
+    * their NEW-BATCH df. Any extension of the day-1 order is consistent
+    * for every pair side — historical docs contain no unseen shingles,
+    * so their persisted prefixes are unchanged under it, and all new
+    * docs rank by the same extended key — and batch df (not 0) keeps a
+    * novel boilerplate shingle viral in the batch out of the prefixes.
+    * Over an empty index the order is the batch's own (df, hash) order.
+    * The output is EXACT regardless of how the frozen order skews
+    * prefix lengths. New-batch ids must be disjoint from index ids.
     *
     * Scale shape: shingles are HASHED to 60-bit longs at the scan
     * (md5Hash60 — replicable in any engine, so a collision is shared and
     * the result stays bit-identical; at 60 bits a corpus-wide collision
     * is ~10⁻⁸ even at 10⁸ distinct shingles). Then: a df aggregation,
-    * two per-document windows (set size, canonical rank), a self-join
-    * restricted to prefix rows (rare tokens → short posting lists; never
-    * all-pairs), and a candidate-bounded verification joining each pair
-    * to its two SORTED long-array sets — the intersection is one
-    * allocation-free merge ([[graft.functions.SortedIntersectCount]])
-    * per candidate instead of a per-row hash set over string arrays
-    * (~4× less shuffle, no per-pair allocation; that string formulation
-    * was the top warm-time outlier of the whole bench). The prefix
-    * bound holds for ANY consistent global order, so ranking by
-    * (df, hash) instead of (df, string) changes candidates but never
-    * the verified result. Document shingle sets are row-bounded (a
-    * document's own size), so the arrays never blow a task. All
-    * shuffles key on shingle-hash or doc id; no global ordering or
-    * driver state. Returns (a, b, inter, sza, szb) — the Jaccard value
-    * itself is presentation (inter / (sza+szb−inter)). */
-  def jaccardPrefixPairs(docs: DataFrame, shingleK: Int = 3,
-                         tauNum: Int = 1, tauDen: Int = 5,
-                         textCol: String = "text",
-                         idCol: String = "doc_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
-      s"threshold must be a rational in (0,1]: $tauNum/$tauDen")
-    val sh = Shingles.wordShingles(docs, shingleK, textCol, idCol)
-      .select(col(idCol), TextOps.md5Hash60(col("shingle"), 0).as("h"))
-      .distinct()
-      // three consumers (prefix build, verify a-side, verify b-side):
-      // truncate lineage once instead of recomputing the tokenize+distinct
-      .localCheckpoint()
-    val dfTab = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val ranked = sh.join(dfTab, Seq("h"))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy(col(idCol))))
-      .withColumn("r", row_number().over(Window.partitionBy(col(idCol))
-        .orderBy(col("df"), col("h"))))
-    // prefix length |X| − ⌈τ|X|⌉ + 1 with ⌈p·sz/q⌉ as (p·sz+q−1) div q —
-    // integer-exact, no binary-fraction ceil trap. Rows carry (r, sz)
-    // for the positional filter below.
-    val prefix = ranked.filter(col("r") <=
-        col("sz") - expr(s"($tauNum * sz + ${tauDen - 1}) div $tauDen") + 1)
-      .select(col(idCol), col("h"), col("r"), col("sz"))
-    // true self-join (renames above the shared subtree) so the prefix
-    // scan+exchange canonicalizes identically and is computed once.
-    //
-    // POSITIONAL FILTER (PPJoin, Xiao et al. 2008 §3.2) on each
-    // generating token: both sets are sorted by the same global
-    // canonical order, so every shared token sits at rank ≥ the FIRST
-    // shared token's rank in each set — hence
-    // inter ≤ min(sza − ra, szb − rb) + 1 at that first shared token,
-    // and J ≥ τ needs inter·(τn+τd) ≥ τn·(sza+szb). The first shared
-    // token of a qualifying pair is always inside both prefixes (it has
-    // the lowest rank of the shared tokens, and prefix filtering
-    // guarantees SOME shared token in both prefixes), so dropping
-    // generating rows that fail the bound is LOSSLESS: the qualifying
-    // pair survives via its first shared token's row. This prunes the
-    // near-threshold candidate mass BEFORE the verify join ships each
-    // pair's full sorted-set payload — the term that measured ~700 GB
-    // at x100 (NOTES_r13) — while the verified pair set is unchanged.
-    val cand = prefix.as("x").join(prefix.as("y"),
-        col("x.h") === col("y.h") &&
-        col(s"x.$idCol") < col(s"y.$idCol") &&
-        (least(col("x.sz") - col("x.r"), col("y.sz") - col("y.r")) + 1) *
-          lit(tauNum + tauDen) >= (col("x.sz") + col("y.sz")) * lit(tauNum))
-      .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
-      .distinct()
-    val sets = sh.groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("h"))).as("set"),
-        count(lit(1)).as("sz"))
-    def verify(c: DataFrame): DataFrame = c
-      .join(sets.select(col(idCol).as("a"), col("set").as("set_a"),
-        col("sz").as("sza")), Seq("a"))
-      .join(sets.select(col(idCol).as("b"), col("set").as("set_b"),
-        col("sz").as("szb")), Seq("b"))
-      .withColumn("inter", graft.functions.VecMath.sortedIntersectCount(
-        col("set_a"), col("set_b")))
-      .filter(col("inter") * tauDen >=
-        (col("sza") + col("szb") - col("inter")) * tauNum)
-      .select(col("a"), col("b"), col("inter"), col("sza"), col("szb"))
-    val batchBytes = graft.util.GraftConfig
-      .getOption("jaccard_verify_batch_bytes").asInstanceOf[Long]
-    if (batchBytes <= 0L) verify(cand)
-    else {
-      // PAYLOAD-CAPPED VERIFY (single-box escape hatch; see the config
-      // key's scaladoc): the verify exchange carries each candidate
-      // pair's two sorted-set arrays, so its volume is
-      // ~pairs × (sz_a + sz_b) × 8 B — measured ~700 GB at the x100
-      // Zipf corpus, over LOCAL shuffle disk. Partition candidates by
-      // pair hash into the fewest batches that keep each batch's
-      // payload under the budget and verify them SEQUENTIALLY; each
-      // batch's result (verified pairs only — tiny) is materialized
-      // before the next starts, so in-flight shuffle never exceeds the
-      // budget. The union over batches is exactly verify(cand) for any
-      // batch count (the hash partitions the candidate set).
-      val c = cand.localCheckpoint()
-      val nPairs = c.count()
-      val avgSz = sets.agg(avg(col("sz"))).head match {
-        case row if row.isNullAt(0) => 0.0
-        case row => row.getDouble(0)
-      }
-      val n = math.max(1L,
-        math.ceil(nPairs * 2.0 * avgSz * 8.0 / batchBytes).toLong).toInt
-      if (n == 1) verify(c)
-      else {
-        val setsC = sets.localCheckpoint() // reused by every batch
-        def verifyC(cc: DataFrame): DataFrame = cc
-          .join(setsC.select(col(idCol).as("a"), col("set").as("set_a"),
-            col("sz").as("sza")), Seq("a"))
-          .join(setsC.select(col(idCol).as("b"), col("set").as("set_b"),
-            col("sz").as("szb")), Seq("b"))
-          .withColumn("inter", graft.functions.VecMath.sortedIntersectCount(
-            col("set_a"), col("set_b")))
-          .filter(col("inter") * tauDen >=
-            (col("sza") + col("szb") - col("inter")) * tauNum)
-          .select(col("a"), col("b"), col("inter"), col("sza"), col("szb"))
-        val parts = (0 until n).map { i =>
-          val part = verifyC(c.filter(
-            pmod(xxhash64(col("a"), col("b")), lit(n)) === i))
-            .localCheckpoint() // materializes this batch's verification
-          // the batch's verify-shuffle files are unreachable now;
-          // ContextCleaner frees them on driver GC — nudge it so disk
-          // is reclaimed BEFORE the next batch writes its own
-          System.gc()
-          part
-        }
-        parts.reduce(_.unionByName(_))
-      }
-    }
-  }
-
-  /** Persistable prefix-filter index for [[jaccardPrefixPairs]] — the
-    * day-2 ingest artifact (the exact-Jaccard analogue of
-    * [[bandTable]]): per historical document its full sorted 60-bit
-    * shingle-hash set, size, and τ-prefix; plus the corpus df table
-    * that DEFINES the canonical token order the prefixes were ranked
-    * under. Persist BOTH per corpus snapshot:
-    * [[jaccardPrefixIncremental]] then dedups a new batch against them
-    * without re-shingling one historical document.
-    * Returns (dfTab: (h, df), docIndex: (id, set, sz, prefix)). */
-  def jaccardPrefixIndex(docs: DataFrame, shingleK: Int = 3,
-                         tauNum: Int = 1, tauDen: Int = 5,
-                         textCol: String = "text",
-                         idCol: String = "doc_id"): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
-      s"threshold must be a rational in (0,1]: $tauNum/$tauDen")
-    val sh = Shingles.wordShingles(docs, shingleK, textCol, idCol)
-      .select(col(idCol), TextOps.md5Hash60(col("shingle"), 0).as("h"))
-      .distinct()
-      .localCheckpoint()
-    val dfTab = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val ranked = sh.join(dfTab, Seq("h"))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy(col(idCol))))
-      .withColumn("r", row_number().over(Window.partitionBy(col(idCol))
-        .orderBy(col("df"), col("h"))))
-      .withColumn("in_prefix", col("r") <=
-        col("sz") - expr(s"($tauNum * sz + ${tauDen - 1}) div $tauDen") + 1)
-    val docIndex = ranked.groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("h"))).as("set"),
-        count(lit(1)).as("sz"),
-        sort_array(collect_list(when(col("in_prefix"), col("h"))))
-          .as("prefix"))
-    (dfTab, docIndex)
-  }
-
-  /** Incremental exact threshold-Jaccard dedup — the day-2 shape: a NEW
-    * batch joins against the persisted [[jaccardPrefixIndex]] (and
-    * itself) WITHOUT touching the historical corpus. Emits exactly the
-    * verified pairs a full-corpus [[jaccardPrefixPairs]] run would emit
-    * that touch ≥ 1 new document (a < b, same (a, b, inter, sza, szb)
-    * schema) — proved by the equivalence property spec.
-    *
-    * Losslessness under a FROZEN order: new docs rank their shingles by
-    * the INDEX's df table (shingles unseen on day 1 get df 0 — rarest
-    * first, ties by hash). The prefix bound holds for any total order
-    * shared by the two sides of a pair, not just the current-corpus df
-    * order — both sides of every candidate pair (new↔old and new↔new)
-    * rank by the same frozen (day-1 df, hash) order, so every
-    * J ≥ τ pair still meets in ≥ 1 prefix token. Verification is the
-    * same integer cross-multiplication over full sets, so the output
-    * pair set is EXACT regardless of how the frozen order skews prefix
-    * lengths. New-batch ids must be disjoint from index ids.
+    * two per-document windows (set size, rank), and one candidate join
+    * on prefix rows (rare tokens → short posting lists; never
+    * all-pairs) of the batch prefixes against the batch's and the
+    * stored ones, whose condition splits in two:
+    *  - new×new: the x < y cut and the PPJoin POSITIONAL FILTER (Xiao et al. 2008
+    *    §3.2): both sides rank under the same order, so every shared
+    *    token sits at rank ≥ the first shared token's rank in each set,
+    *    hence inter ≤ min(sza − ra, szb − rb) + 1 there, and J ≥ τ needs
+    *    inter·(τn+τd) ≥ τn·(sza+szb). The first shared token of a
+    *    qualifying pair lies in both prefixes, so dropping generating
+    *    rows that fail the bound is LOSSLESS; it prunes the
+    *    near-threshold candidate mass before the verify join ships each
+    *    pair's set payload (~700 GB at x100 without it, NOTES_r13);
+    *  - new×history: any stored prefix row but the doc's own (stored
+    *    prefixes carry no ranks, so no positional filter).
+    * Verification joins each candidate to its two SORTED long-array
+    * sets — one allocation-free merge
+    * ([[graft.functions.SortedIntersectCount]]) per pair. Document sets
+    * are row-bounded (a document's own size). All shuffles key on
+    * shingle hash or doc id; no global ordering or driver state.
+    * `jaccard_verify_batch_bytes` caps the verify payload in flight
+    * (see [[graft.util.GraftConfig]]).
     *
     * Streaming shape: per-doc ranking needs a window, which streams
     * don't allow, so the deployed form is `foreachBatch` calling this
@@ -952,49 +859,38 @@ object Dedup {
                                tauNum: Int = 1, tauDen: Int = 5,
                                textCol: String = "text",
                                idCol: String = "doc_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
-      s"threshold must be a rational in (0,1]: $tauNum/$tauDen")
-    val sh = Shingles.wordShingles(newDocs, shingleK, textCol, idCol)
-      .select(col(idCol), TextOps.md5Hash60(col("shingle"), 0).as("h"))
+    val (sh, _, ranked) =
+      jpRank(newDocs, dfTab, shingleK, tauNum, tauDen, textCol, idCol)
+    val prefix = ranked.filter(col("in_prefix"))
+      .select(col(idCol), col("h"), col("r"), col("sz"))
+    // One candidate join of the batch prefixes against the stored and
+    // the batch prefixes. Stored prefixes carry no ranks, so a null `r`
+    // marks a new×history row, which pairs with any stored doc but its
+    // own; a new×new row takes the x < y cut and the positional filter.
+    // A new×history pair is only ever found as (new x, stored y), so
+    // the distinct runs before the pair is put in a < b order. Over an
+    // empty index this is a true self-join (renames above the shared
+    // subtree), so the prefix scan+exchange canonicalizes identically
+    // and runs once.
+    val others = docIndex
+      .select(col(idCol), explode(col("prefix")).as("h"),
+        lit(null).cast("int").as("r"), lit(null).cast("long").as("sz"))
+      .unionByName(prefix)
+    val cand = prefix.as("x").join(others.as("y"),
+        col("x.h") === col("y.h") &&
+        (col("y.r").isNull && col(s"x.$idCol") =!= col(s"y.$idCol") ||
+          col(s"x.$idCol") < col(s"y.$idCol") &&
+          (least(col("x.sz") - col("x.r"), col("y.sz") - col("y.r")) + 1) *
+            lit(tauNum + tauDen) >= (col("x.sz") + col("y.sz")) * lit(tauNum)))
+      .select(col(s"x.$idCol").as("x"), col(s"y.$idCol").as("y"))
       .distinct()
-      .localCheckpoint()
-    // Order extension for index-unseen shingles: rank them by their
-    // NEW-BATCH df, not 0. Any extension of the day-1 order is
-    // consistent for every pair side (historical docs contain no unseen
-    // shingles, so their persisted prefixes are unchanged under the
-    // extension; new docs all rank by the same extended key), so
-    // losslessness is preserved — and a novel boilerplate shingle viral
-    // in the batch ranks COMMON (long posting list kept out of
-    // prefixes) instead of rarest-first, which with df=0 would have
-    // put the worst possible token into every prefix.
-    val batchDf = sh.groupBy(col("h")).agg(count(lit(1)).as("bdf"))
-    val ranked = sh.join(dfTab, Seq("h"), "left")
-      .join(batchDf, Seq("h"))
-      .withColumn("df0", coalesce(col("df"), col("bdf")))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy(col(idCol))))
-      .withColumn("r", row_number().over(Window.partitionBy(col(idCol))
-        .orderBy(col("df0"), col("h"))))
-    val newPrefix = ranked.filter(col("r") <=
-        col("sz") - expr(s"($tauNum * sz + ${tauDen - 1}) div $tauDen") + 1)
-      .select(col(idCol), col("h"))
-    val newSets = sh.groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("h"))).as("set"),
-        count(lit(1)).as("sz"))
-    // candidates: new prefixes against (index ∪ new) prefixes — work is
-    // |new bands| vs the posting lists, proportional to the batch
-    val allPrefix = docIndex
-      .select(col(idCol), explode(col("prefix")).as("h"))
-      .unionByName(newPrefix)
-    val cand = newPrefix.as("x")
-      .join(allPrefix.as("y"),
-        col("x.h") === col("y.h") && col(s"x.$idCol") =!= col(s"y.$idCol"))
-      .select(least(col(s"x.$idCol"), col(s"y.$idCol")).as("a"),
-        greatest(col(s"x.$idCol"), col(s"y.$idCol")).as("b"))
-      .distinct()
+      .select(least(col("x"), col("y")).as("a"),
+        greatest(col("x"), col("y")).as("b"))
     val sets = docIndex.select(col(idCol), col("set"), col("sz"))
-      .unionByName(newSets)
-    cand
+      .unionByName(sh.groupBy(col(idCol))
+        .agg(sort_array(collect_list(col("h"))).as("set"),
+          count(lit(1)).as("sz")))
+    def verify(c: DataFrame, sets: DataFrame): DataFrame = c
       .join(sets.select(col(idCol).as("a"), col("set").as("set_a"),
         col("sz").as("sza")), Seq("a"))
       .join(sets.select(col(idCol).as("b"), col("set").as("set_b"),
@@ -1004,6 +900,44 @@ object Dedup {
       .filter(col("inter") * tauDen >=
         (col("sza") + col("szb") - col("inter")) * tauNum)
       .select(col("a"), col("b"), col("inter"), col("sza"), col("szb"))
+    val batchBytes = graft.util.GraftConfig
+      .getOption("jaccard_verify_batch_bytes").asInstanceOf[Long]
+    if (batchBytes <= 0L) verify(cand, sets)
+    else {
+      // PAYLOAD-CAPPED VERIFY (single-box escape hatch; see the config
+      // key): the verify exchange carries each candidate pair's two
+      // sorted-set arrays, ~pairs × (sz_a + sz_b) × 8 B. Partition
+      // candidates by pair hash into the fewest batches that keep each
+      // batch's payload under the budget and verify them SEQUENTIALLY;
+      // each batch's result (verified pairs only — tiny) is
+      // materialized before the next starts, so in-flight shuffle never
+      // exceeds the budget. The union over batches is exactly
+      // verify(cand) for any batch count (the hash partitions the
+      // candidate set).
+      val c = cand.localCheckpoint()
+      val nPairs = c.count()
+      val avgSz = sets.agg(avg(col("sz"))).head match {
+        case row if row.isNullAt(0) => 0.0
+        case row => row.getDouble(0)
+      }
+      val n = math.max(1L,
+        math.ceil(nPairs * 2.0 * avgSz * 8.0 / batchBytes).toLong).toInt
+      if (n == 1) verify(c, sets)
+      else {
+        val setsC = sets.localCheckpoint() // reused by every batch
+        val parts = (0 until n).map { i =>
+          val part = verify(c.filter(
+            pmod(xxhash64(col("a"), col("b")), lit(n)) === i), setsC)
+            .localCheckpoint() // materializes this batch's verification
+          // the batch's verify-shuffle files are unreachable now;
+          // ContextCleaner frees them on driver GC — nudge it so disk
+          // is reclaimed BEFORE the next batch writes its own
+          System.gc()
+          part
+        }
+        parts.reduce(_.unionByName(_))
+      }
+    }
   }
 
   /** Absorb a (probed) batch into a persisted [[jaccardPrefixIndex]] —
@@ -1029,22 +963,8 @@ object Dedup {
                                textCol: String = "text",
                                idCol: String = "doc_id")
       : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
-      s"threshold must be a rational in (0,1]: $tauNum/$tauDen")
-    val sh = Shingles.wordShingles(batch, shingleK, textCol, idCol)
-      .select(col(idCol), TextOps.md5Hash60(col("shingle"), 0).as("h"))
-      .distinct()
-      .localCheckpoint() // consumers: batch df, ranking, dfTab extension
-    val batchDf = sh.groupBy(col("h")).agg(count(lit(1)).as("bdf"))
-    val ranked = sh.join(dfTab, Seq("h"), "left")
-      .join(batchDf, Seq("h"))
-      .withColumn("df0", coalesce(col("df"), col("bdf")))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy(col(idCol))))
-      .withColumn("r", row_number().over(Window.partitionBy(col(idCol))
-        .orderBy(col("df0"), col("h"))))
-      .withColumn("in_prefix", col("r") <=
-        col("sz") - expr(s"($tauNum * sz + ${tauDen - 1}) div $tauDen") + 1)
+    val (_, batchDf, ranked) =
+      jpRank(batch, dfTab, shingleK, tauNum, tauDen, textCol, idCol)
     val batchIndex = ranked.groupBy(col(idCol))
       .agg(sort_array(collect_list(col("h"))).as("set"),
         count(lit(1)).as("sz"),
@@ -1054,6 +974,35 @@ object Dedup {
       batchDf.join(dfTab, Seq("h"), "left_anti")
         .select(col("h"), col("bdf").as("df")))
     (dfExt, docIndex.unionByName(batchIndex))
+  }
+
+  /** The probe's and the append's shared scan and ranking: distinct
+    * (id, h) shingle hashes of `docs` (checkpointed — the df table,
+    * the ranking and the set build all consume them), their batch df
+    * `bdf`, and per (id, h) row the set size `sz`, the rank `r` under
+    * the (index df, else batch df, hash) order and `in_prefix`: the
+    * first |X| − ⌈τ|X|⌉ + 1 ranks, with ⌈p·sz/q⌉ as (p·sz+q−1) div q —
+    * integer-exact, no binary-fraction ceil trap. */
+  private def jpRank(docs: DataFrame, dfTab: DataFrame, shingleK: Int,
+                     tauNum: Int, tauDen: Int, textCol: String,
+                     idCol: String): (DataFrame, DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
+      s"threshold must be a rational in (0,1]: $tauNum/$tauDen")
+    val sh = Shingles.wordShingles(docs, shingleK, textCol, idCol)
+      .select(col(idCol), TextOps.md5Hash60(col("shingle"), 0).as("h"))
+      .distinct()
+      .localCheckpoint()
+    val batchDf = sh.groupBy(col("h")).agg(count(lit(1)).as("bdf"))
+    val ranked = sh.join(dfTab, Seq("h"), "left")
+      .join(batchDf, Seq("h"))
+      .withColumn("df0", coalesce(col("df"), col("bdf")))
+      .withColumn("sz", count(lit(1)).over(Window.partitionBy(col(idCol))))
+      .withColumn("r", row_number().over(Window.partitionBy(col(idCol))
+        .orderBy(col("df0"), col("h"))))
+      .withColumn("in_prefix", col("r") <=
+        col("sz") - expr(s"($tauNum * sz + ${tauDen - 1}) div $tauDen") + 1)
+    (sh, batchDf, ranked)
   }
 
   /** Shared inverted-index pair pipeline: distinct (doc, shingle) rows,
@@ -1440,165 +1389,65 @@ object Dedup {
     * Returns per doc: tile counts, removed count, surviving word count,
     * and the md5 of the reassembled (kept tiles in order) text — a
     * compact equality witness for the rewritten corpus. */
-  /** EXACT threshold EDIT-DISTANCE self-join (fuzzy dedup / entity
-    * resolution over names, titles, and other short strings): q-gram
-    * count bound (Gravano et al., VLDB 2001) + PREFIX-FILTERED
-    * candidate generation (Ed-Join, Xiao et al., VLDB 2008). One edit
-    * operation destroys at most `q` of a string's |s|−q+1 q-grams —
-    * the rest survive as a BAG (shifts move positions, not contents) —
-    * so ed(s,t) ≤ d implies the q-gram bags share
-    * ≥ max(|s|,|t|)−q+1−q·d grams, and |len(s)−len(t)| ≤ d is
-    * necessary.
-    *
-    * Candidate generation does NOT join on every gram (an inverted
-    * index over raw q-grams melts down on skewed gram distributions:
-    * formulaic names share hot grams, so a hot gram's posting list
-    * cross-multiplies — measured 10⁹+ joined rows on 20 k TPC-H part
-    * names). Instead, the q-gram bag becomes a SET of occurrence-tagged
-    * grams ((g, k) for the k-th occurrence of g — bag intersection =
-    * tagged-set intersection), every string keeps only its first
-    * q·d+1 tagged grams under one global (df, gram) order (rare grams
-    * first), and candidates join on PREFIX grams only. Lossless by the
-    * standard prefix-filter principle: a qualifying pair shares
-    * ≥ t = max(la,lb)−q+1−q·d ≥ 1 tagged grams, and each side's first
-    * n−t+1 ≤ q·d+1 grams must then contain a shared one. The df order
-    * is a performance choice only — ANY shared total order keeps the
-    * filter lossless, but rare-first makes prefix posting lists short.
-    *
-    * Pairs where BOTH sides are shorter than q·(d+1) chars (the bound
-    * can vanish there) come from a separate length-keyed short-bucket
-    * join (≤ q·(d+1) distinct lengths; a string shorter than q has no
-    * grams at all — only the short bucket can hold it). Candidates are
-    * verified with the built-in banded-DP `levenshtein(a, b, maxDist)`
-    * — the result EQUALS the brute-force join (the oracle checks it as
-    * one).
-    *
-    * Scale shape: shuffles key on tagged gram, length, or pair id; the
-    * candidate join touches q·d+1 grams per string, each rare by
-    * construction of the order. `maxGramDf` remains the hard
-    * recall-for-boundedness cap ([[ngramJaccardPairs]]' dial) for
-    * corpora where even prefix grams go viral (the default keeps the
-    * join lossless). No driver state. Returns (a, b, dist ≤ maxDist). */
+  def removeDuplicateTiles(docs: DataFrame, k: Int = 5, minDocs: Int = 2,
+                           textCol: String = "text",
+                           idCol: String = "doc_id"): DataFrame = {
+    val tiles = docs
+      .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
+      .select(col(idCol), col("toks"),
+        explode(sequence(lit(0),
+          expr(s"(size(toks) + ${k - 1}) div $k").cast("int") - 1)).as("idx"))
+      .select(col(idCol), col("idx"),
+        concat_ws(" ", slice(col("toks"), col("idx") * k + 1, lit(k))).as("tile"),
+        least(lit(k), size(col("toks")) - col("idx") * k).as("nw"),
+        (col(idCol) * 1000000L + col("idx")).as("okey"))
+    val keyed = tiles.withColumn("tkey", md5(col("tile")))
+    val stats = keyed.groupBy(col("tkey"))
+      .agg(countDistinct(col(idCol)).as("nd"), min(col("okey")).as("canon"))
+    keyed.join(stats, Seq("tkey"))
+      .withColumn("keep", col("nd") < minDocs || col("okey") === col("canon"))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n_tiles"),
+        sum(when(col("keep"), 0L).otherwise(1L)).as("n_removed"),
+        sum(when(col("keep"), col("nw")).otherwise(0L)).cast("long")
+          .as("kept_words"),
+        md5(concat_ws(" ", transform(
+          array_sort(collect_list(when(col("keep"),
+            struct(col("idx"), col("tile"))))),
+          x => x.getField("tile")))).as("kept_md5"))
+  }
+
+  /** EXACT threshold EDIT-DISTANCE self-join over `docs`:
+    * [[editDistanceIncremental]] over an empty index, so every pair is
+    * new×new (the `s1 < s2` cut) and the history branches are pruned at
+    * plan time. Returns (a, b, dist ≤ maxDist) with a < b. */
   def editDistancePairs(docs: DataFrame, maxDist: Int = 2, q: Int = 2,
-                        textCol: String = "text", idCol: String = "doc_id",
-                        maxGramDf: Int = Int.MaxValue): DataFrame = {
-    val base = edBase(docs, textCol, idCol)
-    edJoin(base, base, self = true, maxDist, q, maxGramDf)
+                        textCol: String = "text",
+                        idCol: String = "doc_id"): DataFrame = {
+    val (dfTab, strIndex, idMap) = edEmptyIndex(docs, textCol, idCol)
+    edIncr(docs, dfTab, strIndex, idMap, self = true, maxDist, q,
+      textCol, idCol)
   }
 
   /** Cross-table twin of [[editDistancePairs]] — record LINKAGE of a
     * noisy table against a canonical one (left id in `a`, right id in
-    * `b`, every pair within `maxDist`). Same lossless q-gram count
-    * filter + short bucket + banded-DP verification; ids need not be
-    * disjoint across tables (no self-pair filter applies). */
+    * `b`, every pair within `maxDist`):
+    * [[editDistanceLinkIncremental]] of `left` against the
+    * [[editDistanceIndex]] of `right`. Ids need not be disjoint across
+    * tables (no self-pair filter applies). */
   def editDistanceLink(left: DataFrame, right: DataFrame, maxDist: Int = 2,
                        q: Int = 2, textCol: String = "text",
-                       idCol: String = "doc_id",
-                       maxGramDf: Int = Int.MaxValue): DataFrame =
-    edJoin(edBase(left, textCol, idCol), edBase(right, textCol, idCol),
-      self = false, maxDist, q, maxGramDf)
-
-  private def edBase(docs: DataFrame, textCol: String,
-                     idCol: String): DataFrame =
-    docs.select(col(idCol).as("id"), col(textCol).as("s"))
-      .withColumn("len", length(col("s")))
-
-  private def edGrams(strs: DataFrame, q: Int, maxGramDf: Int): DataFrame = {
-    val grams = strs.filter(col("len") >= q)
-      .select(col("s"), col("len"), explode(expr(
-        s"transform(sequence(1, len - ${q - 1}), i -> substr(s, i, $q))")).as("g"))
-      .groupBy(col("s"), col("len"), col("g")).agg(count(lit(1)).as("cnt"))
-    if (maxGramDf == Int.MaxValue) grams
-    else grams.join(
-      grams.groupBy("g").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxGramDf).select("g"), Seq("g"))
-  }
-
-  private def edJoin(baseA: DataFrame, baseB: DataFrame, self: Boolean,
-                     maxDist: Int, q: Int, maxGramDf: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist (use exact() for 0)")
-    require(q >= 1, s"q must be >= 1, got $q")
-    val minLong = q * (maxDist + 1) // longer side >= this  =>  bound >= 1
-    val prefLen = q * maxDist + 1   // prefix-filter length per side
-    // ALL pairwise machinery runs over DISTINCT strings — the 100 TB
-    // shape: a short-string column has far fewer distinct values than
-    // rows (64 vs 20 000 on the TPC-H-ish part names), and an id-level
-    // formulation pays the full quadratic id fan-out inside the FILTER
-    // stages; the distinct-string formulation confines it to the
-    // unavoidable output expansion at the very end.
-    val dsA = baseA.select(col("s"), col("len")).distinct().localCheckpoint()
-    val dsB = if (self) dsA
-      else baseB.select(col("s"), col("len")).distinct().localCheckpoint()
-    // occurrence-tagged grams: the k-th occurrence of g is element
-    // (g, k), so bag intersection = tagged-SET intersection
-    def tagged(strs: DataFrame) = edGrams(strs, q, maxGramDf)
-      .select(col("s"), col("len"), col("g"),
-        explode(expr("sequence(1, cnt)")).as("k"))
-    val ta = tagged(dsA)
-    val tb = if (self) ta else tagged(dsB)
-    // one global rare-first order shared by both sides (df is a
-    // performance choice; ANY shared total order stays lossless)
-    val dfTable = (if (self) ta else ta.unionByName(tb))
-      .groupBy(col("g"), col("k")).agg(count(lit(1)).as("__df"))
-    def prefixes(t: DataFrame) = t.join(dfTable, Seq("g", "k"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("s"))
-          .orderBy(col("__df"), col("g"), col("k"))))
-      .filter(col("__rn") <= prefLen)
-      .select(col("s"), col("len"), col("g"), col("k"))
-    val pa = prefixes(ta)
-    val pb = if (self) pa else prefixes(tb)
-    // self-join dedup happens at STRING level; equal strings join the
-    // pair set explicitly below (their ids expand through the x<y cut)
-    val strFilter = if (self) col("s1") < col("s2") else lit(true)
-    val longCand = pa
-      .select(col("s").as("s1"), col("len").as("l1"), col("g"), col("k"))
-      .join(pb.select(col("s").as("s2"), col("len").as("l2"),
-        col("g"), col("k")), Seq("g", "k"))
-      .filter(strFilter &&
-        abs(col("l1") - col("l2")) <= maxDist &&
-        greatest(col("l1"), col("l2")) >= minLong)
-      .select(col("s1"), col("s2")).distinct()
-    // Short bucket: both sides < q·(d+1) chars — the count bound can
-    // vanish there, so key the join on candidate length instead. The
-    // bucket spans ≤ q·(d+1) distinct lengths and |l1−l2| ≤ d still
-    // prunes; disjoint from the gram path by the maxlen split.
-    val shortCand = dsA.filter(col("len") < minLong)
-      .select(col("s").as("s1"), col("len").as("l1"))
-      .withColumn("l2", explode(sequence(col("l1") - maxDist, col("l1") + maxDist)))
-      .join(dsB.filter(col("len") < minLong)
-        .select(col("s").as("s2"), col("len").as("l2")), Seq("l2"))
-      .filter(strFilter)
-      .select(col("s1"), col("s2"))
-    val verified = longCand.unionByName(shortCand)
-      .withColumn("dist", levenshtein(col("s1"), col("s2"), maxDist))
-      .filter(col("dist") >= 0)
-    // equal strings are distance-0 pairs: the self-join surfaces them
-    // purely through id multiplicity (singletons die in the x<y cut);
-    // the link join's gram/short paths already emit them (no s1<s2 cut)
-    val strPairs =
-      if (self) verified.unionByName(dsA.select(col("s").as("s1"),
-        col("s").as("s2"), lit(0).as("dist")))
-      else verified
-    // output expansion: multiplicity join back to ids — output-sized
-    // work, keyed on the short string
-    val ia = baseA.select(col("id").as("x"), col("s").as("s1"))
-    val ib = (if (self) baseA else baseB)
-      .select(col("id").as("y"), col("s").as("s2"))
-    if (self)
-      strPairs.join(ia, Seq("s1")).join(ib, Seq("s2"))
-        .filter(col("s1") < col("s2") || col("x") < col("y"))
-        .select(least(col("x"), col("y")).as("a"),
-          greatest(col("x"), col("y")).as("b"), col("dist"))
-    else
-      strPairs.join(ia, Seq("s1")).join(ib, Seq("s2"))
-        .select(col("x").as("a"), col("y").as("b"), col("dist"))
+                       idCol: String = "doc_id"): DataFrame = {
+    val (dfTab, strIndex, idMap) =
+      editDistanceIndex(right, maxDist, q, textCol, idCol)
+    edIncr(left, dfTab, strIndex, idMap, self = false, maxDist, q,
+      textCol, idCol)
   }
 
   /** Persistable prefix index for the edit-distance family — the day-2
     * ingest artifact (the Ed-Join analogue of [[jaccardPrefixIndex]]):
-    * the triple (dfTab, strIndex, idMap) over one corpus snapshot, where
+    * [[editDistanceIndexAppend]] of `docs` onto an empty index. The
+    * triple (dfTab, strIndex, idMap) over one corpus snapshot, where
     *  - `dfTab` (g, k, df) is the occurrence-tagged q-gram frequency
     *    table that FREEZES the rare-first prefix order,
     *  - `strIndex` (s, len, prefix) keeps per DISTINCT string its first
@@ -1615,28 +1464,23 @@ object Dedup {
   def editDistanceIndex(docs: DataFrame, maxDist: Int = 2, q: Int = 2,
                         textCol: String = "text", idCol: String = "doc_id")
       : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    require(q >= 1, s"q must be >= 1, got $q")
-    val prefLen = q * maxDist + 1
-    val base = edBase(docs, textCol, idCol)
-    val ds = base.select(col("s"), col("len")).distinct().localCheckpoint()
-    val tagged = edGrams(ds, q, Int.MaxValue)
-      .select(col("s"), col("len"), col("g"),
-        explode(expr("sequence(1, CAST(cnt AS INT))")).as("k"))
-    val dfTab = tagged.groupBy(col("g"), col("k")).agg(count(lit(1)).as("df"))
-    val pref = tagged.join(dfTab, Seq("g", "k"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("s")).orderBy(col("df"), col("g"), col("k"))))
-      .filter(col("__rn") <= prefLen)
-      .groupBy(col("s"))
-      .agg(sort_array(collect_list(struct(col("g"), col("k")))).as("prefix"))
-    val strIndex = ds.join(pref, Seq("s"), "left")
-      .select(col("s"), col("len"),
-        coalesce(col("prefix"),
-          expr("CAST(array() AS array<struct<g: string, k: int>>)"))
-          .as("prefix"))
-    (dfTab, strIndex, base.select(col("id"), col("s")))
+    val (dfTab, strIndex, idMap) = edEmptyIndex(docs, textCol, idCol)
+    editDistanceIndexAppend(docs, dfTab, strIndex, idMap, maxDist, q,
+      textCol, idCol)
+  }
+
+  /** An empty (dfTab, strIndex, idMap) triple as local relations, with
+    * `docs`' id and text types (see [[jpEmptyIndex]]). */
+  private def edEmptyIndex(docs: DataFrame, textCol: String,
+                           idCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val sType = docs.select(col(textCol)).schema.head.dataType
+    (emptyRelation(docs, "g" -> StringType, "k" -> LongType,
+        "df" -> LongType),
+      emptyRelation(docs, "s" -> sType, "len" -> IntegerType,
+        "prefix" -> ArrayType(StructType(Seq(StructField("g", StringType),
+          StructField("k", LongType))))),
+      emptyRelation(docs,
+        "id" -> docs.select(col(idCol)).schema.head.dataType, "s" -> sType))
   }
 
   /** Absorb a (probed) batch into a persisted [[editDistanceIndex]] —
@@ -1658,57 +1502,82 @@ object Dedup {
                               textCol: String = "text",
                               idCol: String = "doc_id")
       : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    require(q >= 1, s"q must be >= 1, got $q")
-    val prefLen = q * maxDist + 1
-    val baseN = edBase(batch, textCol, idCol)
-    val dsN = baseN.select(col("s"), col("len")).distinct().localCheckpoint()
-    val taggedN = edGrams(dsN, q, Int.MaxValue)
-      .select(col("s"), col("len"), col("g"),
-        explode(expr("sequence(1, CAST(cnt AS INT))")).as("k"))
-    val batchDf = taggedN.groupBy(col("g"), col("k"))
-      .agg(count(lit(1)).as("bdf"))
-    val prefN = taggedN
-      .join(dfTab.select(col("g"), col("k"), col("df")), Seq("g", "k"), "left")
-      .join(batchDf, Seq("g", "k"))
-      .withColumn("df0", coalesce(col("df"), col("bdf")))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("s")).orderBy(col("df0"), col("g"), col("k"))))
-      .filter(col("__rn") <= prefLen)
-      .groupBy(col("s"))
-      .agg(sort_array(collect_list(struct(col("g"), col("k")))).as("prefix"))
-    val strNew = dsN
+    val (base, ds, batchDf, pref) =
+      edRank(batch, dfTab, maxDist, q, textCol, idCol)
+    // a string shorter than q has no grams: an empty prefix
+    val strNew = ds
       .join(strIndex.select(col("s")), Seq("s"), "left_anti")
-      .join(prefN, Seq("s"), "left")
+      .join(pref.groupBy(col("s")).agg(
+        sort_array(collect_list(struct(col("g"), col("k")))).as("prefix")),
+        Seq("s"), "left")
       .select(col("s"), col("len"),
         coalesce(col("prefix"),
-          expr("CAST(array() AS array<struct<g: string, k: int>>)"))
+          expr("CAST(array() AS array<struct<g: string, k: bigint>>)"))
           .as("prefix"))
     val dfExt = dfTab.unionByName(
       batchDf.join(dfTab, Seq("g", "k"), "left_anti")
         .select(col("g"), col("k"), col("bdf").as("df")))
     (dfExt, strIndex.unionByName(strNew),
-      idMap.unionByName(baseN.select(col("id"), col("s"))))
+      idMap.unionByName(base.select(col("id"), col("s"))))
   }
 
-  /** Day-2 member of the edit-distance family — a NEW batch joins the
-    * persisted [[editDistanceIndex]] (and itself) WITHOUT touching the
-    * historical corpus. Emits exactly the pairs a full-corpus
-    * [[editDistancePairs]] rerun over history ∪ batch would emit that
-    * touch ≥ 1 new id (same (a, b, dist) schema, a < b) — proved by the
-    * equivalence property spec.
+  /** EXACT threshold EDIT-DISTANCE join in its day-2 shape — a NEW
+    * batch joins the persisted [[editDistanceIndex]] (and itself)
+    * WITHOUT touching the historical corpus (fuzzy dedup / entity
+    * resolution over names, titles, and other short strings). Emits
+    * exactly the pairs a full-corpus self-join over history ∪ batch
+    * would emit that touch ≥ 1 new id (same (a, b, dist) schema,
+    * a < b); over an empty index that is every pair of the batch
+    * ([[editDistancePairs]]).
     *
-    * Losslessness under the FROZEN order: new strings rank their tagged
-    * grams by the index's df table, grams unseen on day 1 by their
-    * BATCH df (any extension of the day-1 order is consistent for every
-    * pair side — historical strings contain no unseen grams, so their
-    * persisted prefixes are unchanged under the extension, and all new
-    * strings rank by the same extended key). The Ed-Join prefix length
-    * q·maxDist+1 is size-independent, so the bound needs no rescaling;
-    * verification is the same banded-DP `levenshtein`, making the
-    * output pair set EXACT regardless of how the frozen order skews
-    * prefixes. Batch ids must be disjoint from index ids.
+    * q-gram count bound (Gravano et al., VLDB 2001) + PREFIX-FILTERED
+    * candidate generation (Ed-Join, Xiao et al., VLDB 2008). One edit
+    * operation destroys at most `q` of a string's |s|−q+1 q-grams —
+    * the rest survive as a BAG (shifts move positions, not contents) —
+    * so ed(s,t) ≤ d implies the q-gram bags share
+    * ≥ max(|s|,|t|)−q+1−q·d grams, and |len(s)−len(t)| ≤ d is
+    * necessary.
+    *
+    * Candidate generation does NOT join on every gram (an inverted
+    * index over raw q-grams melts down on skewed gram distributions:
+    * formulaic names share hot grams, so a hot gram's posting list
+    * cross-multiplies — measured 10⁹+ joined rows on 20 k TPC-H part
+    * names). Instead, the q-gram bag becomes a SET of occurrence-tagged
+    * grams ((g, k) for the k-th occurrence of g — bag intersection =
+    * tagged-set intersection), every string keeps only its first
+    * q·d+1 tagged grams under one shared (df, gram) order (rare grams
+    * first), and candidates join on PREFIX grams only. Lossless by the
+    * standard prefix-filter principle: a qualifying pair shares
+    * ≥ t = max(la,lb)−q+1−q·d ≥ 1 tagged grams, and each side's first
+    * n−t+1 ≤ q·d+1 grams must then contain a shared one. The df order
+    * is a performance choice only — ANY shared total order keeps the
+    * filter lossless, but rare-first makes prefix posting lists short.
+    *
+    * The FROZEN order: new strings rank their tagged grams by the
+    * index's df table, grams unseen on day 1 by their BATCH df (any
+    * extension of the day-1 order is consistent for every pair side —
+    * historical strings contain no unseen grams, so their persisted
+    * prefixes are unchanged under the extension, and all new strings
+    * rank by the same extended key). The prefix length q·maxDist+1 is
+    * size-independent, so the bound needs no rescaling.
+    *
+    * Candidates come from one join of the batch against the stored
+    * strings and (self-join) the batch's own, whose condition splits in
+    * two: new×new pairs under the `s1 < s2` cut, new×history pairs under
+    * `s1 ≠ s2` (link: any pair). Pairs where BOTH sides are shorter than
+    * q·(d+1) chars (the bound can vanish there) come from a separate
+    * length-keyed short-bucket join (≤ q·(d+1) distinct lengths; a
+    * string shorter than q has no grams at all — only the short bucket
+    * can hold it). Candidates are verified with the built-in banded-DP
+    * `levenshtein(a, b, maxDist)`, so the result EQUALS the brute-force
+    * join (the oracle checks it as one). Batch ids must be disjoint
+    * from index ids.
+    *
+    * Scale shape: shuffles key on tagged gram, length, or string; the
+    * candidate join touches q·d+1 grams per string, each rare by
+    * construction of the order, and the historical corpus contributes
+    * only posting-list lookups of its persisted prefixes. No driver
+    * state.
     *
     * Streaming shape: the per-string prefix ranking needs a window,
     * which streams don't allow, so the deployed form is `foreachBatch`
@@ -1738,76 +1607,76 @@ object Dedup {
     edIncr(newLeft, dfTab, strIndex, idMap, self = false, maxDist, q,
       textCol, idCol)
 
-  /** Shared core of the two day-2 edit-distance forms: batch prefixes
-    * under the frozen-plus-batch-extension order, candidate join against
-    * index prefixes (∪ batch prefixes when `self`), the length-keyed
-    * short bucket, banded-DP verification over canonical distinct string
-    * pairs, then the output-sized id expansion. Work is proportional to
-    * the batch: every shuffle keys on a tagged gram, a candidate length,
-    * or a matched string — the historical corpus contributes only
-    * posting-list lookups of its persisted prefixes. */
+  /** The one edit-distance probe behind all four joins (see
+    * [[editDistanceIncremental]]): candidates (new×new when `self`, and
+    * new×history), banded-DP verification over canonical distinct
+    * string pairs, then the output-sized id expansion. */
   private def edIncr(newDocs: DataFrame, dfTab: DataFrame,
                      strIndex: DataFrame, idMap: DataFrame, self: Boolean,
                      maxDist: Int, q: Int, textCol: String,
                      idCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    require(q >= 1, s"q must be >= 1, got $q")
-    val minLong = q * (maxDist + 1)
-    val prefLen = q * maxDist + 1
-    val baseN = edBase(newDocs, textCol, idCol)
-    val dsN = baseN.select(col("s"), col("len")).distinct().localCheckpoint()
-    val taggedN = edGrams(dsN, q, Int.MaxValue)
-      .select(col("s"), col("len"), col("g"),
-        explode(expr("sequence(1, CAST(cnt AS INT))")).as("k"))
-    val batchDf = taggedN.groupBy(col("g"), col("k"))
-      .agg(count(lit(1)).as("bdf"))
-    val prefN = taggedN
-      .join(dfTab.select(col("g"), col("k"), col("df")), Seq("g", "k"), "left")
-      .join(batchDf, Seq("g", "k"))
-      .withColumn("df0", coalesce(col("df"), col("bdf")))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("s")).orderBy(col("df0"), col("g"), col("k"))))
-      .filter(col("__rn") <= prefLen)
-      .select(col("s"), col("len"), col("g"), col("k"))
+    val minLong = q * (maxDist + 1) // longer side >= this  =>  bound >= 1
+    val (baseN, dsN, _, prefN) =
+      edRank(newDocs, dfTab, maxDist, q, textCol, idCol)
     val prefH = strIndex
       .select(col("s"), col("len"), explode(col("prefix")).as("gk"))
       .select(col("s"), col("len"),
         col("gk.g").as("g"), col("gk.k").as("k"))
-    val prefAll = if (self) prefH.unionByName(prefN) else prefH
-    val strNe = if (self) col("s1") =!= col("s2") else lit(true)
-    val longCand = prefN
-      .select(col("s").as("s1"), col("len").as("l1"), col("g"), col("k"))
-      .join(prefAll.select(col("s").as("s2"), col("len").as("l2"),
-        col("g"), col("k")), Seq("g", "k"))
-      .filter(strNe &&
-        abs(col("l1") - col("l2")) <= maxDist &&
-        greatest(col("l1"), col("l2")) >= minLong)
-      .select(col("s1"), col("s2"))
     val shortN = dsN.filter(col("len") < minLong)
-    val shortAll =
-      if (self) strIndex.select(col("s"), col("len"))
-        .filter(col("len") < minLong).unionByName(shortN)
-      else strIndex.select(col("s"), col("len")).filter(col("len") < minLong)
-    val shortCand = shortN.select(col("s").as("s1"), col("len").as("l1"))
+    val shortH = strIndex.select(col("s"), col("len"))
+      .filter(col("len") < minLong)
+    // The y side of both candidate joins: the indexed strings, plus the
+    // batch's own when self-joining (`new` tells them apart). A batch y
+    // pairs under the s1 < s2 cut (new×new) and keeps its order; an
+    // indexed y pairs under s1 ≠ s2 (new×history; link: any) and is put
+    // in canonical order. A long pair shares several prefix grams, so
+    // the long candidates take a distinct; a short pair is found once,
+    // so the short bucket leaves out an indexed string that is also in
+    // the batch (their pair is new×new).
+    def tag(df: DataFrame, isNew: Boolean) = df.withColumn("new", lit(isNew))
+    val (prefY, shortY) =
+      if (self) (tag(prefH, false).unionByName(tag(prefN, true)),
+        tag(shortH.join(shortN.select(col("s")), Seq("s"), "left_anti"),
+          false).unionByName(tag(shortN, true)))
+      else (tag(prefH, false), tag(shortH, false))
+    val cut =
+      if (self) when(col("new"), col("s1") < col("s2"))
+        .otherwise(col("s1") =!= col("s2"))
+      else lit(true)
+    def ordered(pairs: DataFrame): DataFrame =
+      if (self) pairs.select(
+        when(col("new"), col("s1")).otherwise(least(col("s1"), col("s2")))
+          .as("s1"),
+        when(col("new"), col("s2")).otherwise(greatest(col("s1"), col("s2")))
+          .as("s2"))
+      else pairs.select(col("s1"), col("s2"))
+    val longCand = ordered(prefN
+      .select(col("s").as("s1"), col("len").as("l1"), col("g"), col("k"))
+      .join(prefY.select(col("s").as("s2"), col("len").as("l2"),
+        col("g"), col("k"), col("new")), Seq("g", "k"))
+      .filter(cut &&
+        abs(col("l1") - col("l2")) <= maxDist &&
+        greatest(col("l1"), col("l2")) >= minLong)).distinct()
+    // Short bucket: both sides < q·(d+1) chars — the count bound can
+    // vanish there, so key the join on candidate length instead. The
+    // bucket spans ≤ q·(d+1) distinct lengths and |l1−l2| ≤ d still
+    // prunes; disjoint from the gram path by the maxlen split.
+    val shortCand = ordered(shortN
+      .select(col("s").as("s1"), col("len").as("l1"))
       .withColumn("l2",
         explode(sequence(col("l1") - maxDist, col("l1") + maxDist)))
-      .join(shortAll.select(col("s").as("s2"), col("len").as("l2")),
-        Seq("l2"))
-      .filter(strNe)
-      .select(col("s1"), col("s2"))
-    val rawCand = longCand.unionByName(shortCand)
-    val cand = (if (self)
-        rawCand.select(least(col("s1"), col("s2")).as("s1"),
-          greatest(col("s1"), col("s2")).as("s2"))
-      else rawCand).distinct()
+      .join(shortY.select(col("s").as("s2"), col("len").as("l2"),
+        col("new")), Seq("l2"))
+      .filter(cut))
+    val cand = longCand.unionByName(shortCand)
     val verified = cand
       .withColumn("dist", levenshtein(col("s1"), col("s2"), maxDist))
       .filter(col("dist") >= 0)
+    // output expansion: multiplicity join back to ids — output-sized
+    // work, keyed on the string
     if (self) {
       // equal strings are distance-0 pairs surfaced purely through id
-      // multiplicity (batch string = either side's string), exactly as
-      // in the batch self-join
+      // multiplicity (singletons die in the x<y cut)
       val strPairs = verified.unionByName(dsN.select(col("s").as("s1"),
         col("s").as("s2"), lit(0).as("dist")))
       val iAll = idMap
@@ -1829,31 +1698,47 @@ object Dedup {
     }
   }
 
-  def removeDuplicateTiles(docs: DataFrame, k: Int = 5, minDocs: Int = 2,
-                           textCol: String = "text",
-                           idCol: String = "doc_id"): DataFrame = {
-    val tiles = docs
-      .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
-      .select(col(idCol), col("toks"),
-        explode(sequence(lit(0),
-          expr(s"(size(toks) + ${k - 1}) div $k").cast("int") - 1)).as("idx"))
-      .select(col(idCol), col("idx"),
-        concat_ws(" ", slice(col("toks"), col("idx") * k + 1, lit(k))).as("tile"),
-        least(lit(k), size(col("toks")) - col("idx") * k).as("nw"),
-        (col(idCol) * 1000000L + col("idx")).as("okey"))
-    val keyed = tiles.withColumn("tkey", md5(col("tile")))
-    val stats = keyed.groupBy(col("tkey"))
-      .agg(countDistinct(col(idCol)).as("nd"), min(col("okey")).as("canon"))
-    keyed.join(stats, Seq("tkey"))
-      .withColumn("keep", col("nd") < minDocs || col("okey") === col("canon"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_tiles"),
-        sum(when(col("keep"), 0L).otherwise(1L)).as("n_removed"),
-        sum(when(col("keep"), col("nw")).otherwise(0L)).cast("long")
-          .as("kept_words"),
-        md5(concat_ws(" ", transform(
-          array_sort(collect_list(when(col("keep"),
-            struct(col("idx"), col("tile"))))),
-          x => x.getField("tile")))).as("kept_md5"))
+  /** The probe's and the append's shared scan and ranking: the
+    * (id, s, len) base of `docs`, its DISTINCT (s, len) strings
+    * (checkpointed), the batch df `bdf` of every occurrence-tagged
+    * gram, and each string's first q·maxDist+1 tagged grams (s, len,
+    * g, k) under the (index df, else batch df, gram) order.
+    *
+    * ALL pairwise machinery runs over DISTINCT strings — the 100 TB
+    * shape: a short-string column has far fewer distinct values than
+    * rows (64 vs 20 000 on the TPC-H-ish part names), and an id-level
+    * formulation pays the full quadratic id fan-out inside the FILTER
+    * stages; the distinct-string formulation confines it to the
+    * unavoidable output expansion at the very end. */
+  private def edRank(docs: DataFrame, dfTab: DataFrame, maxDist: Int,
+                     q: Int, textCol: String, idCol: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    require(maxDist >= 1,
+      s"maxDist must be >= 1, got $maxDist (use exact() for 0)")
+    require(q >= 1, s"q must be >= 1, got $q")
+    val base = docs.select(col(idCol).as("id"), col(textCol).as("s"))
+      .withColumn("len", length(col("s")))
+    val ds = base.select(col("s"), col("len")).distinct().localCheckpoint()
+    // occurrence-tagged grams: the k-th occurrence of g is element
+    // (g, k), so bag intersection = tagged-SET intersection
+    val tagged = ds.filter(col("len") >= q)
+      .select(col("s"), col("len"), explode(expr(
+        s"transform(sequence(1, len - ${q - 1}), i -> substr(s, i, $q))"))
+        .as("g"))
+      .groupBy(col("s"), col("len"), col("g")).agg(count(lit(1)).as("cnt"))
+      .select(col("s"), col("len"), col("g"),
+        explode(expr("sequence(1, cnt)")).as("k"))
+    val batchDf = tagged.groupBy(col("g"), col("k"))
+      .agg(count(lit(1)).as("bdf"))
+    val pref = tagged
+      .join(dfTab.select(col("g"), col("k"), col("df")), Seq("g", "k"), "left")
+      .join(batchDf, Seq("g", "k"))
+      .withColumn("df0", coalesce(col("df"), col("bdf")))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col("s")).orderBy(col("df0"), col("g"), col("k"))))
+      .filter(col("__rn") <= q * maxDist + 1)
+      .select(col("s"), col("len"), col("g"), col("k"))
+    (base, ds, batchDf, pref)
   }
 }

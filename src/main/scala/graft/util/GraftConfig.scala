@@ -23,6 +23,10 @@ object GraftConfig {
     // ~60 GB free; a 1000-executor cluster absorbs the same volume at
     // ~0.7 GB/node, so leave this off there). Result set is identical
     // for any value: batches partition the candidate set by pair hash.
+    // The batch join is the day-2 probe over an empty index, so the
+    // knob bounds both: Dedup.jaccardPrefixPairs and
+    // Dedup.jaccardPrefixIncremental (whose verify also ships the
+    // indexed sets).
     "jaccard_verify_batch_bytes" -> Opt(0L,
       v => v.isInstanceOf[Long] && v.asInstanceOf[Long] >= 0L)
   )

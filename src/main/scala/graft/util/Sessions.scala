@@ -76,6 +76,16 @@ object Sessions {
     org.apache.log4j.Logger
       .getLogger("org.apache.spark.sql.execution.datasources.DataSource")
       .setLevel(org.apache.log4j.Level.ERROR)
+    // Dataset.localCheckpoint() is a deliberate lineage cut here (shared
+    // artifacts, multi-consumer scans), and unpersisting one — the
+    // artifact store's release, or the cleaner after its last consumer
+    // — WARNs that the lineage "cannot be recomputed after
+    // unpersisting", once per checkpoint. Nothing reads a released
+    // checkpoint, so the line carries no signal. RDD logs under its
+    // concrete class; Dataset checkpoints are MapPartitionsRDDs.
+    org.apache.log4j.Logger
+      .getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+      .setLevel(org.apache.log4j.Level.ERROR)
     spark
   }
 }

@@ -63,11 +63,10 @@ class FuzzyJoinSpec extends SparkSpec {
       dist = lev(names(i), names(j)) if dist <= d
     } yield (i, j, dist)).toSet
 
-  private def engine(names: Seq[String], d: Int,
-                     cap: Int = Int.MaxValue): Set[(Int, Int, Int)] = {
+  private def engine(names: Seq[String], d: Int): Set[(Int, Int, Int)] = {
     val df = names.zipWithIndex.map { case (s, i) => (i.toLong, s) }
       .toDF("doc_id", "text")
-    graft.scale.Dedup.editDistancePairs(df, maxDist = d, maxGramDf = cap)
+    graft.scale.Dedup.editDistancePairs(df, maxDist = d)
       .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt,
         r.getInt(2))).toSet
   }
@@ -107,23 +106,16 @@ class FuzzyJoinSpec extends SparkSpec {
     }
   }
 
-  test("editDistancePairs gram-df cap yields a subset, full default is exact") {
-    val names = Seq("shiny ring", "shiny king", "shiny wing", "dull thing")
-    val full = engine(names, 2)
-    assert(full == bruteForce(names, 2))
-    val capped = engine(names, 2, cap = 2)
-    assert(capped.subsetOf(full))
-  }
-
   test("editDistanceIncremental == full rerun restricted to batch-touching pairs, through a parquet index round-trip") {
     // history includes duplicates, shorts, and gram-less strings; the
-    // batch repeats a history string (dist-0 cross pairs), contains a
-    // within-batch near-pair, and a string whose grams are all UNSEEN
-    // on day 1 (exercises the batch-df order extension)
+    // batch repeats a long and a short history string (dist-0 cross
+    // pairs, and pairs of two batch strings one of which is indexed),
+    // contains within-batch near-pairs, and a string whose grams are
+    // all UNSEEN on day 1 (exercises the batch-df order extension)
     val histN = Seq("cold widget", "bold widget", "warm gear", "a", "ab",
       "cold widget", "shiny ring")
     val newN = Seq("cold widgets", "warm gears", "b", "ba", "cold widget",
-      "zzqq xxyy", "zzqq xxyz")
+      "zzqq xxyy", "zzqq xxyz", "ab")
     val hist = histN.zipWithIndex.map { case (s, i) => (i.toLong, s) }
       .toDF("doc_id", "text")
     val fresh = newN.zipWithIndex.map { case (s, i) => (100L + i, s) }
@@ -135,10 +127,12 @@ class FuzzyJoinSpec extends SparkSpec {
       dfTab.write.mode("overwrite").parquet(s"$dir/df")
       strIdx.write.mode("overwrite").parquet(s"$dir/str")
       idMap.write.mode("overwrite").parquet(s"$dir/ids")
-      val got = graft.scale.Dedup.editDistanceIncremental(fresh,
+      val gotRows = graft.scale.Dedup.editDistanceIncremental(fresh,
           spark.read.parquet(s"$dir/df"), spark.read.parquet(s"$dir/str"),
           spark.read.parquet(s"$dir/ids"), maxDist = d)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      val got = gotRows.toSet
+      assert(gotRows.length == got.size, s"duplicate pairs at maxDist=$d")
       val full = graft.scale.Dedup.editDistancePairs(
           hist.unionByName(fresh), maxDist = d)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -151,6 +145,7 @@ class FuzzyJoinSpec extends SparkSpec {
       assert(got.contains((0L, 104L, 0)) && got.contains((5L, 104L, 0)))
       assert(got.contains((105L, 106L, 1)))
       assert(got.contains((3L, 102L, 1))) // "a" vs "b", gram-less
+      assert(got.contains((102L, 107L, 1))) // "b" vs the repeated "ab"
     }
   }
 

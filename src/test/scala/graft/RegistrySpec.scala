@@ -42,6 +42,19 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.families.forall(_.cases.nonEmpty))
   }
 
+  test("the name lists of Bench, ExplainAudit and ScaleBench name registry queries") {
+    val lists = Seq(
+      "Bench.headline" -> Bench.headline,
+      "ExplainAudit.defaultQueries" -> graft.examples.ExplainAudit.defaultQueries,
+      "ScaleBench.outputBoundAtSf1" ->
+        graft.demo.ScaleBench.outputBoundAtSf1.toSeq)
+    for ((list, qs) <- lists) {
+      assert(qs.nonEmpty, list)
+      val unknown = qs.filterNot(SparkEntry.queries.contains)
+      assert(unknown.isEmpty, s"$list names no query: $unknown")
+    }
+  }
+
   test("concatenating families rejects a duplicate name") {
     def family(title: String, name: String): Family = new Family(title) {
       val cases = Seq(Case(name, (s, _) => s.emptyDataFrame, "SELECT 1"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.scale.{Dedup, Multimodal, Shingles, Similarity, TextOps}
@@ -532,6 +533,35 @@ class ScaleOpsSpec extends SparkSpec {
     assert(got == full)
     // and nothing new-free leaks in
     got.foreach { case (a, b, _, _, _) => assert(a >= 30 || b >= 30) }
+    // both probe branches produced pairs: new×history and new×new
+    assert(got.exists { case (a, _, _, _, _) => a < 30 })
+    assert(got.exists { case (a, _, _, _, _) => a >= 30 })
+  }
+
+  test("the batch prefix joins and index builds plan no empty history") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    // each batch form is its family's probe or append over an empty
+    // index; an unpruned history branch shows as an empty leaf — a
+    // local relation without rows or an RDD without partitions
+    def emptyLeaves(df: DataFrame) =
+      df.queryExecution.optimizedPlan.collectLeaves().collect {
+        case l: LocalRelation if l.data.isEmpty => l.nodeName
+        case r: LogicalRDD if r.rdd.partitions.isEmpty => r.nodeName
+      }
+    val d = Seq((0L, "cold widget x y"), (1L, "bold widget x y"),
+      (2L, "ab"), (3L, "ab")).toDF("doc_id", "text")
+    val (jDf, jDocs) = Dedup.jaccardPrefixIndex(d, 3, 1, 5)
+    val (eDf, eStr, eIds) = Dedup.editDistanceIndex(d, maxDist = 2)
+    val plans = Seq(
+      "jaccardPrefixPairs" -> Dedup.jaccardPrefixPairs(d, 3, 1, 5),
+      "jaccardPrefixIndex.dfTab" -> jDf, "jaccardPrefixIndex.docIndex" -> jDocs,
+      "editDistancePairs" -> Dedup.editDistancePairs(d, maxDist = 2),
+      "editDistanceIndex.dfTab" -> eDf, "editDistanceIndex.strIndex" -> eStr,
+      "editDistanceIndex.idMap" -> eIds)
+    for ((name, df) <- plans)
+      assert(emptyLeaves(df).isEmpty, s"$name plans an empty history")
+    assert(Dedup.editDistancePairs(d, maxDist = 2).count() == 2)
   }
 
   test("char entropy: exact micro-unit log sums on a hand case") {
