@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, pmod, sum, xxh
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare, and verify.json,
   * a diffable record of the run: per query its rows, wall seconds and
-  * [[rowsHash]]; per run the git HEAD, the Spark version and the session's
-  * SQL conf. */
+  * [[rowsHash]]; per run the git HEAD, the Spark version, the data dir
+  * with the byte size of each of its top-level entries, and the
+  * session's SQL conf. */
 object Verify {
   /** Modulus of [[rowsHash]]: each row's xxhash64 is reduced to [0, P)
     * before the sum, so the sum cannot overflow a Long below 2^32 rows. */
@@ -38,6 +39,13 @@ object Verify {
 
   private def obj(kvs: Iterable[(String, String)]): String =
     kvs.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
+
+  private def children(f: java.io.File): Seq[java.io.File] =
+    Option(f.listFiles).toSeq.flatten.sortBy(_.getName)
+
+  /** A file's length, or the sum over a directory's files. */
+  private def bytes(f: java.io.File): Long =
+    if (f.isDirectory) children(f).map(bytes).sum else f.length
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -70,9 +78,7 @@ object Verify {
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           // a stale parquet from a previous run must not pass the compare
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-          }
+          def rm(f: java.io.File): Unit = { children(f).foreach(rm); f.delete(); () }
           rm(new java.io.File(s"$outDir/$name"))
           Seq("error" -> q(String.valueOf(e.getMessage)))
         }
@@ -86,6 +92,9 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/verify.json"), obj(Seq(
       "git_head" -> head.fold("null")(q),
       "spark_version" -> q(spark.version),
+      "data_dir" -> q(sfDir),
+      "data_bytes" -> obj(children(new java.io.File(sfDir))
+        .map(f => f.getName -> bytes(f).toString)),
       "sql_conf" -> obj(spark.conf.getAll.toSeq.sorted.collect {
         case (k, v) if k.startsWith("spark.sql.") => k -> q(v) }),
       "queries" -> record.map { case (n, o) => s"\n  ${q(n)}: $o" }

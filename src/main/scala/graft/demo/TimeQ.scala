@@ -1,6 +1,9 @@
 package graft.demo
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Dev tool: time individual registry queries in isolation, in the same
   * session as [[graft.Bench]] ([[graft.util.Sessions]]), without paying
@@ -8,12 +11,25 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "runMain graft.demo.TimeQ <sfDir> <nRuns> name1,name2,..."
   *
-  * Prints per-run seconds, the median and the result's row count per
-  * query. Artifacts shared via the SparkEntry memoization layer build
+  * Prints per-run seconds, the median, executor CPU, shuffle bytes, the
+  * completed-stage and plan-exchange counts and the result's row count
+  * per query. Artifacts shared via the SparkEntry memoization layer build
   * inside run 1 exactly like bench sweep 1; the per-artifact build
   * seconds print at the end so a "query"
   * number can be split into artifact vs query cost. */
 object TimeQ {
+  /** Exchange nodes in a physical plan as planned before adaptive
+    * execution, subqueries included. Unlike the completed-stage count,
+    * which also counts broadcast-collect jobs, it is fixed for a fixed
+    * plan. A sub-plan bridged through an RDD (the streaming twins'
+    * batch replay) is a leaf scan here, so its exchanges do not count. */
+  private def exchanges(plan: SparkPlan): Int = plan match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.initialPlan)
+    case p =>
+      (if (p.isInstanceOf[Exchange]) 1 else 0) +
+        (p.children ++ p.subqueries).map(exchanges).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val n = args(1).toInt
@@ -79,8 +95,10 @@ object TimeQ {
       val med = ts.sorted.apply(ts.size / 2)
       val cpuMed = stats.map(_._2).sorted.apply(n / 2)
       val last = stats.last
+      val nEx = exchanges(fn(spark, sfDir).queryExecution.executedPlan)
       println(f"[timeq] $name%-28s median=$med%7.3f cpuMed=$cpuMed%7.3f " +
-        f"shufB=${last._3}%10d stages=${last._4}%3d rows=${last._5}%d runs=${ts.map(t => f"$t%.3f").mkString(",")}")
+        f"shufB=${last._3}%10d stages=${last._4}%3d exchanges=$nEx%3d " +
+        f"rows=${last._5}%d runs=${ts.map(t => f"$t%.3f").mkString(",")}")
       if (verbose) stages.forEach(s => println(s"[timeq] $name $s"))
     }
     val arts = graft.SparkEntry.artifactBreakdown(spark).toSeq.sortBy(-_._2)

@@ -1005,15 +1005,14 @@ object Dedup {
     (sh, batchDf, ranked)
   }
 
-  /** Shared inverted-index pair pipeline: distinct (doc, shingle) rows,
-    * optional df cap, then the sparse self-join on the shingle key,
-    * aggregated to one row per co-shingled pair (a < b) carrying the
-    * intersection size and both set sizes. */
   /** (a, b, inter, sza, szb) for every doc pair sharing ≥ 1 admitted
     * shingle — the shared intermediate behind [[ngramJaccardPairs]] and
     * [[containmentPairs]]; compute once per corpus snapshot and pass via
     * their `statsIn` (same shared-artifact convention as minhash
-    * signatures).
+    * signatures). The inverted-index pipeline: distinct (doc, shingle)
+    * rows, the optional df cap, then the sparse self-join on the shingle
+    * key, aggregated to one row per co-shingled pair (a < b) carrying
+    * the intersection size and both set sizes.
     *
     * COLLISION BOUND (the counts are over 60-bit hashed shingles, not
     * strings — callers cannot see this from the signature): two distinct

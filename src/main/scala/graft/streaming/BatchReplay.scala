@@ -1,38 +1,38 @@
 package graft.streaming
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.RddBridge
-import org.apache.spark.sql.streaming.GroupState
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** InternalRow batch replay for the keyed `flatMapGroupsWithState`
-  * streaming operators (r12, guide §4 — the EventMatcher pattern).
+/** The one keyed-state operator behind every stateful streaming twin:
+  * [[keyed]] runs a group function `fn(key, rows, state)` per key, on a
+  * streaming input as `flatMapGroupsWithState` and on a batch input as
+  * one closed micro-batch with empty initial state (guide §4 — the
+  * EventMatcher pattern).
   *
   * In BATCH mode `Dataset.groupByKey(f).flatMapGroupsWithState(...)`
   * deserializes every input row TWICE (once in `AppendColumns` to
   * evaluate the key lambda, once in the grouped iterator handed to the
-  * state function), exchanges serialized case-class objects, and
-  * re-serializes every output through the product encoder — none of
-  * which the operator's logic needs. [[replay]] runs the SAME group
-  * function over the SAME per-key row multiset with the same
-  * empty-initial-state/no-timeout semantics as a single closed
-  * micro-batch, but stays in Tungsten format end-to-end: a columnar
-  * hash exchange on the key columns, a columnar sort within partitions
-  * (so each key's rows are consecutive — the group functions impose
-  * their own internal event order, exactly as they must under
-  * `groupByKey`, whose grouped iterator is unordered), then one
-  * InternalRow pass that decodes each row ONCE into the operator's
-  * input record and encodes each emitted record ONCE.
-  *
-  * The streaming path is untouched — the typed stateful boundary IS the
-  * streaming operator; this replaces only the batch replay plumbing
-  * around the identical group function (parity pinned by the
-  * batch-vs-MemoryStream specs). */
+  * state function) and exchanges serialized case-class objects — none
+  * of which the operator's logic needs. The batch branch of [[keyed]]
+  * runs the SAME group function over the SAME per-key row multiset with
+  * the same empty-initial-state/no-timeout semantics, but stays in
+  * Tungsten format up to the group function: a columnar hash exchange
+  * on the key columns, a columnar sort within partitions (so each key's
+  * rows are consecutive — the group functions impose their own internal
+  * event order, exactly as they must under `groupByKey`, whose grouped
+  * iterator is unordered), then one InternalRow pass that decodes each
+  * row ONCE and encodes each emitted record ONCE. Both branches decode
+  * and encode through the same `ExpressionEncoder`s, so field order and
+  * null handling cannot drift between them: a null in a primitive field
+  * throws in both. */
 private[streaming] object BatchReplay {
 
   /** Minimal [[GroupState]] for a single closed batch: starts empty and
@@ -66,41 +66,43 @@ private[streaming] object BatchReplay {
     override def getCurrentProcessingTimeMs(): Long = 0L
   }
 
-  /** Null-safe string read (matches the product encoder: a null cell
-    * becomes a null String field). */
-  @inline def str(r: InternalRow, i: Int): String = {
-    val u = r.getUTF8String(i)
-    if (u == null) null else u.toString
+  /** `fn` once per distinct key of `in`, in append mode.
+    *
+    * `in`: the operator's projected input, whose columns name the fields
+    * of `I`; its key columns are `keyCols` and `key` reads the same key
+    * from a decoded record. `idleTimeout` set selects
+    * `ProcessingTimeTimeout` on a streaming input (the group function
+    * arms it), unset `NoTimeout`; a batch input fires no timeouts. The
+    * result has the columns of `O`. A null key cell of a batch input
+    * throws `IllegalArgumentException` naming its column (a primitive
+    * key would otherwise fail decoding without the column's name, and a
+    * nullable one would form a null-key group). */
+  def keyed[K: TypeTag, I <: Product : TypeTag, S <: Product : TypeTag,
+            O <: Product : TypeTag](
+      in: DataFrame, keyCols: Seq[String], key: I => K,
+      idleTimeout: Option[String])(
+      fn: (K, Iterator[I], GroupState[S]) => Iterator[O]): DataFrame = {
+    val inEnc = ExpressionEncoder[I]()
+    val outEnc = ExpressionEncoder[O]()
+    if (in.isStreaming)
+      in.as(inEnc).groupByKey(key)(ExpressionEncoder[K]())
+        .flatMapGroupsWithState(OutputMode.Append(),
+          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
+          else GroupStateTimeout.NoTimeout())(fn)(ExpressionEncoder[S](), outEnc)
+        .toDF()
+    else replay(in, keyCols, key, inEnc, outEnc, fn)
   }
 
-  /** Null-safe string write. */
-  @inline def utf8(s: String): UTF8String =
-    if (s == null) null else UTF8String.fromString(s)
-
-  /** Run `run(key, rows)` once per distinct key of `in`, like one closed
-    * micro-batch of `groupByKey(key).flatMapGroupsWithState(fn)` with
-    * empty initial state.
-    *
-    * `in`: the operator's already-projected batch input (the same select
-    * the typed path feeds to `.as[I]`); its key columns are `keyCols`.
-    * `decode` materializes one input record from an InternalRow — it
-    * must copy values out (primitives / `str`), never retain the row
-    * (rows are reused per partition by the scan). `run` returns freshly
-    * allocated InternalRows matching `outSchema` (use
-    * `Encoders.product[O].schema` so names/types equal the typed
-    * `.toDF()`). A null key cell throws `IllegalArgumentException`
-    * naming its column, where the typed path fails decoding it — `key`
-    * would otherwise read it as 0 and merge the row into key 0's group. */
-  def replay[K, I](in: DataFrame, keyCols: Seq[String],
-                   key: InternalRow => K,
-                   decode: InternalRow => I,
-                   outSchema: StructType,
-                   run: (K, Iterator[I]) => Iterator[InternalRow]): DataFrame = {
-    val spark = in.sparkSession
-    val keyed = in.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions(keyCols.map(col): _*)
+  private def replay[K, I, S, O](in: DataFrame, keyCols: Seq[String],
+      key: I => K, inEnc: ExpressionEncoder[I], outEnc: ExpressionEncoder[O],
+      fn: (K, Iterator[I], GroupState[S]) => Iterator[O]): DataFrame = {
+    val bound = inEnc.resolveAndBind(DataTypeUtils.toAttributes(in.schema))
     val keyIdx = keyCols.map(c => (in.schema.fieldIndex(c), c))
-    val rdd = RddBridge.toInternalRdd(keyed).mapPartitions { it =>
+    val sorted = in.repartition(keyCols.map(col): _*)
+      .sortWithinPartitions(keyCols.map(col): _*)
+    val rdd = RddBridge.toInternalRdd(sorted).mapPartitions { it =>
+      val decode = bound.createDeserializer()
+      val encode = outEnc.createSerializer()
       new Iterator[InternalRow] {
         private var out: Iterator[InternalRow] = Iterator.empty
         private var pendingKey: K = _
@@ -111,7 +113,7 @@ private[streaming] object BatchReplay {
             if (r.isNullAt(i))
               throw new IllegalArgumentException(s"null key in column '$c'")
           }
-          pendingKey = key(r); pendingVal = decode(r); pending = true
+          pendingVal = decode(r); pendingKey = key(pendingVal); pending = true
         }
         private def advance(): Unit = {
           while (!out.hasNext && (pending || it.hasNext)) {
@@ -126,13 +128,14 @@ private[streaming] object BatchReplay {
               if (pendingKey == k) { buf += pendingVal; pending = false }
               else same = false
             }
-            out = run(k, buf.iterator)
+            // the serializer reuses one row; the scan copies each row out
+            out = fn(k, buf.iterator, new ReplayState[S]).map(encode)
           }
         }
         override def hasNext: Boolean = { advance(); out.hasNext }
         override def next(): InternalRow = { advance(); out.next() }
       }
     }
-    RddBridge.fromInternalRdd(spark, rdd, outSchema)
+    RddBridge.fromInternalRdd(in.sparkSession, rdd, outEnc.schema)
   }
 }

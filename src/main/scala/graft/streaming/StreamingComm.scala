@@ -42,9 +42,6 @@ object StreamingComm {
     * then. */
   def matchMessages(events: DataFrame,
                     idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
     val sends = events.filter(col(Name).isin(SendNames: _*))
       .select(col(Process).cast("long").as("src"),
         col(AttrReceiver).cast("long").as("dst"),
@@ -56,27 +53,9 @@ object StreamingComm {
         lit(1).as("side"), col(TimestampNs).cast("long").as("ts"),
         col(EventId).cast("long").as("id"))
       .select(col("src"), col("dst"), col("side"), col("ts"), col("id"))
-    val in = sends.union(recvs)
-    if (in.isStreaming)
-      in.as[CommIn]
-        .groupByKey(r => (r.src, r.dst))
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          fifoGroup(idleTimeout))(
-          Encoders.product[CommState], Encoders.product[MatchedMsg])
-        .toDF()
-    else
-      BatchReplay.replay[(Long, Long), CommIn](in, Seq("src", "dst"),
-        r => (r.getLong(0), r.getLong(1)),
-        r => CommIn(r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3),
-          r.getLong(4)),
-        Encoders.product[MatchedMsg].schema,
-        (k, rows) => fifoGroup(idleTimeout)(k, rows,
-          new BatchReplay.ReplayState[CommState]).map(o =>
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](o.src, o.dst, o.k, o.send_event_id, o.recv_event_id,
-              o.send_ts, o.recv_ts, o.latency_ns))))
+    BatchReplay.keyed[(Long, Long), CommIn, CommState, MatchedMsg](
+      sends.union(recvs), Seq("src", "dst"), r => (r.src, r.dst),
+      idleTimeout)(fifoGroup(idleTimeout))
   }
 
   case class CommIn(src: Long, dst: Long, side: Int, ts: Long, id: Long)

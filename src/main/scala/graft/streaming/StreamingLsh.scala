@@ -2,9 +2,9 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming MinHash-LSH near-duplicate candidate generation — the
   * incremental twin of [[graft.scale.Dedup.minhashLsh]] for
@@ -69,7 +69,6 @@ object StreamingLsh {
                     textCol: String = "text",
                     idCol: String = "doc_id",
                     idleTimeout: Option[String] = None): DataFrame = {
-    import docs.sparkSession.implicits._
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rowsPerBand = numHashes / bands
     val bandKeys = (0 until bands).map { b =>
@@ -78,17 +77,12 @@ object StreamingLsh {
           .map(s => minhash(s).cast("string")): _*)
       concat(lit(s"$b|"), key)
     }
-    hashedShingles(docs, shingleK, textCol)
+    val rows = hashedShingles(docs, shingleK, textCol)
       .select(col(idCol).cast("long").as("doc_id"),
         explode(array(bandKeys: _*)).as("bucket"))
-      .as[(Long, String)].map { case (id, bk) => BandRow(bk, id) }
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-        else GroupStateTimeout.NoTimeout())(
-        bucketGroup(maxBucketSize, idleTimeout))(
-        Encoders.product[BucketState], Encoders.product[CandPair])
-      .toDF()
+    BatchReplay.keyed[String, BandRow, BucketState, CandPair](rows,
+      Seq("bucket"), _.bucket, idleTimeout)(
+      bucketGroup(maxBucketSize, idleTimeout))
   }
 
   /** Stream-side band keys in the BATCH [[graft.scale.Dedup.bandTable]]
@@ -159,7 +153,6 @@ object StreamingLsh {
                         idCol: String = "doc_id",
                         hiCol: String = "ahash_hi", loCol: String = "ahash_lo",
                         idleTimeout: Option[String] = None): DataFrame = {
-    import hashes.sparkSession.implicits._
     require(bands > 0 && 64 % bands == 0 && 32 % (64 / bands) == 0,
       s"bands must cut 64 bits into whole within-half slices, got $bands")
     require(radius >= 0 && radius < bands,
@@ -172,18 +165,12 @@ object StreamingLsh {
       concat(lit(s"$i|"),
         src.cast("long").bitwiseAND(lit(mask)).cast("string"))
     }
-    hashes.select(col(idCol).cast("long").as("doc_id"),
+    val rows = hashes.select(col(idCol).cast("long").as("doc_id"),
         col(hiCol).cast("long").as("hi"), col(loCol).cast("long").as("lo"),
         explode(array(buckets: _*)).as("bucket"))
-      .as[(Long, Long, Long, String)]
-      .map { case (id, hi, lo, bk) => HashRow(bk, id, hi, lo) }
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-        else GroupStateTimeout.NoTimeout())(
-        hashBucketGroup(radius, maxBucketSize, idleTimeout))(
-        Encoders.product[HashBucketState], Encoders.product[HamPair])
-      .toDF()
+    BatchReplay.keyed[String, HashRow, HashBucketState, HamPair](rows,
+      Seq("bucket"), _.bucket, idleTimeout)(
+      hashBucketGroup(radius, maxBucketSize, idleTimeout))
   }
 
   /** Dedup-at-ingest against the HISTORICAL image corpus: each streaming

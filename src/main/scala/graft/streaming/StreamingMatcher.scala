@@ -2,9 +2,9 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupState
 
 import graft.model.Schemas._
 
@@ -62,31 +62,14 @@ object StreamingMatcher {
     * historical accept-everything behavior. */
   def completedCalls(events: DataFrame,
                      allowedLatenessNs: Long = Long.MaxValue): DataFrame = {
-    import events.sparkSession.implicits._
     val in = events.select(
       col(Process).cast("int").as("process"),
       col(EventId).cast("long").as("event_id"),
       col(TimestampNs).cast("long").as("timestamp_ns"),
       col(EventType).as("event_type"),
       col(Name).as("name"))
-    if (in.isStreaming)
-      in.as[InEvent].groupByKey(_.process)
-        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-          processGroup(allowedLatenessNs))(
-          Encoders.product[MatchState], Encoders.product[CompletedCall])
-        .toDF()
-    else {
-      import graft.streaming.BatchReplay.{str, utf8}
-      BatchReplay.replay[Int, InEvent](in, Seq("process"), _.getInt(0),
-        r => InEvent(r.getInt(0), r.getLong(1), r.getLong(2), str(r, 3),
-          str(r, 4)),
-        Encoders.product[CompletedCall].schema,
-        (k, rows) => processGroup(allowedLatenessNs)(k, rows,
-          new BatchReplay.ReplayState[MatchState]).map(o =>
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](o.process, utf8(o.name), o.enter_id, o.leave_id,
-              o.enter_ts, o.leave_ts, o.depth, o.time_inc, o.time_exc))))
-    }
+    BatchReplay.keyed[Int, InEvent, MatchState, CompletedCall](in,
+      Seq("process"), _.process, None)(processGroup(allowedLatenessNs))
   }
 
   private[streaming] def processGroup(allowedLatenessNs: Long)(

@@ -1,11 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas._
-import graft.streaming.BatchReplay.{str, utf8, ReplayState}
+import graft.streaming.BatchReplay.keyed
 
 /** Structured Streaming counterparts of the batch analyses (SURVEY §1.4
   * noted streaming as the natural extension; pipit itself is batch-only —
@@ -16,6 +15,10 @@ import graft.streaming.BatchReplay.{str, utf8, ReplayState}
   * wall-clock epoch, or real ingest time). All operators are watermarked,
   * incremental, and shuffle on the same keys as their batch twins — the
   * plan shape survives a 1000-executor deployment unchanged.
+  *
+  * The keyed stateful twins all run through [[BatchReplay.keyed]]:
+  * `flatMapGroupsWithState` on a stream, one closed micro-batch of the
+  * same group function on a batch input.
   */
 object StreamingOps {
 
@@ -409,33 +412,12 @@ object StreamingOps {
                  idCol: String = "event_id",
                  valCol: String = "value",
                  idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import left.sparkSession.implicits._
     def tag(df: DataFrame, side: Int) = df.select(
       col(keyCol).cast("long").as("k"), col(tsCol).cast("long").as("t"),
       lit(side).as("side"), col(idCol).cast("long").as("id"),
       col(valCol).cast("double").as("v"))
-    val in = tag(left, 1).union(tag(right, 0))
-    if (in.isStreaming)
-      in.as[AsOfIn]
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          asOfGroup(idleTimeout))(
-          Encoders.product[AsOfState], Encoders.product[AsOfOut])
-        .toDF()
-    else
-      BatchReplay.replay[Long, AsOfIn](in, Seq("k"), _.getLong(0),
-        r => AsOfIn(r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3),
-          r.getDouble(4)),
-        Encoders.product[AsOfOut].schema,
-        (k, rows) => asOfGroup(idleTimeout)(k, rows,
-          new ReplayState[AsOfState]).map(o =>
-          new GenericInternalRow(
-            Array[Any](o.k, o.id, o.t, o.r_id.map(Long.box).orNull,
-              o.r_t.map(Long.box).orNull, o.r_v.map(Double.box).orNull))))
+    keyed[Long, AsOfIn, AsOfState, AsOfOut](tag(left, 1).union(tag(right, 0)),
+      Seq("k"), _.k, idleTimeout)(asOfGroup(idleTimeout))
   }
 
   case class AsOfIn(k: Long, t: Long, side: Int, id: Long, v: Double)
@@ -482,28 +464,11 @@ object StreamingOps {
   def concurrency(deltas: DataFrame, keyCol: String = "process",
                   tsCol: String = "t", deltaCol: String = "delta",
                   idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import deltas.sparkSession.implicits._
     val in = deltas.select(col(keyCol).cast("long").as("k"),
       col(tsCol).cast("long").as("t"),
       col(deltaCol).cast("long").as("d"))
-    if (in.isStreaming)
-      in.as[ConcIn]
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          concGroup(idleTimeout))(
-          Encoders.product[ConcState], Encoders.product[ConcOut])
-        .toDF()
-    else
-      BatchReplay.replay[Long, ConcIn](in, Seq("k"), _.getLong(0),
-        r => ConcIn(r.getLong(0), r.getLong(1), r.getLong(2)),
-        Encoders.product[ConcOut].schema,
-        (k, rows) => concGroup(idleTimeout)(k, rows,
-          new ReplayState[ConcState]).map(o => new GenericInternalRow(
-          Array[Any](o.k, o.level, o.t0, o.t1, o.in_order))))
+    keyed[Long, ConcIn, ConcState, ConcOut](in, Seq("k"), _.k, idleTimeout)(
+      concGroup(idleTimeout))
   }
 
   case class ConcIn(k: Long, t: Long, d: Long)
@@ -557,29 +522,11 @@ object StreamingOps {
                   tsCol: String = "t", idCol: String = "event_id",
                   stateCol: String = "event_type",
                   idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
     val in = events.select(col(keyCol).cast("long").as("k"),
       col(tsCol).cast("long").as("t"), col(idCol).cast("long").as("id"),
       col(stateCol).cast("string").as("s"))
-    if (in.isStreaming)
-      in.as[TransIn]
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          transGroup(idleTimeout))(
-          Encoders.product[TransState], Encoders.product[TransOut])
-        .toDF()
-    else
-      BatchReplay.replay[Long, TransIn](in, Seq("k"), _.getLong(0),
-        r => TransIn(r.getLong(0), r.getLong(1), r.getLong(2), str(r, 3)),
-        Encoders.product[TransOut].schema,
-        (k, rows) => transGroup(idleTimeout)(k, rows,
-          new ReplayState[TransState]).map(o => new GenericInternalRow(
-          Array[Any](o.k, utf8(o.from_state), utf8(o.to_state), o.t,
-            o.in_order))))
+    keyed[Long, TransIn, TransState, TransOut](in, Seq("k"), _.k, idleTimeout)(
+      transGroup(idleTimeout))
   }
 
   /** Streaming twin of `Sessionize.guardedMatch` — CEP-lite "target
@@ -596,29 +543,11 @@ object StreamingOps {
                    idCol: String = "event_id",
                    typeCol: String = "event_type",
                    idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
     val in = events.select(col(keyCol).cast("long").as("k"),
       col(tsCol).cast("long").as("t"), col(idCol).cast("long").as("id"),
       col(typeCol).cast("string").as("s"))
-    if (in.isStreaming)
-      in.as[TransIn]
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          guardGroup(target, trigger, blocker, windowUs, idleTimeout))(
-          Encoders.product[GuardState], Encoders.product[GuardOut])
-        .toDF()
-    else
-      BatchReplay.replay[Long, TransIn](in, Seq("k"), _.getLong(0),
-        r => TransIn(r.getLong(0), r.getLong(1), r.getLong(2), str(r, 3)),
-        Encoders.product[GuardOut].schema,
-        (k, rows) => guardGroup(target, trigger, blocker, windowUs,
-          idleTimeout)(k, rows, new ReplayState[GuardState])
-          .map(o => new GenericInternalRow(
-            Array[Any](o.k, o.t, o.matched))))
+    keyed[Long, TransIn, GuardState, GuardOut](in, Seq("k"), _.k, idleTimeout)(
+      guardGroup(target, trigger, blocker, windowUs, idleTimeout))
   }
 
   case class GuardState(lt: Long, lb: Long) // -1 = unseen
@@ -691,30 +620,13 @@ object StreamingOps {
              idCol: String = "event_id",
              stepCol: String = "event_type",
              idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
     require(steps.nonEmpty, "funnel needs at least one step")
     val stepList = steps.toList
     val in = events.select(col(keyCol).cast("long").as("k"),
       col(tsCol).cast("long").as("t"), col(idCol).cast("long").as("id"),
       col(stepCol).as("step"))
-    if (in.isStreaming)
-      in.as[FunnelIn]
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          funnelGroup(stepList, idleTimeout))(
-          Encoders.product[FunnelState], Encoders.product[FunnelOut])
-        .toDF()
-    else
-      BatchReplay.replay[Long, FunnelIn](in, Seq("k"), _.getLong(0),
-        r => FunnelIn(r.getLong(0), r.getLong(1), r.getLong(2), str(r, 3)),
-        Encoders.product[FunnelOut].schema,
-        (k, rows) => funnelGroup(stepList, idleTimeout)(k, rows,
-          new ReplayState[FunnelState]).map(o => new GenericInternalRow(
-          Array[Any](o.k, o.depth, o.t))))
+    keyed[Long, FunnelIn, FunnelState, FunnelOut](in, Seq("k"), _.k,
+      idleTimeout)(funnelGroup(stepList, idleTimeout))
   }
 
   case class FunnelIn(k: Long, t: Long, id: Long, step: String)
@@ -763,27 +675,10 @@ object StreamingOps {
                    dayMicros: Long = 86400000000L,
                    horizonDays: Int = 370,
                    idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
     val in = events.select(col(keyCol).cast("long").as("k"),
       expr(s"$tsCol div $dayMicros").as("day"))
-    if (in.isStreaming)
-      in.as[CohortIn]
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          cohortGroup(horizonDays, idleTimeout))(
-          Encoders.product[CohortState], Encoders.product[CohortOut])
-        .toDF()
-    else
-      BatchReplay.replay[Long, CohortIn](in, Seq("k"), _.getLong(0),
-        r => CohortIn(r.getLong(0), r.getLong(1)),
-        Encoders.product[CohortOut].schema,
-        (k, rows) => cohortGroup(horizonDays, idleTimeout)(k, rows,
-          new ReplayState[CohortState]).map(o => new GenericInternalRow(
-          Array[Any](o.k, o.cohort_day, o.day_offset))))
+    keyed[Long, CohortIn, CohortState, CohortOut](in, Seq("k"), _.k,
+      idleTimeout)(cohortGroup(horizonDays, idleTimeout))
   }
 
   /** Streaming twin of [[graft.analysis.TraceSample.sampleCalls]]:
@@ -798,32 +693,13 @@ object StreamingOps {
     * the repo-wide bounded-state streaming contract. */
   def sampledCalls(events: DataFrame, num: Int, den: Int, seed: Int = 7,
                    idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
     require(den > 0 && num >= 0 && num <= den,
       s"sample fraction must be a rational in [0, 1]: $num/$den")
     val in = events.select(col(Process).cast("int").as("p"),
       col(TimestampNs).cast("long").as("ts"),
       col(EventType).as("et"), col(Name).as("nm"))
-    val sampled =
-      if (in.isStreaming)
-        in.as[SampIn]
-          .groupByKey(_.p)
-          .flatMapGroupsWithState(OutputMode.Append(),
-            if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-            else GroupStateTimeout.NoTimeout())(
-            sampGroup(num, den, seed, idleTimeout))(
-            Encoders.product[SampState], Encoders.product[SampOut])
-          .toDF()
-      else
-        BatchReplay.replay[Int, SampIn](in, Seq("p"), _.getInt(0),
-          r => SampIn(r.getInt(0), r.getLong(1), str(r, 2), str(r, 3)),
-          Encoders.product[SampOut].schema,
-          (k, rows) => sampGroup(num, den, seed, idleTimeout)(k, rows,
-            new ReplayState[SampState]).map(o => new GenericInternalRow(
-            Array[Any](o.p, o.ts, utf8(o.et), utf8(o.nm), o.in_order))))
-    sampled
+    keyed[Int, SampIn, SampState, SampOut](in, Seq("p"), _.p, idleTimeout)(
+      sampGroup(num, den, seed, idleTimeout))
       .withColumnRenamed("p", Process).withColumnRenamed("ts", TimestampNs)
       .withColumnRenamed("et", EventType).withColumnRenamed("nm", Name)
   }
@@ -908,28 +784,11 @@ object StreamingOps {
                            tsCol: String = "t_us", window: Int = 7,
                            dayMicros: Long = 86400000000L,
                            idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
     require(window > 0, s"window must be positive: $window")
     val in = events.select(col(keyCol).cast("long").as("k"),
       expr(s"$tsCol div $dayMicros").as("day"))
-    if (in.isStreaming)
-      in.as[CohortIn]
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          rollGroup(window, idleTimeout))(
-          Encoders.product[RollState], Encoders.product[RollOut])
-        .toDF()
-    else
-      BatchReplay.replay[Long, CohortIn](in, Seq("k"), _.getLong(0),
-        r => CohortIn(r.getLong(0), r.getLong(1)),
-        Encoders.product[RollOut].schema,
-        (k, rows) => rollGroup(window, idleTimeout)(k, rows,
-          new ReplayState[RollState]).map(o => new GenericInternalRow(
-          Array[Any](o.k, o.day, utf8(o.kind), o.in_order))))
+    keyed[Long, CohortIn, RollState, RollOut](in, Seq("k"), _.k, idleTimeout)(
+      rollGroup(window, idleTimeout))
   }
 
   case class RollState(lastDay: Long, lastEmitted: Long)
@@ -1017,28 +876,11 @@ object StreamingOps {
   def intervalUnion(spans: DataFrame, keyCol: String = "key",
                     startCol: String = "start", endCol: String = "end",
                     idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import spans.sparkSession.implicits._
     val in = spans.select(col(keyCol).cast("long").as("k"),
       col(startCol).cast("long").as("s"),
       col(endCol).cast("long").as("e"))
-    if (in.isStreaming)
-      in.as[IvIn]
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          ivGroup(idleTimeout))(
-          Encoders.product[IvState], Encoders.product[IvOut])
-        .toDF()
-    else
-      BatchReplay.replay[Long, IvIn](in, Seq("k"), _.getLong(0),
-        r => IvIn(r.getLong(0), r.getLong(1), r.getLong(2)),
-        Encoders.product[IvOut].schema,
-        (k, rows) => ivGroup(idleTimeout)(k, rows,
-          new ReplayState[IvState]).map(o => new GenericInternalRow(
-          Array[Any](o.k, o.start, o.end, o.n_spans, o.in_order))))
+    keyed[Long, IvIn, IvState, IvOut](in, Seq("k"), _.k, idleTimeout)(
+      ivGroup(idleTimeout))
   }
 
   /** Streaming twin of [[graft.analysis.MergeApply.applyCdc]]: keyed
@@ -1059,29 +901,12 @@ object StreamingOps {
                seqCol: String = "seq", opCol: String = "op",
                valCol: String = "val_c",
                idleTimeout: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import changes.sparkSession.implicits._
     val in = changes.select(col(keyCol).cast("long").as("k"),
       col(seqCol).cast("long").as("seq"),
       col(opCol).cast("string").as("op"),
       col(valCol).cast("long").as("v"))
-    if (in.isStreaming)
-      in.as[CdcIn]
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-          else GroupStateTimeout.NoTimeout())(
-          cdcGroup(idleTimeout))(
-          Encoders.product[CdcState], Encoders.product[CdcOut])
-        .toDF()
-    else
-      BatchReplay.replay[Long, CdcIn](in, Seq("k"), _.getLong(0),
-        r => CdcIn(r.getLong(0), r.getLong(1), str(r, 2), r.getLong(3)),
-        Encoders.product[CdcOut].schema,
-        (k, rows) => cdcGroup(idleTimeout)(k, rows,
-          new ReplayState[CdcState]).map(o => new GenericInternalRow(
-          Array[Any](o.k, o.seq, utf8(o.op), o.v, o.deleted, o.n_stale))))
+    keyed[Long, CdcIn, CdcState, CdcOut](in, Seq("k"), _.k, idleTimeout)(
+      cdcGroup(idleTimeout))
   }
 
   /** Exactly-once-EFFECT ingest from an at-least-once source: drop

@@ -158,8 +158,9 @@ class ImageNearDupSpec extends SparkSpec {
       .writeStream.format("memory").queryName("imgnearv").outputMode("append")
       .start()
     try {
-      stream.addData((0L until 10L).map(i => (i, 5L, 9L)) :+
-        (99L, 0xFFFFL, 0xAAAAL): _*)
+      val hashes = (0L until 10L).map(i => (i, 5L, 9L)) :+
+        ((99L, 0xFFFFL, 0xAAAAL))
+      stream.addData(hashes: _*)
       q.processAllAvailable()
       val pairs = spark.table("imgnearv").select("a", "b").distinct()
         .as[(Long, Long)].collect().toSet
@@ -167,6 +168,13 @@ class ImageNearDupSpec extends SparkSpec {
       // the all-zero band slices but is beyond the radius — dropped
       assert(pairs == ((0L until 4L).flatMap(a =>
         (a + 1 until 4L).map(a -> _)) ++ (4L until 10L).map(0L -> _)).toSet)
+      // the batch replay of the same hashes equals this one micro-batch
+      val batch = graft.streaming.StreamingLsh.hammingCandidates(
+          hashes.toDF("doc_id", "ahash_hi", "ahash_lo"),
+          radius = 3, maxBucketSize = 4)
+        .collect().map(_.toString).sorted
+      assert(batch.toSeq ==
+        spark.table("imgnearv").collect().map(_.toString).sorted.toSeq)
     } finally q.stop()
   }
 

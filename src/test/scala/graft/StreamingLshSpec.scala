@@ -49,6 +49,13 @@ class StreamingLshSpec extends SparkSpec {
       // ids 1,2 fill the bucket (pair 1-2); 3 and 4 link to hub 1 only
       assert(pairs == Set((1L, 2L), (1L, 3L), (1L, 4L)))
       // connected components identical to the uncapped clique
+      // the batch replay of the same docs equals this one micro-batch
+      val batch = StreamingLsh.lshCandidates(
+          Seq((1L, textA), (2L, textA), (3L, textA), (4L, textA))
+            .toDF("doc_id", "text"), maxBucketSize = 2)
+        .collect().map(_.toString).sorted
+      assert(batch.toSeq ==
+        spark.table("lshv").collect().map(_.toString).sorted.toSeq)
     } finally q.stop()
   }
 

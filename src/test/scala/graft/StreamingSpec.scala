@@ -128,6 +128,20 @@ class StreamingSpec extends SparkSpec {
       c.getMessage.contains("'process'")), e)
   }
 
+  test("batch concurrency throws on a null tick time instead of reading 0") {
+    // the batch replay decodes through the same encoder as the stream, so
+    // a null in a primitive non-key field fails in both modes
+    val deltas = Seq[(Long, Option[Long], Long)](
+      (0L, Some(0L), 1L), (0L, None, -1L), (0L, Some(10L), -1L))
+      .toDF("process", "t", "delta")
+    val e = intercept[Exception] {
+      StreamingOps.concurrency(deltas).collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c =>
+      String.valueOf(c.getMessage).contains("non-nullable")), e)
+  }
+
   test("matcher lateness bound drops cross-batch stragglers; default accepts") {
     implicit val sqlCtx = spark.sqlContext
     // bounded: 5ns allowed lateness
@@ -297,5 +311,41 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._2)
       assert(segs.toSeq == Seq((1L, 0L, 5L), (2L, 5L, 8L), (1L, 8L, 10L)))
     } finally q.stop()
+  }
+
+  test("one micro-batch equals the batch result for sampled calls, " +
+      "rolling contributions and interval union") {
+    import org.apache.spark.sql.{DataFrame, Encoder, Row}
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    import graft.model.Schemas.{Enter, EventType, Leave, Name, Process, TimestampNs}
+    val calls = (for {
+      p <- 0 to 1; c <- 0 until 12
+      (dt, et, nm) <- Seq((0L, Enter, s"f$c"), (10L, Enter, "g"),
+        (20L, Leave, "g"), (900L, Leave, s"f$c"))
+    } yield (p, c * 1000L + p + dt, et, nm))
+      .toDF(Process, TimestampNs, EventType, Name)
+    val days = Seq((1L, 0L), (1L, 3L), (2L, 1L), (1L, 20L), (2L, 2L))
+      .map { case (u, d) => (u, d * 86400000000L + 5L) }.toDF("user_id", "t_us")
+    val spans = Seq((1L, 0L, 5L), (1L, 5L, 9L), (1L, 12L, 14L), (1L, 20L, 21L),
+      (2L, 3L, 4L), (2L, 7L, 8L)).toDF("key", "start", "end")
+    val cases = Seq[(String, DataFrame, DataFrame => DataFrame)](
+      ("sampled", calls, StreamingOps.sampledCalls(_, 1, 2)),
+      ("rolling", days, StreamingOps.rollingContributions(_)),
+      ("interval", spans, StreamingOps.intervalUnion(_)))
+    implicit val sqlCtx = spark.sqlContext
+    for ((name, in, op) <- cases) {
+      implicit val enc: Encoder[Row] = ExpressionEncoder(in.schema)
+      val stream = MemoryStream[Row]
+      val q = op(stream.toDF()).writeStream.format("memory")
+        .queryName(s"parity_$name").outputMode("append").start()
+      try {
+        stream.addData(in.collect().toSeq)
+        q.processAllAvailable()
+        val streamed = spark.table(s"parity_$name").collect().map(_.toString).sorted
+        val batch = op(in).collect().map(_.toString).sorted
+        assert(batch.nonEmpty, name)
+        assert(streamed.toSeq == batch.toSeq, name)
+      } finally q.stop()
+    }
   }
 }

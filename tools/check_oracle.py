@@ -132,7 +132,7 @@ width = max(len(k) for k in results)
 nok = sum(1 for v in results.values() if v.startswith("OK"))
 for k, v in sorted(results.items()):
     print(f"{k:<{width}}  {v}")
-print(f"\n{nok}/{len(results)} OK")
+print(f"\n{nok}/{len(results)} OK (DuckDB {duckdb.__version__})")
 if nok < len(results):
     print("\nNON-OK ROWS:")
     for k, v in sorted(results.items()):
