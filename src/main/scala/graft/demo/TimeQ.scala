@@ -12,8 +12,8 @@ import org.apache.spark.sql.execution.exchange.Exchange
   *   sbt "runMain graft.demo.TimeQ <sfDir> <nRuns> name1,name2,..."
   *
   * Prints per-run seconds, the median, executor CPU, shuffle bytes, the
-  * completed-stage and plan-exchange counts and the result's row count
-  * per query. Artifacts shared via the SparkEntry memoization layer build
+  * completed-stage, shuffle-writing-stage and plan-exchange counts and
+  * the result's row count per query. Artifacts shared via the SparkEntry memoization layer build
   * inside run 1 exactly like bench sweep 1; the per-artifact build
   * seconds print at the end so a "query"
   * number can be split into artifact vs query cost. */
@@ -22,7 +22,8 @@ object TimeQ {
     * execution, subqueries included. Unlike the completed-stage count,
     * which also counts broadcast-collect jobs, it is fixed for a fixed
     * plan. A sub-plan bridged through an RDD (the streaming twins'
-    * batch replay) is a leaf scan here, so its exchanges do not count. */
+    * batch replay) is a leaf scan here, so its exchanges do not count;
+    * `shuffle_stages`, the stages that wrote shuffle bytes, sees them. */
   private def exchanges(plan: SparkPlan): Int = plan match {
     case a: AdaptiveSparkPlanExec => exchanges(a.initialPlan)
     case p =>
@@ -44,6 +45,7 @@ object TimeQ {
     val cpuNs = new java.util.concurrent.atomic.AtomicLong()
     val shufB = new java.util.concurrent.atomic.AtomicLong()
     val nStages = new java.util.concurrent.atomic.AtomicLong()
+    val nShufStages = new java.util.concurrent.atomic.AtomicLong()
     val verbose = sys.env.get("TIMEQ_STAGES").contains("1")
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -54,6 +56,7 @@ object TimeQ {
           cpuNs.addAndGet(m.executorCpuTime)
           shufB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           nStages.incrementAndGet()
+          if (m.shuffleWriteMetrics.bytesWritten > 0) nShufStages.incrementAndGet()
           val dur = (for (s <- si.submissionTime; e <- si.completionTime)
             yield (e - s) / 1000.0).getOrElse(-1.0)
           if (verbose)
@@ -70,17 +73,18 @@ object TimeQ {
     val interleave = sys.env.get("TIMEQ_INTERLEAVE").contains("1")
     def timeOne(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                i: Int): (Double, Double, Long, Long, Long) = {
+                i: Int): (Double, Double, Long, Long, Long, Long) = {
       spark.sparkContext.setJobDescription(s"$name run$i")
       if (verbose && i == n) stages.clear()
-      val (c0, b0, s0) = (cpuNs.get, shufB.get, nStages.get)
+      val (c0, b0, s0, w0) = (cpuNs.get, shufB.get, nStages.get, nShufStages.get)
       val t0 = System.nanoTime()
       val rows = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(200) // let stage-completed events drain
-      (wall, (cpuNs.get - c0) / 1e9, shufB.get - b0, nStages.get - s0, rows)
+      (wall, (cpuNs.get - c0) / 1e9, shufB.get - b0, nStages.get - s0,
+        nShufStages.get - w0, rows)
     }
-    val sweepStats: Map[String, Seq[(Double, Double, Long, Long, Long)]] =
+    val sweepStats: Map[String, Seq[(Double, Double, Long, Long, Long, Long)]] =
       if (interleave)
         (1 to n).flatMap(i => names.map(name =>
           name -> timeOne(name, graft.SparkEntry.queries(name), i)))
@@ -97,8 +101,8 @@ object TimeQ {
       val last = stats.last
       val nEx = exchanges(fn(spark, sfDir).queryExecution.executedPlan)
       println(f"[timeq] $name%-28s median=$med%7.3f cpuMed=$cpuMed%7.3f " +
-        f"shufB=${last._3}%10d stages=${last._4}%3d exchanges=$nEx%3d " +
-        f"rows=${last._5}%d runs=${ts.map(t => f"$t%.3f").mkString(",")}")
+        f"shufB=${last._3}%10d stages=${last._4}%3d shuffle_stages=${last._5}%3d " +
+        f"exchanges=$nEx%3d rows=${last._6}%d runs=${ts.map(t => f"$t%.3f").mkString(",")}")
       if (verbose) stages.forEach(s => println(s"[timeq] $name $s"))
     }
     val arts = graft.SparkEntry.artifactBreakdown(spark).toSeq.sortBy(-_._2)

@@ -35,7 +35,13 @@ import graft.model.Schemas._
   * number of execution locations; memory = O(events of one location) per
   * task (the reference buffers the *whole* trace on one node; we buffer one
   * location per task — at cluster scale partition counts equal location
-  * counts, which for HPC traces is the natural sharding).
+  * counts, which for HPC traces is the natural sharding). An input that
+  * declares that clustering at `spark.sql.shuffle.partitions` and that
+  * ordering to Catalyst ([[graft.ingest.Otf2Reader]]'s output does, also
+  * once persisted) shuffles nothing: `EnsureRequirements` drops the
+  * repartition and `RemoveRedundantSorts` the sort, in both this pass and
+  * [[enrichBounded]]'s two. Declared at another partition count, the
+  * exchange stays.
   *
   * All other event rows (Instant etc.) pass through with null enrichment,
   * so downstream operators see the full events table plus the new columns

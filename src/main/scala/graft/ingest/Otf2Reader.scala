@@ -4,8 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSeq, BindReferences, GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RddBridge
 import org.apache.spark.sql.types._
 
 import graft.model.Schemas._
@@ -46,8 +51,23 @@ import graft.model.Schemas._
   * documented limitation).
   *
   * Spark shape: global defs are a small dimension → parsed on the driver,
-  * broadcast; one Spark task per location event file (the archive's
-  * natural sharding, same as the reference's per-location pool).
+  * broadcast. Each location event file is decoded in the task of the
+  * partition `repartition(process, thread)` hashes it to at
+  * `spark.sql.shuffle.partitions` (Spark's own partition-id expression,
+  * evaluated on the driver); a task decodes its locations in (process,
+  * thread) order, each location's rows in (timestamp, seq) order (a file
+  * whose timestamps step back is sorted in the task).
+  * Dense ids come from a slim pass: the files are decoded a second time
+  * (one task per non-empty partition), only the keys (timestamp,
+  * location, seq, process, thread) take [[Ingest.assignDenseIds]]' global
+  * sort, and `repartition(n, process, thread)` brings each id back to its
+  * location's partition, where it is zipped onto its row. The result
+  * declares that clustering and the ordering (process, thread,
+  * timestamp_ns, event_id) to Catalyst
+  * (`RddBridge.fromClusteredInternalRdd`), so [[graft.enrich.EventMatcher]]'s
+  * repartition and sort plan away and no full row is shuffled between
+  * the files and the enriched trace. The reference sorts each reader's
+  * output by timestamp before matching (otf2_reader.py:473-476).
   */
 object Otf2Reader {
 
@@ -62,37 +82,48 @@ object Otf2Reader {
     (v, j0 + 1 + n)
   }
 
+  private def le64(b: Array[Byte], at: Int): Long =
+    java.nio.ByteBuffer.wrap(b, at, 8).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
+
   /** Record walk over one file; `at` is the byte offset of the record
-    * `next()` returned last. */
-  private final class Records(bytes: Array[Byte], isEvt: Boolean)
+    * `next()` returned last. A record that runs past the end of the file
+    * (a truncated archive) throws, naming `file` and the record's offset:
+    * `copyOfRange` would zero-pad it into a wrong but plausible event. */
+  private final class Records(bytes: Array[Byte], file: String, isEvt: Boolean)
       extends Iterator[(Int, Array[Byte])] {
+    if (bytes.length > 0 && bytes.length < 18) throw new IllegalArgumentException(
+      s"OTF2 file $file is ${bytes.length} bytes, shorter than its 18-byte chunk header")
     private var i = 18 // skip chunk header
     var at: Int = -1
+    private def need(end: Long): Unit =
+      if (end > bytes.length) throw new IllegalArgumentException(
+        s"OTF2 record at byte $at of $file runs past the end of the file " +
+          s"(ends at byte $end of ${bytes.length}): the file is truncated")
     override def hasNext: Boolean = i < bytes.length
     override def next(): (Int, Array[Byte]) = {
       at = i
       val t = bytes(i) & 0xff
-      if (t == 0x05 && isEvt) { // timestamp: raw u64, no length byte
-        val p = java.util.Arrays.copyOfRange(bytes, i + 1, i + 9)
-        i += 9
-        (0x05, p)
-      } else {
-        var l = bytes(i + 1) & 0xff
-        var off = i + 2
-        if (l == 0xff) {
-          l = java.nio.ByteBuffer.wrap(bytes, i + 2, 8)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong.toInt
+      var off = i + 1
+      var len = 8L
+      if (t != 0x05 || !isEvt) { // a timestamp is a raw u64 with no length byte
+        need(i + 2L)
+        len = bytes(i + 1) & 0xff
+        off = i + 2
+        if (len == 0xff) {
+          need(i + 10L)
+          len = le64(bytes, i + 2)
           off = i + 10
         }
-        val p = java.util.Arrays.copyOfRange(bytes, off, off + l)
-        i = off + l
-        (t, p)
       }
+      need(if (len < 0) Long.MaxValue else off + len)
+      i = off + len.toInt
+      (t, java.util.Arrays.copyOfRange(bytes, off, i))
     }
   }
 
-  private def records(bytes: Array[Byte], isEvt: Boolean = false): Records =
-    new Records(bytes, isEvt)
+  private def records(bytes: Array[Byte], file: String,
+                      isEvt: Boolean = false): Records =
+    new Records(bytes, file, isEvt)
 
   /** Region ref in Enter/Leave payloads: length-delimited record makes the
     * count byte redundant for single-field records, so Score-P writes the
@@ -120,16 +151,16 @@ object Otf2Reader {
                       memberColIdx: Map[Long, Int] = Map.empty) extends Serializable
 
   private[ingest] def parseGlobalDefs(path: String): Otf2Meta =
-    parseGlobalDefs(Files.readAllBytes(Paths.get(path)))
+    parseGlobalDefs(Files.readAllBytes(Paths.get(path)), Paths.get(path).getFileName.toString)
 
-  private[ingest] def parseGlobalDefs(bytes: Array[Byte]): Otf2Meta = {
+  private[ingest] def parseGlobalDefs(bytes: Array[Byte], file: String): Otf2Meta = {
     val strings = mutable.Map[Long, String]()
     val regions = mutable.Map[Long, Long]()
     val locations = mutable.ArrayBuffer[(Long, Long)]()
     val memberNameRef = mutable.LinkedHashMap[Long, Long]()
     val classMembers = mutable.LinkedHashMap[Long, Seq[Long]]()
     var resolution = 1L; var offset = 0L
-    for ((t, p) <- records(bytes)) t match {
+    for ((t, p) <- records(bytes, file)) t match {
       case 0x0a => // String: [ref][chars...\0]
         val (ref, j) = compressed(p, 0)
         strings(ref) = new String(p, j, p.length - j - 1, "UTF-8")
@@ -174,7 +205,7 @@ object Otf2Reader {
 
   // ---- events ---------------------------------------------------------
 
-  private def outSchema(metricNames: Seq[String]): StructType = StructType(Seq(
+  private[ingest] def outSchema(metricNames: Seq[String]): StructType = StructType(Seq(
     StructField("loc", LongType, nullable = false),
     StructField("seq", LongType, nullable = false),
     StructField(TimestampNs, LongType, nullable = false),
@@ -195,27 +226,28 @@ object Otf2Reader {
     case _  => raw.toDouble // integer types (signed fit in the Long)
   }
 
-  private[ingest] def parseEvents(meta: Otf2Meta, bytes: Array[Byte],
-                                  loc: Long, process: Int, thread: Int): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
-    // EXACT tick→ns conversion. The naive double formula
-    // ((ticks−off)·1e9/res).toLong loses 1 ns whenever the product needs
-    // more than 53 mantissa bits and rounds DOWN (at res = 1e9 this hits
-    // ticks ≥ ~10 s seed-dependently: the seed-101 sf0.1 gate caught
-    // 201k such flips in trace_otf2_roundtrip). Divisible resolutions
-    // (incl. our writer's 1e9) take pure integer paths; the general case
-    // splits quotient/remainder so the only float work is the
-    // sub-tick fraction in [0,1), where a double is exact to 1e-7 ns.
-    def toNs(ticks: Long): Long = {
-      val d = ticks - meta.globalOffset
-      val res = meta.resolution
-      if (res == 1000000000L) d
-      else if (1000000000L % res == 0) d * (1000000000L / res)
-      else {
-        val q = d / res
-        val r = d - q * res
-        q * 1000000000L + Math.round(r.toDouble / res * 1e9)
-      }
+  // EXACT tick→ns conversion. The naive double formula
+  // ((ticks−off)·1e9/res).toLong loses 1 ns whenever the product needs
+  // more than 53 mantissa bits and rounds DOWN (at res = 1e9 this hits
+  // ticks ≥ ~10 s seed-dependently: the seed-101 sf0.1 gate caught
+  // 201k such flips in trace_otf2_roundtrip). Divisible resolutions
+  // (incl. our writer's 1e9) take pure integer paths; the general case
+  // splits quotient/remainder so the only float work is the
+  // sub-tick fraction in [0,1), where a double is exact to 1e-7 ns.
+  private def toNs(meta: Otf2Meta, ticks: Long): Long = {
+    val d = ticks - meta.globalOffset
+    val res = meta.resolution
+    if (res == 1000000000L) d
+    else if (1000000000L % res == 0) d * (1000000000L / res)
+    else {
+      val q = d / res
+      val r = d - q * res
+      q * 1000000000L + Math.round(r.toDouble / res * 1e9)
     }
+  }
+
+  private[ingest] def parseEvents(meta: Otf2Meta, bytes: Array[Byte], file: String,
+                                  loc: Long, process: Int, thread: Int): Iterator[InternalRow] = {
     var ts = 0L
     var seq = 0L
     val nMetrics = meta.metricNames.size
@@ -231,8 +263,6 @@ object Otf2Reader {
     // attribute bag is converted to catalyst MapData once per region,
     // and every emitted row is a fresh GenericInternalRow (no reuse), so
     // downstream operators may buffer them without copying.
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.unsafe.types.UTF8String
     val utf8 = new java.util.HashMap[String, UTF8String]()
     def u8(s: String): UTF8String = {
@@ -266,7 +296,7 @@ object Otf2Reader {
             recv: Any = null, msgLen: Any = null): InternalRow = {
       seq += 1
       val vals = new Array[Any](10 + nMetrics)
-      vals(0) = loc; vals(1) = seq; vals(2) = toNs(ts)
+      vals(0) = loc; vals(1) = seq; vals(2) = toNs(meta, ts)
       vals(3) = et; vals(4) = nm; vals(5) = process; vals(6) = thread
       vals(7) = attrs; vals(8) = recv; vals(9) = msgLen
       if (nMetrics > 0) {
@@ -286,10 +316,10 @@ object Otf2Reader {
     def rowS(et: UTF8String, nm: String, attrs: Map[String, String] = null,
              recv: Any = null, msgLen: Any = null): InternalRow =
       row(et, u8(nm), mapData(attrs), recv, msgLen)
-    records(bytes, isEvt = true).flatMap { case (t, p) =>
+    records(bytes, file, isEvt = true).flatMap { case (t, p) =>
       t match {
         case 0x05 =>
-          ts = java.nio.ByteBuffer.wrap(p).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
+          ts = le64(p, 0)
           Nil
         case 0x0c =>
           // Enter rows carry the attribute bag; Leave rows stay null so a
@@ -417,9 +447,9 @@ object Otf2Reader {
     val base = anchor.getName.stripSuffix(".otf2")
     // one read feeds both the meta parse and the raw record walk below
     val bytes = Files.readAllBytes(Paths.get(s"$dir/$base.def"))
-    val meta = parseGlobalDefs(bytes)
+    val meta = parseGlobalDefs(bytes, s"$base.def")
     val strings = mutable.Map[Long, String]()
-    records(bytes).foreach { case (t, p) =>
+    records(bytes, s"$base.def").foreach { case (t, p) =>
       if (t == 10) {
         val (ref, j) = compressed(p, 0)
         strings(ref) = new String(p, j, p.length - j - 1, "UTF-8")
@@ -427,7 +457,7 @@ object Otf2Reader {
     }
     def str(ref: Long): String = strings.getOrElse(ref, s"String $ref")
     // a record too short for its type's fields fails naming where it sits
-    val recs = records(bytes)
+    val recs = records(bytes, s"$base.def")
     val rows = recs.filter(_._1 != 2).map { case (t, p) =>
       val typeName = defTypeNames.getOrElse(t, s"Unknown_$t")
       try {
@@ -494,8 +524,71 @@ object Otf2Reader {
       StructField(Attributes, MapType(StringType, StringType), nullable = false))))
   }
 
+  /** The partition `repartition(n, process, thread)` sends a location
+    * to: Spark's own `HashPartitioning` partition-id expression, bound
+    * and evaluated on the driver. */
+  private[ingest] def locationPartition(n: Int): (Int, Int) => Int = {
+    val attrs = Seq(AttributeReference(Process, IntegerType, nullable = false)(),
+      AttributeReference(Thread, IntegerType, nullable = false)())
+    val pid = BindReferences.bindReference(
+      HashPartitioning(attrs, n).partitionIdExpression, AttributeSeq(attrs))
+    (process, thread) => pid.eval(InternalRow(process, thread)).asInstanceOf[Int]
+  }
+
+  /** (timestamp, seq): the order a location's rows leave its task in. */
+  private val byTsSeq: java.util.Comparator[InternalRow] = (a, b) => {
+    val c = java.lang.Long.compare(a.getLong(2), b.getLong(2))
+    if (c != 0) c else java.lang.Long.compare(a.getLong(1), b.getLong(1))
+  }
+
+  /** Whether no timestamp record of an event file steps back, so that
+    * `parseEvents` already emits its rows in (timestamp, seq) order. */
+  private def timestampsInOrder(bytes: Array[Byte], file: String): Boolean = {
+    var last = Long.MinValue
+    records(bytes, file, isEvt = true).forall { case (t, p) =>
+      t != 0x05 || { val ts = le64(p, 0); val ok = ts >= last; last = ts; ok }
+    }
+  }
+
+  /** Appends `event_id` to each decoded row from the id rows
+    * (`loc`, `seq`, `event_id`), partition by partition and row by row.
+    * Throws when the two sides differ in partition count or row count,
+    * or an id row's (loc, seq) is not its decoded row's. The appended
+    * row is reused: the consumer is a scan that projects every row. */
+  private[ingest] def zipIds(rows: RDD[InternalRow],
+                             ids: RDD[InternalRow]): RDD[InternalRow] = {
+    def misaligned(what: String) =
+      new IllegalStateException(s"OTF2 dense ids misaligned with decoded rows: $what")
+    // AQE plans an empty id relation as a scan of no partitions at all
+    val idParts = if (ids.getNumPartitions > 0) ids
+      else rows.sparkContext.parallelize(Seq.empty[InternalRow], rows.getNumPartitions)
+    if (rows.getNumPartitions != idParts.getNumPartitions) throw misaligned(
+      s"${rows.getNumPartitions} row partitions, ${idParts.getNumPartitions} id partitions")
+    rows.zipPartitions(idParts) { (rs, is) =>
+      val joined = new JoinedRow
+      val id = new GenericInternalRow(1)
+      new Iterator[InternalRow] {
+        override def hasNext: Boolean = rs.hasNext ||
+          (if (is.hasNext) throw misaligned("more ids than rows") else false)
+        override def next(): InternalRow = {
+          val r = rs.next()
+          // hasNext first: generated scan iterators advance in it
+          if (!is.hasNext) throw misaligned(
+            s"no id for location ${r.getLong(0)} row ${r.getLong(1)}")
+          val i = is.next()
+          if (i.getLong(0) != r.getLong(0) || i.getLong(1) != r.getLong(1))
+            throw misaligned(s"id for location ${i.getLong(0)} row ${i.getLong(1)} " +
+              s"met location ${r.getLong(0)} row ${r.getLong(1)}")
+          id.setLong(0, i.getLong(2))
+          joined(r, id)
+        }
+      }
+    }
+  }
+
   /** Read an OTF2 archive directory (containing `<name>.otf2`,
-    * `<name>.def`, `traces/<loc>.evt`) into canonical events. */
+    * `<name>.def`, `traces/<loc>.evt`) into canonical events, laid out
+    * for [[graft.enrich.EventMatcher]] (see "Spark shape" above). */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val d = new java.io.File(dir)
     val anchor = d.listFiles().find(_.getName.endsWith(".otf2"))
@@ -511,20 +604,53 @@ object Otf2Reader {
       locs.map(_._1).sorted.zipWithIndex.map { case (l, i) => l -> i }
     }.toMap
     val locSpecs = meta.locations.map { case (loc, grp) =>
-      (loc, grp.toInt, threadOf(loc), s"$dir/traces/$loc.evt")
+      (loc, grp.toInt, threadOf(loc))
+    }.sortBy { case (_, p, t) => (p, t) }
+
+    // each location is decoded in the partition the matcher's
+    // repartition(process, thread) would hash it to
+    val n = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.numShufflePartitions
+    val partOf = locationPartition(n)
+    val byPart = locSpecs.groupBy { case (_, p, t) => partOf(p, t) }
+    def perLocation(parts: Seq[Seq[(Long, Int, Int)]])(parse: (Otf2Meta, Array[Byte],
+        String, Long, Int, Int) => Iterator[InternalRow]): RDD[InternalRow] =
+      spark.sparkContext.parallelize(parts, math.max(parts.size, 1))
+        .flatMap(_.iterator.flatMap { case (loc, proc, thr) =>
+          val path = s"$dir/traces/$loc.evt"
+          parse(metaBc.value, Files.readAllBytes(Paths.get(path)), path, loc, proc, thr)
+        })
+    // sorted in the task, so an archive whose timestamps step back still
+    // gets the declared ordering and the ids of the global sort; a file
+    // in order streams unbuffered
+    val decoded = perLocation((0 until n).map(byPart.getOrElse(_, Nil))) {
+      (m, bytes, path, loc, proc, thr) =>
+        val rows = parseEvents(m, bytes, path, loc, proc, thr)
+        if (timestampsInOrder(bytes, path)) rows
+        else {
+          val sorted = rows.toArray
+          java.util.Arrays.sort(sorted, byTsSeq)
+          sorted.iterator
+        }
     }
 
-    val rows = spark.sparkContext
-      .parallelize(locSpecs.toIndexedSeq, math.max(locSpecs.size, 1))
-      .flatMap { case (loc, proc, thr, path) =>
-        val bytes = Files.readAllBytes(Paths.get(path))
-        parseEvents(metaBc.value, bytes, loc, proc, thr)
-      }
+    // dense ids from the keys alone: only they take assignDenseIds' global
+    // sort, and each id returns to its location's partition. The key pass
+    // runs one task per non-empty partition, not n.
+    val keys = RddBridge.fromInternalRdd(spark,
+        perLocation(byPart.values.toSeq)(parseEvents), outSchema(meta.metricNames))
+      .select(col(TimestampNs), col("loc"), col("seq"), col(Process), col(Thread))
+    val ids = Ingest.assignDenseIds(keys, EventId, col(TimestampNs), col("loc"), col("seq"))
+      .select(col("loc"), col("seq"), col(Process), col(Thread), col(EventId))
+      .repartition(n, col(Process), col(Thread))
+      .sortWithinPartitions(col(Process), col(Thread), col(EventId))
+      .select(col("loc"), col("seq"), col(EventId))
 
-    Ingest.assignDenseIds(
-        org.apache.spark.sql.graftbridge.RddBridge.fromInternalRdd(
-          spark, rows, outSchema(meta.metricNames)),
-        EventId, col(TimestampNs), col("loc"), col("seq"))
+    RddBridge.fromClusteredInternalRdd(spark,
+        zipIds(decoded, RddBridge.toInternalRdd(ids)),
+        outSchema(meta.metricNames).add(EventId, LongType, nullable = false),
+        clusterBy = Seq(Process, Thread),
+        orderBy = Seq(Process, Thread, TimestampNs, EventId))
       .select((Seq(EventId, TimestampNs, EventType, Name,
         Process, Thread, Attributes, AttrReceiver, AttrMsgLength) ++
         meta.metricNames).map(col): _*)

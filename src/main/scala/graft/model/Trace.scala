@@ -103,9 +103,11 @@ case class Trace(events: DataFrame, definitions: Option[DataFrame] = None,
 object Trace {
   // The reference's `num_processes` reader knob (worker-pool sizing,
   // otf2_reader.py:436-455) has no analogue here: read parallelism is
-  // Spark input partitioning (one task per location/PE/trace line) and
-  // is governed by the cluster, not the API. `createCct` is kept for
-  // signature parity (trace.py:38-62).
+  // Spark input partitioning (one task per PE/trace line; the OTF2 reader
+  // runs spark.sql.shuffle.partitions tasks, each decoding the locations
+  // that hash to it, see Otf2Reader's "Spark shape") and is governed by
+  // the cluster, not the API. `createCct` is kept for signature parity
+  // (trace.py:38-62).
   def fromCsv(spark: SparkSession, path: String): Trace =
     Trace(CsvReader.read(spark, path))
   def fromNsight(spark: SparkSession, path: String,

@@ -145,8 +145,6 @@ object StreamingOps {
   def imageDedup(docs: DataFrame, payloadCol: String = "payload",
                  watermark: String = "1 hour",
                  timeCol: String = "event_time"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val hashUdf = udf((p: Array[Byte]) => {
       val (hi, lo) = graft.scale.Multimodal.averageHashHalves(p)
       (hi, lo)
