@@ -21,9 +21,10 @@ object TimeQ {
   /** Exchange nodes in a physical plan as planned before adaptive
     * execution, subqueries included. Unlike the completed-stage count,
     * which also counts broadcast-collect jobs, it is fixed for a fixed
-    * plan. A sub-plan bridged through an RDD (the streaming twins'
-    * batch replay) is a leaf scan here, so its exchanges do not count;
-    * `shuffle_stages`, the stages that wrote shuffle bytes, sees them. */
+    * plan. A sub-plan bridged through an RDD (the buffered matcher, a
+    * reader's dense ids) is a leaf scan here, so its exchanges do not
+    * count; `shuffle_stages`, the stages that wrote shuffle bytes, sees
+    * them. */
   private def exchanges(plan: SparkPlan): Int = plan match {
     case a: AdaptiveSparkPlanExec => exchanges(a.initialPlan)
     case p =>

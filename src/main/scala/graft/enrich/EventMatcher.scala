@@ -2,10 +2,13 @@ package graft.enrich
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{GroupPass, RddBridge}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.Schemas._
 
@@ -29,19 +32,19 @@ import graft.model.Schemas._
   *    mix(parent_path_hash, fnv1a64(name)) on matched Enter rows; the CCT
   *    table is recovered relationally in [[graft.cct.Cct]].
   *
-  * Spark shape: one `repartition(process[,thread])` +
-  * `sortWithinPartitions(location, timestamp_ns, event_id)` shuffle, then a
-  * single `mapPartitions` pass with group-change detection. Parallelism =
-  * number of execution locations; memory = O(events of one location) per
-  * task (the reference buffers the *whole* trace on one node; we buffer one
-  * location per task — at cluster scale partition counts equal location
-  * counts, which for HPC traces is the natural sharding). An input that
-  * declares that clustering at `spark.sql.shuffle.partitions` and that
-  * ordering to Catalyst ([[graft.ingest.Otf2Reader]]'s output does, also
-  * once persisted) shuffles nothing: `EnsureRequirements` drops the
-  * repartition and `RemoveRedundantSorts` the sort, in both this pass and
-  * [[enrichBounded]]'s two. Declared at another partition count, the
-  * exchange stays.
+  * Spark shape: one [[org.apache.spark.sql.graftbridge.GroupPass]] keyed
+  * on (process[, thread]) and ordered by (timestamp_ns, event_id): one
+  * exchange and sort that Catalyst plans, then one pass per location.
+  * The buffered pass runs as its own query when the DataFrame is built;
+  * the bounded passes are part of the caller's plan. Parallelism = number of execution locations; memory = O(events of one
+  * location) per task (the reference buffers the *whole* trace on one
+  * node; we buffer one location per task — at cluster scale partition
+  * counts equal location counts, which for HPC traces is the natural
+  * sharding). An input already clustered on the location columns, or on
+  * a subset of them, at any partition count shuffles nothing, and one
+  * sorted by (location, timestamp_ns, event_id) sorts nothing
+  * ([[graft.ingest.Otf2Reader]]'s output is both, also once persisted),
+  * in this pass and in [[enrichBounded]]'s two.
   *
   * All other event rows (Instant etc.) pass through with null enrichment,
   * so downstream operators see the full events table plus the new columns
@@ -108,157 +111,96 @@ object EventMatcher {
 
   private def enrichBuffered(events: DataFrame): DataFrame = {
     val schema = events.schema
-    val hasThread = events.columns.contains(Thread)
-    val outSchema = StructType(schema.fields ++ enrichmentColumns)
-
     val idIdx = schema.fieldIndex(EventId)
     val tsIdx = schema.fieldIndex(TimestampNs)
     val typeIdx = schema.fieldIndex(EventType)
     val nameIdx = schema.fieldIndex(Name)
-    val procIdx = schema.fieldIndex(Process)
-    val thrIdx = if (hasThread) schema.fieldIndex(Thread) else -1
 
-    val locCols = if (hasThread) Seq(col(Process), col(Thread)) else Seq(col(Process))
-    val sorted = events
-      .repartition(locCols: _*)
-      .sortWithinPartitions(locCols ++ Seq(col(TimestampNs), col(EventId)): _*)
-
-    // The pass runs over InternalRow (r11, guide §4.1): the former
-    // Dataset.mapPartitions(...)(Encoders.row) shape paid the RowEncoder
-    // round trip — every input deserialized to an external Row, every
-    // output re-serialized — which dominated the matcher's cost (the
-    // matching itself is integer array walks). Input rows are copied
-    // when buffered (toRdd reuses the row per iterator step); each
+    // The pass reads InternalRows in place: a RowEncoder round trip per
+    // row (external Row in, external Row out) costs more than the
+    // matching itself, which is integer array walks (r11, guide §4.1).
+    // Input rows are copied when buffered (the scan reuses its row); each
     // output is a fresh JoinedRow(input, enrichment) so no reuse hazard.
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    val spark = events.sparkSession
-    val enterU8 = org.apache.spark.unsafe.types.UTF8String.fromString(Enter)
-    val leaveU8 = org.apache.spark.unsafe.types.UTF8String.fromString(Leave)
+    val pass = GroupPass(events, locationCols(events), Seq(TimestampNs, EventId),
+        StructType(schema.fields ++ enrichmentColumns)) { groups =>
+      groups.flatMap { case (_, group) =>
+        val rows = group.map(_.copy()).to(ArrayBuffer)
+        val n = rows.length
+        val matchId = new Array[Long](n)
+        val matchTs = new Array[Long](n)
+        val matched = new Array[Boolean](n)
 
-    val outRdd = org.apache.spark.sql.graftbridge.RddBridge
-      .toInternalRdd(sorted).mapPartitions { iter =>
-      new Iterator[InternalRow] {
-        private var out: Iterator[InternalRow] = Iterator.empty
-        private var pending: InternalRow = null
-
-        private def locKey(r: InternalRow): (Int, Int) = {
-          val p = r.getInt(procIdx)
-          val t = if (thrIdx >= 0 && !r.isNullAt(thrIdx)) r.getInt(thrIdx) else -1
-          (p, t)
+        // pass 1: matching (trace.py:106-191)
+        val stack = new ArrayBuffer[Int]()
+        var i = 0
+        while (i < n) {
+          val r = rows(i)
+          val et = r.getUTF8String(typeIdx)
+          if (et == EnterU8) {
+            stack += i
+          } else if (et == LeaveU8) {
+            val nm = r.getUTF8String(nameIdx)
+            var j = stack.length - 1
+            while (j >= 0 && rows(stack(j)).getUTF8String(nameIdx) != nm) j -= 1
+            if (j >= 0) {
+              val e = stack.remove(j)
+              matched(e) = true; matched(i) = true
+              matchId(e) = rows(i).getLong(idIdx)
+              matchId(i) = rows(e).getLong(idIdx)
+              matchTs(e) = rows(i).getLong(tsIdx)
+              matchTs(i) = rows(e).getLong(tsIdx)
+            }
+          }
+          i += 1
         }
 
-        private def processGroup(rows: ArrayBuffer[InternalRow]): Iterator[InternalRow] = {
-          val n = rows.length
-          val matchId = new Array[Long](n)
-          val matchTs = new Array[Long](n)
-          val matched = new Array[Boolean](n)
-          val depthArr = new Array[Int](n)
-          val parentArr = new Array[Long](n)
-          val hasParent = new Array[Boolean](n)
-          val hasDepth = new Array[Boolean](n)
-          val pathArr = new Array[Long](n)
-          val parentPathArr = new Array[Long](n)
-          val hasParentPath = new Array[Boolean](n)
-
-          // pass 1: matching (trace.py:106-191)
-          val stack = new ArrayBuffer[Int]()
-          var i = 0
-          while (i < n) {
-            val r = rows(i)
-            val et = r.getUTF8String(typeIdx)
-            if (et == enterU8) {
+        // pass 2: depth/parent/path + time metrics over matched Enters
+        // (trace.py:193-292; inc/exc per trace.py:318-325,357-363)
+        stack.clear()
+        val depth = new Array[Int](n)
+        val parent = Array.fill(n)(-1) // row index of the enclosing Enter
+        val path = new Array[Long](n)
+        val childIncSum = new Array[Long](n) // Σ direct children's inc per enter
+        i = 0
+        while (i < n) {
+          if (matched(i)) {
+            if (rows(i).getUTF8String(typeIdx) == EnterU8) {
+              depth(i) = stack.length
+              if (stack.nonEmpty) {
+                parent(i) = stack.last
+                childIncSum(stack.last) += matchTs(i) - rows(i).getLong(tsIdx)
+              }
+              path(i) = mix(if (stack.isEmpty) RootHash else path(stack.last),
+                fnv1a64(rows(i).getString(nameIdx)))
               stack += i
-            } else if (et == leaveU8) {
-              val nm = r.getUTF8String(nameIdx)
-              var j = stack.length - 1
-              while (j >= 0 && rows(stack(j)).getUTF8String(nameIdx) != nm) j -= 1
-              if (j >= 0) {
-                val e = stack.remove(j)
-                matched(e) = true; matched(i) = true
-                matchId(e) = rows(i).getLong(idIdx)
-                matchId(i) = rows(e).getLong(idIdx)
-                matchTs(e) = rows(i).getLong(tsIdx)
-                matchTs(i) = rows(e).getLong(tsIdx)
-              }
+            } else if (stack.nonEmpty) { // Leave pops unconditionally (matched stream is balanced)
+              stack.remove(stack.length - 1)
             }
-            i += 1
           }
-
-          // pass 2: depth/parent/path + time metrics over matched rows
-          // (trace.py:193-292; inc/exc per trace.py:318-325,357-363)
-          stack.clear()
-          val pathStack = new ArrayBuffer[Long]()
-          val childIncSum = new Array[Long](n) // Σ direct children's inc per enter
-          i = 0
-          while (i < n) {
-            if (matched(i)) {
-              val et = rows(i).getUTF8String(typeIdx)
-              if (et == enterU8) {
-                depthArr(i) = stack.length
-                hasDepth(i) = true
-                val inc = matchTs(i) - rows(i).getLong(tsIdx)
-                if (stack.nonEmpty) {
-                  val p = stack.last
-                  parentArr(i) = rows(p).getLong(idIdx)
-                  hasParent(i) = true
-                  childIncSum(p) += inc
-                }
-                val parentHash = if (pathStack.isEmpty) RootHash else pathStack.last
-                if (pathStack.nonEmpty) { parentPathArr(i) = parentHash; hasParentPath(i) = true }
-                pathArr(i) = mix(parentHash,
-                  fnv1a64(rows(i).getUTF8String(nameIdx).toString))
-                stack += i
-                pathStack += pathArr(i)
-              } else { // Leave pops unconditionally (matched stream is balanced)
-                if (stack.nonEmpty) { stack.remove(stack.length - 1); pathStack.remove(pathStack.length - 1) }
-              }
-            }
-            i += 1
-          }
-
-          rows.iterator.zipWithIndex.map { case (r, k) =>
-            val vals = new Array[Any](enrichmentColumns.length)
-            if (matched(k)) {
-              vals(0) = matchId(k)
-              vals(1) = matchTs(k)
-              val isEnter = r.getUTF8String(typeIdx) == enterU8
-              vals(2) = if (hasDepth(k)) Int.box(depthArr(k)) else null
-              vals(3) = if (hasParent(k)) Long.box(parentArr(k)) else null
-              vals(4) = if (isEnter) Long.box(pathArr(k)) else null
-              vals(5) = if (isEnter && hasParentPath(k)) Long.box(parentPathArr(k)) else null
-              if (isEnter) {
-                val inc = matchTs(k) - r.getLong(tsIdx)
-                vals(6) = Long.box(inc)
-                vals(7) = Long.box(inc - childIncSum(k))
-              }
-            }
-            new JoinedRow(r, new GenericInternalRow(vals)): InternalRow
-          }
+          i += 1
         }
 
-        private def advance(): Unit = {
-          if (out.hasNext) return
-          if (pending == null && !iter.hasNext) return
-          val buf = new ArrayBuffer[InternalRow]()
-          if (pending != null) { buf += pending; pending = null }
-          var key = if (buf.nonEmpty) locKey(buf(0)) else null
-          var done = false
-          while (!done && iter.hasNext) {
-            val r = iter.next().copy() // toRdd reuses the row object
-            if (key == null) { key = locKey(r); buf += r }
-            else if (locKey(r) == key) buf += r
-            else { pending = r; done = true }
+        rows.iterator.zipWithIndex.map { case (r, k) =>
+          val vals = new Array[Any](enrichmentColumns.length)
+          if (matched(k)) {
+            vals(0) = matchId(k)
+            vals(1) = matchTs(k)
+            if (r.getUTF8String(typeIdx) == EnterU8) { // the rest is set on Enters only
+              val inc = matchTs(k) - r.getLong(tsIdx)
+              vals(2) = depth(k)
+              if (parent(k) >= 0) { vals(3) = rows(parent(k)).getLong(idIdx); vals(5) = path(parent(k)) }
+              vals(4) = path(k)
+              vals(6) = inc
+              vals(7) = inc - childIncSum(k)
+            }
           }
-          if (buf.nonEmpty) out = processGroup(buf)
+          new JoinedRow(r, new GenericInternalRow(vals)): InternalRow
         }
-
-        override def hasNext: Boolean = { advance(); out.hasNext }
-        override def next(): InternalRow = { advance(); out.next() }
       }
     }
-    org.apache.spark.sql.graftbridge.RddBridge
-      .fromInternalRdd(spark, outRdd, outSchema)
+    // its own query: AQE never coalesces a persisted plan's last stage, and
+    // analyses over a persisted trace pay for every extra partition
+    RddBridge.fromInternalRdd(events.sparkSession, pass.queryExecution.toRdd, pass.schema)
   }
 
   /** Bounded-memory enrichment: identical output to the buffered path, but
@@ -280,43 +222,40 @@ object EventMatcher {
   def enrichBounded(events: DataFrame): DataFrame = {
     if (isEnriched(events)) return events
     val schema = events.schema
-    val hasThread = events.columns.contains(Thread)
-    val locCols = if (hasThread) Seq(col(Process), col(Thread)) else Seq(col(Process))
-    val sortCols = locCols ++ Seq(col(TimestampNs), col(EventId))
+    val locNames = locationCols(events)
+    val locCols = locNames.map(col)
+    val order = Seq(TimestampNs, EventId)
+    val nLoc = locCols.length
 
     // ---- pass 1: matching with O(stack) state -------------------------
     val slim = events.select(locCols ++ Seq(col(EventId), col(TimestampNs),
       col(EventType), col(Name)): _*)
-    val nLoc = locCols.length
     val matchSchema = StructType(Seq(
       StructField(EventId, LongType, nullable = false),
       StructField(MatchingEventId, LongType, nullable = false),
       StructField(MatchingTs, LongType, nullable = false)))
-    val matchInfo = slim.repartition(locCols: _*).sortWithinPartitions(sortCols: _*)
-      .mapPartitions { iter =>
-        var curKey: Seq[Any] = null
-        val stack = new ArrayBuffer[(String, Long, Long)]() // (name, id, ts)
-        iter.flatMap { r =>
-          val key = (0 until nLoc).map(r.get)
-          if (key != curKey) { curKey = key; stack.clear() }
+    val matchInfo = GroupPass(slim, locNames, order, matchSchema) { groups =>
+      groups.flatMap { case (_, rows) =>
+        val stack = new ArrayBuffer[(UTF8String, Long, Long)]() // (name, id, ts)
+        rows.flatMap { r =>
           val id = r.getLong(nLoc)
           val ts = r.getLong(nLoc + 1)
-          r.getString(nLoc + 2) match {
-            case Enter =>
-              stack += ((r.getString(nLoc + 3), id, ts)); Nil
-            case Leave =>
-              val nm = r.getString(nLoc + 3)
-              var j = stack.length - 1
-              while (j >= 0 && stack(j)._1 != nm) j -= 1
-              if (j < 0) Nil
-              else {
-                val (_, eid, ets) = stack.remove(j)
-                Seq(Row(eid, id, ts), Row(id, eid, ets))
-              }
-            case _ => Nil
-          }
+          val et = r.getUTF8String(nLoc + 2)
+          if (et == EnterU8) {
+            stack += ((r.getUTF8String(nLoc + 3).clone(), id, ts)); Nil
+          } else if (et == LeaveU8) {
+            val nm = r.getUTF8String(nLoc + 3)
+            var j = stack.length - 1
+            while (j >= 0 && stack(j)._1 != nm) j -= 1
+            if (j < 0) Nil
+            else {
+              val (_, eid, ets) = stack.remove(j)
+              Seq(InternalRow(eid, id, ts), InternalRow(id, eid, ets))
+            }
+          } else Nil
         }
-      }(Encoders.row(matchSchema))
+      }
+    }
 
     val withMatch = events.join(matchInfo, Seq(EventId), "left")
 
@@ -331,44 +270,41 @@ object EventMatcher {
       StructField(ParentPathHash, LongType, nullable = true),
       StructField(TimeInc, LongType, nullable = false),
       StructField(TimeExc, LongType, nullable = false)))
-    final class Frame(val id: Long, val parent: Any, val path: Long,
-                      val parentPath: Any, val depth: Int, val inc: Long) {
+    final class Frame(val id: Long, val up: Frame, val path: Long, val depth: Int,
+                      val inc: Long) {
       var childIncSum: Long = 0L
     }
-    val enrichInfo = slim2.repartition(locCols: _*).sortWithinPartitions(sortCols: _*)
-      .mapPartitions { iter =>
-        var curKey: Seq[Any] = null
+    val enrichInfo = GroupPass(slim2, locNames, order, enrichSchema) { groups =>
+      groups.flatMap { case (_, rows) =>
         val stack = new ArrayBuffer[Frame]()
-        iter.flatMap { r =>
-          val key = (0 until nLoc).map(r.get)
-          if (key != curKey) { curKey = key; stack.clear() }
+        rows.flatMap { r =>
+          val et = r.getUTF8String(nLoc + 2)
           if (r.isNullAt(nLoc + 4)) Nil // unmatched rows pass through
-          else r.getString(nLoc + 2) match {
-            case Enter =>
-              val id = r.getLong(nLoc)
-              val inc = r.getLong(nLoc + 4) - r.getLong(nLoc + 1)
-              val parentHash = if (stack.isEmpty) RootHash else stack.last.path
-              val f = new Frame(id,
-                if (stack.isEmpty) null else Long.box(stack.last.id),
-                mix(parentHash, fnv1a64(r.getString(nLoc + 3))),
-                if (stack.isEmpty) null else Long.box(parentHash),
-                stack.length, inc)
-              if (stack.nonEmpty) stack.last.childIncSum += inc
-              stack += f
-              Nil
-            case Leave => // matched stream is balanced: pop unconditionally
-              if (stack.isEmpty) Nil
-              else {
-                val f = stack.remove(stack.length - 1)
-                Seq(Row(f.id, f.depth, f.parent, f.path, f.parentPath,
-                  f.inc, f.inc - f.childIncSum))
-              }
-            case _ => Nil
-          }
+          else if (et == EnterU8) {
+            val up = if (stack.isEmpty) null else stack.last
+            val inc = r.getLong(nLoc + 4) - r.getLong(nLoc + 1)
+            if (up != null) up.childIncSum += inc
+            stack += new Frame(r.getLong(nLoc), up, mix(if (up == null) RootHash else up.path,
+              fnv1a64(r.getString(nLoc + 3))), stack.length, inc)
+            Nil
+          } else if (et == LeaveU8 && stack.nonEmpty) {
+            // matched stream is balanced: pop unconditionally
+            val f = stack.remove(stack.length - 1)
+            Seq(InternalRow(f.id, f.depth, if (f.up == null) null else f.up.id, f.path,
+              if (f.up == null) null else f.up.path, f.inc, f.inc - f.childIncSum))
+          } else Nil
         }
-      }(Encoders.row(enrichSchema))
+      }
+    }
 
     withMatch.join(enrichInfo, Seq(EventId), "left")
       .select((schema.fieldNames ++ enrichmentColumns.map(_.name)).map(col).toIndexedSeq: _*)
   }
+
+  /** The columns that name an execution location: process[, thread]. */
+  private def locationCols(events: DataFrame): Seq[String] =
+    if (events.columns.contains(Thread)) Seq(Process, Thread) else Seq(Process)
+
+  private val EnterU8 = UTF8String.fromString(Enter)
+  private val LeaveU8 = UTF8String.fromString(Leave)
 }

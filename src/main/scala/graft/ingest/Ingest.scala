@@ -21,7 +21,7 @@ object Ingest {
     * formulation deserialized every row to external objects and
     * converted them all back through a reflective per-field converter —
     * measured at ~100 µs/row on the OTF2 reader's map-typed rows, the
-    * single largest CPU sink of the bench. Now: `toInternalRdd`
+    * single largest CPU sink of the bench. Now: `queryExecution.toRdd`
     * (UnsafeRows straight from the executed sort), zipWithIndex, and an
     * `UnsafeProjection` that appends the ordinal — no external object is
     * ever built.
@@ -44,16 +44,15 @@ object Ingest {
     val schema = StructType(
       sorted.schema.fields :+ StructField(idCol, LongType, nullable = false))
     val rows: org.apache.spark.rdd.RDD[InternalRow] =
-      org.apache.spark.sql.graftbridge.RddBridge.toInternalRdd(sorted)
-        .zipWithIndex().mapPartitions { it =>
-          val joined = new JoinedRow
-          val ord = new GenericInternalRow(1)
-          val proj = UnsafeProjection.create(schema)
-          it.map { case (r, i) =>
-            ord.update(0, i)
-            proj(joined(r, ord)): InternalRow
-          }
+      sorted.queryExecution.toRdd.zipWithIndex().mapPartitions { it =>
+        val joined = new JoinedRow
+        val ord = new GenericInternalRow(1)
+        val proj = UnsafeProjection.create(schema)
+        it.map { case (r, i) =>
+          ord.update(0, i)
+          proj(joined(r, ord)): InternalRow
         }
+      }
     org.apache.spark.sql.graftbridge.RddBridge
       .fromInternalRdd(spark, rows, schema)
   }

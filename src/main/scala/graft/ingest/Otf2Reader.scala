@@ -647,7 +647,7 @@ object Otf2Reader {
       .select(col("loc"), col("seq"), col(EventId))
 
     RddBridge.fromClusteredInternalRdd(spark,
-        zipIds(decoded, RddBridge.toInternalRdd(ids)),
+        zipIds(decoded, ids.queryExecution.toRdd),
         outSchema(meta.metricNames).add(EventId, LongType, nullable = false),
         clusterBy = Seq(Process, Thread),
         orderBy = Seq(Process, Thread, TimestampNs, EventId))

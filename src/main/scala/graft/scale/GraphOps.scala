@@ -64,7 +64,7 @@ object GraphOps {
   private[scale] def collectEdges(e: DataFrame): (Array[Long], Array[Long]) = {
     require(e.schema.fields.take(2).forall(_.dataType == LongType),
       s"collectEdges needs two LongType columns, got ${e.schema.simpleString}")
-    val arrs = org.apache.spark.sql.graftbridge.RddBridge.toInternalRdd(e)
+    val arrs = e.queryExecution.toRdd
       .mapPartitions { it =>
         val buf = new scala.collection.mutable.ArrayBuilder.ofLong
         it.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }

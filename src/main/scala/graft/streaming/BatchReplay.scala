@@ -1,14 +1,11 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.RddBridge
+import org.apache.spark.sql.graftbridge.GroupPass
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The one keyed-state operator behind every stateful streaming twin:
@@ -24,12 +21,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * of which the operator's logic needs. The batch branch of [[keyed]]
   * runs the SAME group function over the SAME per-key row multiset with
   * the same empty-initial-state/no-timeout semantics, but stays in
-  * Tungsten format up to the group function: a columnar hash exchange
-  * on the key columns, a columnar sort within partitions (so each key's
-  * rows are consecutive — the group functions impose their own internal
-  * event order, exactly as they must under `groupByKey`, whose grouped
-  * iterator is unordered), then one InternalRow pass that decodes each
-  * row ONCE and encodes each emitted record ONCE. Both branches decode
+  * Tungsten format up to the group function: one
+  * [[org.apache.spark.sql.graftbridge.GroupPass]] keyed on the key
+  * columns, whose exchange and sort Catalyst plans (and drops where the
+  * input already satisfies them; the group functions impose their own
+  * internal event order, exactly as they must under `groupByKey`, whose
+  * grouped iterator is unordered), decodes each row ONCE and encodes
+  * each emitted record ONCE. Both branches decode
   * and encode through the same `ExpressionEncoder`s, so field order and
   * null handling cannot drift between them: a null in a primitive field
   * throws in both. */
@@ -97,45 +95,19 @@ private[streaming] object BatchReplay {
       key: I => K, inEnc: ExpressionEncoder[I], outEnc: ExpressionEncoder[O],
       fn: (K, Iterator[I], GroupState[S]) => Iterator[O]): DataFrame = {
     val bound = inEnc.resolveAndBind(DataTypeUtils.toAttributes(in.schema))
-    val keyIdx = keyCols.map(c => (in.schema.fieldIndex(c), c))
-    val sorted = in.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions(keyCols.map(col): _*)
-    val rdd = RddBridge.toInternalRdd(sorted).mapPartitions { it =>
+    GroupPass(in, keyCols, Nil, outEnc.schema) { groups =>
       val decode = bound.createDeserializer()
       val encode = outEnc.createSerializer()
-      new Iterator[InternalRow] {
-        private var out: Iterator[InternalRow] = Iterator.empty
-        private var pendingKey: K = _
-        private var pendingVal: I = _
-        private var pending = false
-        private def load(r: InternalRow): Unit = {
-          keyIdx.foreach { case (i, c) =>
-            if (r.isNullAt(i))
-              throw new IllegalArgumentException(s"null key in column '$c'")
-          }
-          pendingVal = decode(r); pendingKey = key(pendingVal); pending = true
+      groups.flatMap { case (k, rows) =>
+        keyCols.indices.foreach { i =>
+          if (k.isNullAt(i))
+            throw new IllegalArgumentException(s"null key in column '${keyCols(i)}'")
         }
-        private def advance(): Unit = {
-          while (!out.hasNext && (pending || it.hasNext)) {
-            if (!pending) load(it.next())
-            val k = pendingKey
-            val buf = new ArrayBuffer[I]
-            buf += pendingVal
-            pending = false
-            var same = true
-            while (same && it.hasNext) {
-              load(it.next())
-              if (pendingKey == k) { buf += pendingVal; pending = false }
-              else same = false
-            }
-            // the serializer reuses one row; the scan copies each row out
-            out = fn(k, buf.iterator, new ReplayState[S]).map(encode)
-          }
-        }
-        override def hasNext: Boolean = { advance(); out.hasNext }
-        override def next(): InternalRow = { advance(); out.next() }
+        val first = decode(rows.next())
+        // the serializer reuses one row; the exec copies each row out
+        fn(key(first), Iterator.single(first) ++ rows.map(decode),
+          new ReplayState[S]).map(encode)
       }
     }
-    RddBridge.fromInternalRdd(in.sparkSession, rdd, outEnc.schema)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge. Spark 4 made the constructors `private[sql]`;
   * extensions conventionally reach them from a subpackage of
-  * org.apache.spark.sql. This is the only file outside the graft package. */
+  * org.apache.spark.sql, as every file of this subpackage does. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -9,31 +9,22 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 
-/** InternalRow ⇄ DataFrame bridge (same subpackage convention as
-  * [[ColumnBridge]]). `Dataset.rdd` deserializes every row to external
-  * objects (`Row`, Scala `Map`s, boxed primitives) and
-  * `createDataFrame(RDD[Row], schema)` converts them all back through a
-  * reflective converter — for row-shape-preserving transforms like
-  * appending a zipWithIndex ordinal, both conversions are pure waste
-  * (measured: the OTF2 reader's dense-id pass spent ~100 µs/row in them
-  * at sf0.1). These hooks keep the pipeline in Tungsten binary format:
-  * `toInternalRdd` exposes the executed plan's UnsafeRows,
-  * `fromInternalRdd` wraps an RDD[InternalRow] back without conversion.
+/** RDD[InternalRow] → DataFrame constructors for the trace readers
+  * (same subpackage convention as [[ColumnBridge]]): `fromInternalRdd`
+  * and `fromClusteredInternalRdd` wrap an RDD of Tungsten rows without
+  * the per-row conversion `createDataFrame(RDD[Row], schema)` pays
+  * (measured: the OTF2 reader's dense-id pass spent ~100 µs/row in it at
+  * sf0.1). The other direction is the public `df.queryExecution.toRdd`,
+  * whose rows the scan reuses per partition: `copy()` (or extract the
+  * values) before buffering them, and ask `hasNext` before each `next()`.
   *
-  * CONTRACT: rows from `toInternalRdd` are reused per-partition by the
-  * scan — `copy()` (or extract the values) before buffering/persisting
-  * them. `fromInternalRdd` accepts ANY InternalRow holding catalyst-typed
+  * CONTRACT: the rows may be ANY InternalRow holding catalyst-typed
   * values matching `schema` (UTF8String for strings, MapData/ArrayData
   * for collections, boxed primitives in GenericInternalRow) — the scan
   * node re-projects every row to UnsafeRow, so UnsafeRow-backed input is
-  * an optimization, not a requirement (Otf2Reader and EventMatcher hand
-  * it JoinedRows). A `toInternalRdd`
-  * iterator must be asked `hasNext` before each `next()`: Spark's
-  * generated iterators advance in `hasNext`. */
+  * an optimization, not a requirement (Otf2Reader hands it JoinedRows).
+  * Per-key passes over a DataFrame's rows go through [[GroupPass]]. */
 object RddBridge {
-  def toInternalRdd(df: DataFrame): RDD[InternalRow] =
-    df.queryExecution.toRdd
-
   def fromInternalRdd(spark: SparkSession, rdd: RDD[InternalRow],
                       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]

@@ -75,6 +75,23 @@ class MatcherBoundedSpec extends SparkSpec {
     }
   }
 
+  test("bounded == buffered when null-thread and thread -1 locations share a partition") {
+    // one process, two locations; each holds one half of an f call, so
+    // neither half may match the other
+    val df = Seq[(Long, Long, String, String, Int, Integer)](
+      (0L, 1L, "Enter", "f", 0, null), (1L, 2L, "Leave", "f", 0, -1),
+      (2L, 3L, "Enter", "g", 0, -1), (3L, 4L, "Leave", "g", 0, -1))
+      .toDF("event_id", "timestamp_ns", "event_type", "name", "process", "thread")
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try {
+      val (a, b) = both(df)
+      assert(a.sameElements(b), s"\n  buffered=${a.mkString(" ")}\n  bounded =${b.mkString(" ")}")
+      val matched = EventMatcher.enrich(df).filter(col("matching_event_id").isNotNull)
+      assert(matched.select("name").as[String].collect().toSeq == Seq("g", "g"))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
   test("bounded path emits no single-location full buffer (spot: unbalanced rows stay unmatched)") {
     GraftConfig.setOption("matcher_mode", "bounded")
     try {

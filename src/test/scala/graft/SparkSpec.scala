@@ -9,6 +9,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def resourcePath(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
+
+  /** Spark jobs started by `body`, counted by a listener on its own job
+    * group. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("measured", "measured")
+      body
+      // the bus delivers in order: once the fence job is seen, so is every
+      // measured one
+      sc.setJobGroup("fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime + 60000000000L
+      while (!groups.contains("fence") && System.nanoTime < deadline) java.lang.Thread.sleep(10)
+      assert(groups.contains("fence"), "listener never saw the fence job")
+      groups.toArray.count(_ == "measured")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {

@@ -268,35 +268,6 @@ class TraceSpec extends SparkSpec {
     assert(got.length == want.size) // one row per calling context
   }
 
-  /** Spark jobs started by `body`, counted by a listener on its own job
-    * group. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("measured", "measured")
-      body
-      // the bus delivers in order: once the fence job is seen, so is every
-      // measured one
-      sc.setJobGroup("fence", "fence")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime + 60000000000L
-      while (!groups.contains("fence") && System.nanoTime < deadline) java.lang.Thread.sleep(10)
-      assert(groups.contains("fence"), "listener never saw the fence job")
-      groups.toArray.count(_ == "measured")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("cct subtree rollup: the job count does not grow with the tree's depth") {
     def chain(depth: Int) = {
       val ev = graft.enrich.Metrics.calcExcMetrics(eventsOf(
