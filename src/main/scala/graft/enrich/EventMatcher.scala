@@ -36,15 +36,16 @@ import graft.model.Schemas._
   * on (process[, thread]) and ordered by (timestamp_ns, event_id): one
   * exchange and sort that Catalyst plans, then one pass per location.
   * The buffered pass runs as its own query when the DataFrame is built;
-  * the bounded passes are part of the caller's plan. Parallelism = number of execution locations; memory = O(events of one
-  * location) per task (the reference buffers the *whole* trace on one
-  * node; we buffer one location per task — at cluster scale partition
-  * counts equal location counts, which for HPC traces is the natural
-  * sharding). An input already clustered on the location columns, or on
-  * a subset of them, at any partition count shuffles nothing, and one
-  * sorted by (location, timestamp_ns, event_id) sorts nothing
+  * the bounded passes are part of the caller's plan. Parallelism =
+  * number of execution locations; memory = O(events of one location)
+  * per task (the reference buffers the *whole* trace on one node; we
+  * buffer one location per task — at cluster scale partition counts
+  * equal location counts, which for HPC traces is the natural
+  * sharding). An input already clustered on the location columns, or
+  * on a subset of them, at any partition count shuffles nothing, and
+  * one sorted by (location, timestamp_ns, event_id) sorts nothing
   * ([[graft.ingest.Otf2Reader]]'s output is both, also once persisted),
-  * in this pass and in [[enrichBounded]]'s two.
+  * in this pass and in [[enrichBounded]]'s first.
   *
   * All other event rows (Instant etc.) pass through with null enrichment,
   * so downstream operators see the full events table plus the new columns

@@ -10,6 +10,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def resourcePath(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
 
+  /** `body` with `matcher_mode=bounded`. */
+  def boundedMatcher[T](body: => T): T = {
+    graft.util.GraftConfig.setOption("matcher_mode", "bounded")
+    try body finally graft.util.GraftConfig.resetOption("matcher_mode")
+  }
+
   /** Spark jobs started by `body`, counted by a listener on its own job
     * group. */
   def jobsOf(body: => Unit): Int = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.RddBridge
+import org.apache.spark.sql.graftbridge.{GroupPassExec, RddBridge}
 
 import graft.SparkSpec
 import graft.enrich.EventMatcher
@@ -136,6 +136,18 @@ class Otf2LayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def sortedRows(df: DataFrame): Seq[Row] =
     df.orderBy(col(EventId)).collect().toSeq
 
+  /** (exchanges, sorts) below each instance of the bounded matcher's
+    * first pass over `ev`, the pass that reads the input as it is. */
+  private def belowMatchPass(ev: DataFrame): Set[(Int, Int)] = {
+    val enriched = boundedMatcher(EventMatcher.enrich(ev))
+    enriched.collect()
+    collect(enriched.queryExecution.executedPlan) {
+      case g: GroupPassExec if g.output.exists(_.name == MatchingTs) =>
+        (collect(g.child) { case e: ShuffleExchangeExec => e }.size,
+          collect(g.child) { case s: SortExec => s }.size)
+    }.toSet
+  }
+
   test("after spark.sql.shuffle.partitions changes the exchange is back, same rows") {
     val ev = Otf2Reader.read(spark, archive)
     val want = sortedRows(EventMatcher.enrich(ev))
@@ -145,6 +157,16 @@ class Otf2LayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(plannedNodes(matcherShape(ev))._1 == 1)
       assert(sortedRows(EventMatcher.enrich(ev)) == want)
       assert(sortedRows(EventMatcher.enrich(Otf2Reader.read(spark, archive))) == want)
+      // the matcher requires clustering by location, not a partition
+      // count: the 4-partition layout needs no exchange or sort at 3, and
+      // an input clustered on the process alone only its own exchange
+      assert(belowMatchPass(ev) == Set((0, 0)))
+      assert(belowMatchPass(ev.repartition(col(Process))) == Set((1, 1)))
+      assert(sortedRows(boundedMatcher(EventMatcher.enrich(ev.repartition(col(Process))))) == want)
+      // the buffered pass runs as its own query when built: a job per
+      // exchange it plans, none over the layout
+      assert(jobsOf(EventMatcher.enrich(ev)) == 0)
+      assert(jobsOf(EventMatcher.enrich(ev.repartition(col(Process)))) == 1)
     } finally spark.conf.set("spark.sql.shuffle.partitions", before.toString)
   }
 

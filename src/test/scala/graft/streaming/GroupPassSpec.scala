@@ -10,7 +10,6 @@ import org.apache.spark.sql.graftbridge.GroupPassExec
 import graft.SparkSpec
 import graft.enrich.EventMatcher
 import graft.model.Schemas._
-import graft.util.GraftConfig
 
 case class GroupPassIn(k: Int, v: Long)
 case class GroupPassState(n: Long)
@@ -35,11 +34,6 @@ class GroupPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def kv = (0 until 40).map(i => (i % 5, i.toLong)).toDF("k", "v")
   private val want = (0 until 5).map(k => (k, (k until 40 by 5).map(_.toLong).sum))
 
-  private def bounded[T](body: => T): T = {
-    GraftConfig.setOption("matcher_mode", "bounded")
-    try body finally GraftConfig.resetOption("matcher_mode")
-  }
-
   private def plannedNodes(df: DataFrame): (Int, Int) = {
     df.collect()
     val plan = df.queryExecution.executedPlan
@@ -50,7 +44,7 @@ class GroupPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("building a batch replay or the bounded matcher over an input that needs an exchange starts no job") {
     val events = fooBar.repartition(3)
     val in = kv.repartition(3)
-    assert(jobsOf { sums(in); bounded(EventMatcher.enrich(events)) } == 0)
+    assert(jobsOf { sums(in); boundedMatcher(EventMatcher.enrich(events)) } == 0)
     assert(sums(in).as[(Int, Long)].collect().sorted.toSeq == want)
   }
 
@@ -63,7 +57,7 @@ class GroupPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("numOutputRows and numGroups: matched Enters and locations of the bounded matcher's second pass") {
     val events = fooBar
-    val enriched = bounded(EventMatcher.enrich(events))
+    val enriched = boundedMatcher(EventMatcher.enrich(events))
     val counted = enriched.groupBy().count()
     val rows = counted.collect().head.getLong(0)
     assert(rows == events.count())
